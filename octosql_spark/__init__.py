@@ -11,16 +11,18 @@ package is a thin, Spark-first layer:
 - ``session``     — tuned SparkSession factory (AQE, Arrow, UTC).
 - ``sources``     — csv/json/lines/parquet/stdin/memory readers with
                     octosql-style sampled schema inference.
-- ``operators``   — DataFrame combinators for every §2 operator
-                    (joins incl. lookup join, group-by w/ the
-                    reference's aggregate catalog, distinct,
-                    order/limit, set ops, unnest).
+- ``operators``   — DataFrame combinators for the §2 operators SQL
+                    text cannot express as-is (key-pair and lookup
+                    joins, group-by w/ the reference's aggregate
+                    catalog, unnest, global NTILE, temporal joins);
+                    plain joins, set ops, DISTINCT and ORDER BY/LIMIT
+                    are SQL text compiled by Catalyst.
 - ``functions``   — the scalar function catalog (§2.7) as Column
                     builders, registered for SQL use.
 - ``tvf``         — table-valued functions: range, tumble,
                     max_diff_watermark, poll (§2.8).
-- ``plans``       — a small logical IR + explain rendering (the real
-                    optimizer is Catalyst).
+- ``plans``       — Graphviz rendering of Catalyst's analyzed plan
+                    (``--explain-dot``); Catalyst is the optimizer.
 - ``sql``         — the OctoSQL dialect front-end: tokenizer +
                     transpiler to Spark SQL (``->``, ``::``,
                     file-path tables, TVF keyword args, TRIGGER).

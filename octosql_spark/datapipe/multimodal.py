@@ -221,7 +221,7 @@ def _png_decode(data: bytes):
     #   uint8 add-accumulate along y per run
     # Average/Paeth recurse on both neighbors; those keep the loop.
     if fset <= {0, 1, 2}:
-        out = np.ascontiguousarray(rows)
+        out = rows.copy()  # writable: frombuffer views are read-only
         if 1 in fset:
             sub = filters == 1
             seg = out[sub].reshape(-1, w, bpp)

@@ -1,20 +1,16 @@
-"""DataFrame combinators for the reference's operator inventory
-(SURVEY.md §2). Each function is a thin, Catalyst-friendly wrapper —
-the goal is to pin down the *reference's semantics* (key extraction
-rules, null handling, naming) while letting Spark pick the physical
-strategy (broadcast vs shuffle, top-K, codegen).
+"""DataFrame combinators for the reference operators that Spark SQL
+text cannot express as-is (SURVEY.md §2). Plain relational operators
+(joins, set ops, DISTINCT, ORDER BY/LIMIT) are written as SQL text and
+compiled by Catalyst. What stays here pins down the *reference's
+semantics* where a bare Spark call would differ (key extraction rules,
+null handling, naming, the size-gated lookup-join broadcast) while
+letting Spark pick the physical strategy.
 """
 
 from octosql_spark.operators.joins import (  # noqa: F401
-    stream_join, theta_join, outer_join, lookup_join, cross_join,
-    semi_join, anti_join,
+    stream_join, lookup_join, anti_join,
 )
 from octosql_spark.operators.aggregate import group_by, AGGREGATES  # noqa: F401
-from octosql_spark.operators.order_limit import order_by_limit  # noqa: F401
-from octosql_spark.operators.distinct import distinct  # noqa: F401
-from octosql_spark.operators.setops import (  # noqa: F401
-    union_all, union_distinct, intersect, except_all,
-)
 from octosql_spark.operators.unnest import unnest, explode_object  # noqa: F401
 from octosql_spark.operators.runtime_filter import (  # noqa: F401
     build_key_bloom, bloom_might_contain, bloom_prefilter_join,

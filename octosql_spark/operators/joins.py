@@ -14,11 +14,10 @@ Scale notes:
   indexed side (README.md:399-404 uses it for per-key database
   lookups). At 100 TB the left side streams through executors and the
   right side ships once — no shuffle of the big side.
-- ``theta_join`` keeps the reference's parser trick (parser/
-  parser.go:388-416: non-equi ON becomes Filter-over-cross-product)
-  *declarative*: we hand Spark the raw condition and Catalyst's
-  ``ExtractEquiJoinKeys`` pulls out equality conjuncts — same rewrite
-  as optimizer/push_filter_into_stream_join_key.go:8-100, done for us.
+- Theta, outer, cross and semi joins are written as SQL text (the
+  registry's ``join_*`` entries): Catalyst's ``ExtractEquiJoinKeys``
+  pulls equality conjuncts out of a non-equi ON — the rewrite of
+  optimizer/push_filter_into_stream_join_key.go:8-100, done for us.
 """
 
 from __future__ import annotations
@@ -64,30 +63,6 @@ def stream_join(left: DataFrame, right: DataFrame,
     return left.join(right, _key_condition(left, right, on), how)
 
 
-def theta_join(left: DataFrame, right: DataFrame, condition: Column,
-               how: str = "inner") -> DataFrame:
-    """Non-equi join, e.g. ``ON l.i > r.i`` (golden scenario
-    tests/scenarios/nodes/inner_join_0.in). Catalyst extracts equality
-    conjuncts into keys and falls back to BNLJ/cartesian for the rest."""
-    return left.join(right, condition, how)
-
-
-def outer_join(left: DataFrame, right: DataFrame,
-               on: Sequence[str] | Sequence[tuple[str, str]],
-               how: str) -> DataFrame:
-    """LEFT/RIGHT/FULL equi join (execution/nodes/outer_join.go:33-459).
-
-    The reference *requires* the ON clause be a conjunction of
-    equalities (logical/join.go:64-142 panics otherwise) — we keep that
-    contract by accepting only key lists here; its null-padding +
-    retraction dance (outer_join.go:352-455) is what Spark's outer join
-    modes already produce for batch and streaming."""
-    if how not in ("left", "right", "full", "left_outer", "right_outer",
-                   "full_outer"):
-        raise ValueError(f"outer_join: bad how={how!r}")
-    return stream_join(left, right, on, how)
-
-
 _BROADCAST_HINT_MAX_BYTES = 256 * 1024 * 1024
 
 
@@ -127,20 +102,8 @@ def lookup_join(left: DataFrame, right: DataFrame,
     return stream_join(left, right, on, how)
 
 
-def cross_join(left: DataFrame, right: DataFrame) -> DataFrame:
-    """Comma-FROM cross product (parser/parser.go:60-71)."""
-    return left.crossJoin(right)
-
-
-def semi_join(left: DataFrame, right: DataFrame,
-              on: Sequence[str] | Sequence[tuple[str, str]] | Column) -> DataFrame:
-    """IN/EXISTS (the reference evaluates IN-subqueries as list
-    expressions — execution/expressions.go:202-255; Spark's left_semi
-    is the scalable form: no right-side materialization on the driver)."""
-    return stream_join(left, right, on, "left_semi")
-
-
 def anti_join(left: DataFrame, right: DataFrame,
               on: Sequence[str] | Sequence[tuple[str, str]] | Column) -> DataFrame:
-    """NOT IN/NOT EXISTS — scalable complement of ``semi_join``."""
+    """NOT IN/NOT EXISTS as a ``left_anti`` join: no right-side
+    materialization on the driver."""
     return stream_join(left, right, on, "left_anti")

@@ -1,14 +1,11 @@
-"""ORDER BY / LIMIT / top-K (SURVEY.md §2.5).
+"""Global ordering at scale (SURVEY.md §2.5).
 
-The reference's OrderSensitiveTransform keeps a retraction-aware btree
-and prunes beyond LIMIT when the input can't retract
-(execution/nodes/order_sensitive_transform.go:31-154, top-K prune
-:111-116); LIMIT alone short-circuits upstream via a sentinel error
-(execution/nodes/limit.go:25-55). Spark's physical planning does the
-same things at cluster scale: ``orderBy().limit(n)`` compiles to
-``TakeOrderedAndProject`` (per-partition top-K heap + single merge —
-no global sort, no full shuffle) and ``limit(n)`` alone to
-CollectLimit (stops consuming input early).
+Plain ORDER BY / LIMIT is SQL text: ``ORDER BY ... LIMIT n`` compiles
+to ``TakeOrderedAndProject`` (per-partition top-K heap + single merge;
+the reference's top-K prune,
+execution/nodes/order_sensitive_transform.go:111-116). What stays here
+is a rank over a global ordering that a window function would funnel
+through one partition.
 """
 
 from __future__ import annotations
@@ -29,25 +26,6 @@ def _exchange_reuse_enabled(spark) -> bool:
                               "true").lower() == "true"
     except Exception:  # noqa: BLE001 — conf surface missing: assume on
         return True
-
-
-def order_by_limit(df: DataFrame,
-                   order: Sequence[tuple[str | Column, str]] = (),
-                   limit: int | None = None) -> DataFrame:
-    """``order`` is (column, "asc"|"desc") pairs — the reference's
-    per-key direction multipliers (order_sensitive_transform.go:31-60).
-    NULLs: Spark default (asc → nulls first) matches the reference's
-    total order where NULL's TypeID sorts first (octosql/values.go:97-106).
-    """
-    if order:
-        cols = []
-        for c, direction in order:
-            col = F.col(c) if isinstance(c, str) else c
-            cols.append(col.desc() if direction.lower().startswith("d") else col.asc())
-        df = df.orderBy(*cols)
-    if limit is not None:
-        df = df.limit(limit)
-    return df
 
 
 def global_ntile(df: DataFrame, n_tiles: int,

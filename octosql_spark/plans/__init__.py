@@ -1,4 +1,2 @@
-from octosql_spark.plans.nodes import (  # noqa: F401
-    Datasource, FileSource, Filter, Map, GroupBy, Join, Distinct,
-    OrderLimit, Unnest, SetOp, With, Node, explain,
-)
+"""Plan rendering. Catalyst is the optimizer and its analyzed plan is
+the plan tree; ``plans.dot`` renders it for ``cli --explain-dot``."""

@@ -552,12 +552,21 @@ def _collect_column_types(spark: SparkSession, toks: list[Tok]) -> dict[str, str
     half of the reference's typecheck-time overload resolution
     (logical/function.go:24-132)."""
     sig = _sig(toks)
+    # CTE names (``name AS (``) shadow any view of that name, and
+    # looking one up only fails, after a py4j round trip and a
+    # JVM-side AnalysisException; a table named twice is looked up once
+    skip = {toks[sig[k]].text.strip('"`').lower() for k in range(len(sig) - 2)
+            if toks[sig[k]].kind in ("IDENT", "QIDENT")
+            and toks[sig[k + 1]].is_kw("AS") and toks[sig[k + 2]].text == "("}
     types: dict[str, str] = {}
     for si in _table_positions(toks):
         t = toks[sig[si]]
         if t.kind not in ("IDENT", "QIDENT"):
             continue
         name = t.text.strip('"`')
+        if name.lower() in skip:
+            continue
+        skip.add(name.lower())
         try:
             dtypes = spark.table(name).dtypes
         except Exception:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -91,14 +92,30 @@ SLOW_TESTS = {
 }
 
 
+def _slow_key(nodeid: str) -> str:
+    """(file basename, id after ``::``) of a node id such as
+    ``tests/test_x.py::test_y[a/b]`` — the same key whether pytest runs
+    from the repo root or tests/, and a ``/`` inside a parameter id
+    stays part of the id."""
+    path, _, test_id = nodeid.partition("::")
+    return f"{os.path.basename(path)}::{test_id}"
+
+
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
-        # nodeid is like "tests/test_x.py::test_y[param]"; the list
-        # stores it relative to this directory so it works whether
-        # pytest is invoked from the repo root or tests/
-        nid = item.nodeid.split("/")[-1]
-        if nid in SLOW_TESTS:
+        key = _slow_key(item.nodeid)
+        files.add(key.partition("::")[0])
+        if key in SLOW_TESTS:
+            matched.add(key)
             item.add_marker(pytest.mark.slow)
+    # an entry naming a collected file but no collected test is stale
+    # (renamed or deleted test): it would silently stop marking anything
+    stale = sorted(k for k in SLOW_TESTS - matched
+                   if k.partition("::")[0] in files)
+    if stale:
+        warnings.warn(pytest.PytestWarning(
+            "SLOW_TESTS entries match no collected test: " + ", ".join(stale)))
 
 
 @pytest.fixture(scope="session")

@@ -7,10 +7,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from octosql_spark.operators import (
-    anti_join, cross_join, distinct, except_all, group_by, intersect,
-    lookup_join, order_by_limit, outer_join, semi_join, stream_join,
-    theta_join, union_all, union_distinct, unnest,
+    anti_join, group_by, lookup_join, stream_join, unnest,
 )
+from octosql_spark.sql import run_query
 
 
 def _left(spark):
@@ -23,6 +22,14 @@ def _right(spark):
         [Row(k2="a", w=10), Row(k2="b", w=20), Row(k2="z", w=30)])
 
 
+def _sql(spark, query, **views):
+    """Relational operators are SQL text: bind ``views`` and run
+    ``query`` through the dialect front-end."""
+    for name, df in views.items():
+        df.createOrReplaceTempView(name)
+    return run_query(spark, query).df
+
+
 def test_stream_join_inner(spark):
     out = stream_join(_left(spark), _right(spark), [("k", "k2")])
     rows = {(r.k, r.v, r.w) for r in out.collect()}
@@ -33,19 +40,24 @@ def test_theta_join(spark):
     # mirrors tests/scenarios/nodes/inner_join_0.in: ON l.i > r.i
     l = spark.range(0, 4).select(F.col("id").alias("i"))
     r = spark.range(0, 4).select(F.col("id").alias("j"))
-    out = theta_join(l, r, F.col("i") > F.col("j"))
+    out = _sql(spark, "SELECT * FROM op_l JOIN op_r ON i > j", op_l=l, op_r=r)
     assert out.count() == 6  # pairs i>j among 0..3
 
 
 def test_outer_joins(spark):
-    left = outer_join(_left(spark), _right(spark), [("k", "k2")], "left")
+    views = {"op_left": _left(spark), "op_right": _right(spark)}
+    left = _sql(spark, "SELECT * FROM op_left LEFT JOIN op_right ON k = k2",
+                **views)
     assert left.filter(F.col("w").isNull()).count() == 1  # k=x null-padded
-    full = outer_join(_left(spark), _right(spark), [("k", "k2")], "full")
+    full = _sql(spark, "SELECT * FROM op_left FULL OUTER JOIN op_right "
+                "ON k = k2", **views)
     assert full.count() == 5  # 3 matches + x + z
 
 
 def test_semi_anti(spark):
-    semi = semi_join(_left(spark), _right(spark), [("k", "k2")])
+    semi = _sql(spark, "SELECT k, v FROM op_left WHERE k IN "
+                "(SELECT k2 FROM op_right)",
+                op_left=_left(spark), op_right=_right(spark))
     assert {r.k for r in semi.collect()} == {"a", "b"}
     anti = anti_join(_left(spark), _right(spark), [("k", "k2")])
     assert {r.k for r in anti.collect()} == {"x"}
@@ -58,7 +70,9 @@ def test_lookup_join_is_broadcast(spark):
 
 
 def test_cross_join(spark):
-    assert cross_join(_left(spark), _right(spark)).count() == 12
+    out = _sql(spark, "SELECT * FROM op_left CROSS JOIN op_right",
+               op_left=_left(spark), op_right=_right(spark))
+    assert out.count() == 12
 
 
 def test_group_by_aggregates(spark):
@@ -91,23 +105,31 @@ def test_count_skips_nulls(spark):
 
 def test_order_by_limit_topk(spark):
     df = spark.range(0, 100).select(F.col("id").alias("i"))
-    out = order_by_limit(df, [("i", "desc")], 3)
+    out = _sql(spark, "SELECT i FROM op_i ORDER BY i DESC LIMIT 3", op_i=df)
     assert [r.i for r in out.collect()] == [99, 98, 97]
+    assert "TakeOrderedAndProject" in \
+        out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_distinct(spark):
     df = spark.createDataFrame([Row(a=1, b=1), Row(a=1, b=1), Row(a=1, b=2)])
-    assert distinct(df).count() == 2
-    assert distinct(df, ["a"]).count() == 1
+    assert _sql(spark, "SELECT DISTINCT a, b FROM op_ab", op_ab=df).count() == 2
+    assert _sql(spark, "SELECT DISTINCT a FROM op_ab", op_ab=df).count() == 1
 
 
 def test_setops(spark):
-    a = spark.createDataFrame([Row(x=1), Row(x=2), Row(x=2)])
-    b = spark.createDataFrame([Row(x=2), Row(x=3)])
-    assert union_all(a, b).count() == 5
-    assert union_distinct(a, b).count() == 3
-    assert {r.x for r in intersect(a, b).collect()} == {2}
-    assert {r.x for r in except_all(a, b, all=False).collect()} == {1}
+    views = {
+        "op_a": spark.createDataFrame([Row(x=1), Row(x=2), Row(x=2)]),
+        "op_b": spark.createDataFrame([Row(x=2), Row(x=3)]),
+    }
+
+    def setop(op):
+        return _sql(spark, f"SELECT x FROM op_a {op} SELECT x FROM op_b",
+                    **views)
+    assert setop("UNION ALL").count() == 5
+    assert setop("UNION").count() == 3
+    assert {r.x for r in setop("INTERSECT").collect()} == {2}
+    assert {r.x for r in setop("EXCEPT").collect()} == {1}
 
 
 def test_unnest(spark):

@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from plan_audit import audit, forced_broadcast_flags  # noqa: E402
+from plan_audit import (  # noqa: E402
+    _single_row_joins_ok, audit, forced_broadcast_flags,
+)
 from octosql_spark.catalog import load_table  # noqa: E402
 
 
@@ -131,3 +133,19 @@ def test_single_row_waiver_flags_one_bounded_side(spark, sf_dir):
     df = li.crossJoin(a)
     assert any("single-row" in f
                for f in audit("x", df, cartesian_ok="single_row"))
+
+
+def test_single_row_check_fails_closed_past_blank_line():
+    # a cross join printed after the tree's first blank line (a
+    # subquery section) is not parsed; the check must not pass it
+    first = (
+        "BroadcastNestedLoopJoin BuildRight, Cross\n"
+        ":- HashAggregate(keys=[], functions=[sum(a#1)])\n"
+        "+- BroadcastExchange IdentityBroadcastMode\n"
+        "   +- HashAggregate(keys=[], functions=[max(b#2)])\n")
+    assert _single_row_joins_ok(first)
+    hidden = (first + "\nSubquery:1 Hosting operator id = 1\n"
+              "CartesianProduct\n"
+              ":- FileScan parquet [o_orderkey#3]\n"
+              "+- FileScan parquet [c_custkey#4]\n")
+    assert not _single_row_joins_ok(hidden)

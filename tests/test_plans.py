@@ -1,14 +1,13 @@
-"""Logical-plan IR tests + the Catalyst-does-the-rewrites checks
-(SURVEY.md §4: the reference's 8 optimizer rules are Catalyst
-builtins — verify on physical plans)."""
+"""Catalyst does the reference's optimizer rewrites (SURVEY.md §4: its
+8 optimizer rules are Catalyst builtins) — checked on the physical
+plans of SQL text run through the dialect front-end."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from octosql_spark import plans as P
 from octosql_spark.catalog import register_views
+from octosql_spark.sql import run_query
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -16,64 +15,15 @@ def views(spark, sf_dir):
     return register_views(spark, sf_dir)
 
 
-def _physical(df) -> str:
+def _physical(query: str, spark) -> str:
+    df = run_query(spark, query).df
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_compile_filter_map(spark):
-    plan = P.Map(
-        P.Filter(P.Datasource("orders"), F.col("o_totalprice") > 100),
-        [F.col("o_orderkey"), F.col("o_totalprice")])
-    df = plan.compile(spark)
-    assert df.columns == ["o_orderkey", "o_totalprice"]
-    assert df.count() > 0
-
-
-def test_compile_join_groupby_orderlimit(spark):
-    plan = P.OrderLimit(
-        P.GroupBy(
-            P.Join(P.Datasource("customer"), P.Datasource("orders"),
-                   [("c_custkey", "o_custkey")]),
-            ["c_mktsegment"],
-            [("count", "*", "n"), ("sum", "o_totalprice", "total")]),
-        order=[("n", "desc")], limit=3)
-    rows = plan.compile(spark).collect()
-    assert len(rows) == 3
-    assert rows[0].n >= rows[1].n >= rows[2].n
-
-
-def test_compile_with_cte_and_setop(spark):
-    cte = P.Map(P.Datasource("customer"), [F.col("c_nationkey").alias("nk")])
-    plan = P.With(
-        [("cust_nk", cte)],
-        P.SetOp("union_distinct",
-                P.Datasource("cust_nk"),
-                P.Map(P.Datasource("supplier"),
-                      [F.col("s_nationkey").alias("nk")])))
-    assert plan.compile(spark).count() == 25
-
-
-def test_compile_having(spark):
-    plan = P.GroupBy(P.Datasource("orders"), ["o_orderstatus"],
-                     [("count", "*", "n")], having=F.col("n") > 10)
-    rows = plan.compile(spark).collect()
-    assert all(r.n > 10 for r in rows)
-
-
-def test_explain_rendering(spark):
-    plan = P.Filter(P.Datasource("orders"), F.col("o_totalprice") > 100)
-    txt = P.explain(plan)
-    assert "Filter" in txt and "Datasource[orders]" in txt
-
-
-# --- Catalyst provides the reference's §4 rewrites (no custom rules) ---
-
 def test_catalyst_pushes_filter_into_scan(spark):
     # rule 1/7 equivalents: predicate pushdown + column pruning
-    plan = P.Map(P.Filter(P.Datasource("lineitem"),
-                          F.col("l_quantity") > 10),
-                 [F.col("l_orderkey")])
-    phys = _physical(plan.compile(spark))
+    phys = _physical("SELECT l_orderkey FROM lineitem WHERE l_quantity > 10",
+                     spark)
     assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,10.0)" \
         in phys
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in phys
@@ -81,18 +31,15 @@ def test_catalyst_pushes_filter_into_scan(spark):
 
 def test_catalyst_extracts_equi_join_keys(spark):
     # rule 4 equivalent: `l.x = r.y AND l.a > r.b` → hash join on x=y
-    li = spark.table("supplier")
-    c = spark.table("customer")
-    df = li.join(c, (li["s_nationkey"] == c["c_nationkey"])
-                 & (li["s_acctbal"] > c["c_acctbal"]))
-    phys = _physical(df)
+    phys = _physical("SELECT * FROM supplier JOIN customer "
+                     "ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal",
+                     spark)
     assert "Join" in phys and "Cartesian" not in phys
 
 
 def test_catalyst_merges_filters(spark):
     # rule 8 equivalent: Filter(Filter(x)) folds into one scan filter
-    plan = P.Filter(P.Filter(P.Datasource("orders"),
-                             F.col("o_totalprice") > 100),
-                    F.col("o_orderstatus") == "F")
-    phys = _physical(plan.compile(spark))
+    phys = _physical("SELECT * FROM (SELECT * FROM orders "
+                     "WHERE o_totalprice > 100) WHERE o_orderstatus = 'F'",
+                     spark)
     assert phys.count("Filter (") <= 1

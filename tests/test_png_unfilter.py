@@ -64,9 +64,10 @@ def _make_png(pixels, filters):
 
 def test_unfilter_every_filter_mix_inverts_reference():
     rng = np.random.RandomState(42)
-    for ch in (1, 3, 4):
-        px = rng.randint(0, 256, size=(13, 9, ch), dtype=np.uint8)
-        h = px.shape[0]
+    # h == 1: a single row is a contiguous view of the read-only
+    # inflated buffer, so the bulk paths must copy before writing
+    for ch, h in ((1, 13), (3, 13), (4, 13), (3, 1), (4, 1)):
+        px = rng.randint(0, 256, size=(h, 9, ch), dtype=np.uint8)
         for filters in (
                 [0] * h,                                  # bulk: plain
                 [1] * h,                                  # bulk: Sub
@@ -77,6 +78,7 @@ def test_unfilter_every_filter_mix_inverts_reference():
                 [(0, 1, 2, 3, 4)[y % 5] for y in range(h)],  # loop path
                 [3] * h,                                  # all Average
                 [4] * h):                                 # all Paeth
+            filters = filters[:h]
             dec = _png_decode(_make_png(px, filters))
             assert dec is not None and dec.shape == px.shape
             assert (dec == px).all(), filters
@@ -108,7 +110,8 @@ def test_encoder_bytes_unchanged():
 
 def test_roundtrip_through_own_encoder():
     rng = np.random.RandomState(3)
-    for ch in (1, 3, 4):
-        arr = rng.randint(0, 256, size=(21, 17, ch), dtype=np.uint8)
+    for ch, h in ((1, 21), (3, 21), (4, 21), (3, 1)):
+        arr = rng.randint(0, 256, size=(h, 17, ch), dtype=np.uint8)
         dec = _png_decode(_png_encode(arr))
         assert (dec == arr).all()
+        assert dec.flags.writeable  # callers resize/normalize in place

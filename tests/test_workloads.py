@@ -41,3 +41,24 @@ def test_approx_sketches_error_bounds(spark, sf_dir):
     assert row.nd_orderkey == exact.nd_o
     assert row.hll_partkey_ok and row.hll_orderkey_ok
     assert row.p50_ok and row.p99_ok
+
+
+def test_sql_entry_rebinds_its_views(spark, sf_dir, tmp_path):
+    """A SQL-built entry binds the tables its text names on every
+    build: a view another caller re-pointed (as the differential fuzz
+    test points ``nation`` at a file it reads itself) must not leak
+    into an entry built for ``sf_dir``."""
+    from octosql_spark.catalog import load_table
+    from octosql_spark.sources import read_file
+    w = REGISTRY["exists_correlated"]
+    expected = sorted(w.build(spark, sf_dir).collect())
+    assert len(expected) > 1
+    csv = tmp_path / "nation.csv"
+    csv.write_text("n_nationkey,n_name,n_regionkey,n_comment\n"
+                   "0,NOWHERE,0,x\n")
+    try:
+        read_file(spark, str(csv)).createOrReplaceTempView("nation")
+        assert spark.table("nation").count() == 1
+        assert sorted(w.build(spark, sf_dir).collect()) == expected
+    finally:
+        load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")

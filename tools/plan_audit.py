@@ -112,7 +112,10 @@ def _single_row_joins_ok(plan: str) -> bool:
     narrowed exemption for sketch-combination plans (ADVICE r11): a
     real data-sized cartesian sneaking into such an entry now flags
     instead of riding the blanket ``cartesian_ok`` waiver.
-    (``Filter`` counts as a wrapper: ≤1 row stays ≤1 row.)"""
+    (``Filter`` counts as a wrapper: ≤1 row stays ≤1 row.)
+    Fails closed: the tree is parsed up to its first blank line, and a
+    cross join printed past it (a subquery section) makes the answer
+    False."""
     nodes = []
     for line in plan.splitlines():
         if not line.strip():
@@ -139,9 +142,11 @@ def _single_row_joins_ok(plan: str) -> bool:
                 return single_row(j)
         return False
 
-    return all(single_row(i)
-               for i, (_, name, _t) in enumerate(nodes)
-               if name in ("BroadcastNestedLoopJoin", "CartesianProduct"))
+    crosses = [i for i, (_, name, _t) in enumerate(nodes)
+               if name in ("BroadcastNestedLoopJoin", "CartesianProduct")]
+    in_text = len(re.findall(r"\b(?:BroadcastNestedLoopJoin|CartesianProduct)\b",
+                             plan))
+    return in_text == len(crosses) and all(single_row(i) for i in crosses)
 
 
 def audit(name: str, df, cartesian_ok=False,
