@@ -426,350 +426,63 @@ def _diagnose_parse_error(spark, res, ex, query: str = "") -> str | None:
     return None
 
 
-def _swap_tvf_call(query: str, name: str, view: str) -> str | None:
-    """Replace ``FROM name( … )`` in the raw query text with the
-    transpiler's materialized view name, so the exact-counting shape
-    match sees a plain relation. Paren matching is quote-aware (the
-    call body may contain ``TABLE(SELECT … FROM 'p.json?tail=true')``
-    with parens inside string literals). None when the call isn't
-    found or is unbalanced."""
-    import re
+def _try_exact_counting(res, spec):
+    """The EXACT per-key counting-trigger operator (execution/
+    triggers.go:17-87 semantics; streaming/counting_trigger.py) for a
+    streaming group-by whose transpiled text is ``SELECT keys, aggs
+    FROM source [WHERE cond] GROUP BY keys``: one ``spark.sql``
+    projects each key as ``_k<i>`` and each aggregate argument as
+    ``_a<j>`` over the query's own FROM and WHERE, so the trigger
+    counts records as they enter the group-by — post-join,
+    post-WHERE — and the operator keys on the projected columns.
+    Returns None for any other shape: an aggregate other than
+    count/sum/min/max/avg or with DISTINCT, a key missing from the
+    SELECT list (the operator always emits its keys), any other
+    item, or a source Spark cannot build. The record event-time
+    column stays in the projection, so watermark-late rows drop AT
+    the operator, where the reference's group-by drops them. Which
+    join shapes can stream behind the operator is Spark's decision,
+    made when the query starts (``_run_streaming``)."""
+    from pyspark.errors import AnalysisException
 
-    m = re.search(rf"(?is)\bFROM\s+({name})\s*\(", query)
-    if not m:
-        return None
-    start = m.start(1)
-    j, depth, quote = m.end() - 1, 0, None
-    while j < len(query):
-        ch = query[j]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return query[:start] + view + query[j + 1:]
-        j += 1
-    return None
-
-
-def _strip_alias_qualifier(text: str, alias: str) -> str:
-    """Remove ``alias.`` qualifiers from SQL expression text without
-    touching string literals: walks the text, copying single-quoted
-    strings ('' escapes), double-quoted and backtick identifiers
-    verbatim, and rewriting ``alias.`` only at identifier boundaries
-    outside them. A plain ``\\b<alias>\\.`` regex rewrote inside
-    literals (alias ``s``, WHERE name = 's.x' → 'x')."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    al_low = alias.lower()
-    while i < n:
-        ch = text[i]
-        if ch in "'\"`":
-            j = i + 1
-            while j < n:
-                if text[j] == ch:
-                    if ch == "'" and j + 1 < n and text[j + 1] == "'":
-                        j += 2  # '' escape inside a string literal
-                        continue
-                    j += 1
-                    break
-                j += 1
-            out.append(text[i:j])
-            i = j
-            continue
-        if (text[i:i + len(alias)].lower() == al_low
-                and i + len(alias) < n and text[i + len(alias)] == "."
-                and (i == 0 or not (text[i - 1].isalnum()
-                                    or text[i - 1] in "_$."))):
-            i += len(alias) + 1  # drop the qualifier
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _build_counting_join_source(spark, jm, v1, v2):
-    """Join source for the exact counting route, ON a conjunction of
-    column equalities (the same equi constraint the reference's
-    physical stream join imposes, physical/stream_join.go):
-
-    - stream-STATIC: INNER, or LEFT with the stream on the left
-      (Structured Streaming's supported stream-static shapes);
-    - stream-STREAM (r8, closing DEVIATIONS 6's residual): INNER
-      only. Spark 4's multi-stateful support runs
-      ``applyInPandasWithState`` straight behind a stream-stream
-      join PROVIDED no event-time column reaches it (two watermarked
-      sides fail with "More than one event time columns are
-      available"; the counting operator never uses event time, and
-      the CLI's plain file streams carry no watermark, so nothing is
-      dropped here). Outer stream-stream joins require watermarks +
-      time bounds by Structured Streaming's rules, so they keep the
-      per-micro-batch fallback.
-
-    Returns a flattened streaming frame whose columns are BARE names
-    (both sides' columns; the non-stream side's duplicate of an inner
-    equi-key is dropped — it equals the stream side's), or None when
-    the shape can't be built — the caller then falls back to the
-    generic per-micro-batch mapping."""
-    import re
-
-    a1, a2 = jm.group("a1"), jm.group("a2")
-    try:
-        d1, d2 = spark.table(v1), spark.table(v2)
-    except Exception:
-        return None
-    if not (d1.isStreaming or d2.isStreaming):
-        return None  # batch-batch: not a streaming trigger shape
-    both_streaming = d1.isStreaming and d2.isStreaming
-    jt = (jm.group("jt") or "").upper()
-    if jt == "LEFT" and (both_streaming or not d1.isStreaming):
-        return None  # outer needs watermark bounds / static-left shape
-    how = "left_outer" if jt == "LEFT" else "inner"
-
-    def _resolve(ref):
-        ref = ref.strip().strip('`"')
-        if "." in ref:
-            qual, col = ref.split(".", 1)
-            col = col.strip('`"')
-            for al, d in ((a1, d1), (a2, d2)):
-                if al and qual == al and col in d.columns:
-                    return d, col
-            return None
-        hits = [(d, ref) for d in (d1, d2) if ref in d.columns]
-        return hits[0] if len(hits) == 1 else None
-
-    conds, key_pairs = [], set()
-    for eq in re.split(r"(?i)\s+AND\s+", jm.group("on").strip()):
-        em = re.match(r"^\s*([\w.`\"]+)\s*=\s*([\w.`\"]+)\s*$", eq)
-        if not em:
-            return None
-        left, right = _resolve(em.group(1)), _resolve(em.group(2))
-        if not left or not right or left[0] is right[0]:
-            return None
-        conds.append(left[0][left[1]] == right[0][right[1]])
-        key_pairs.add((left[1], right[1]))
-        key_pairs.add((right[1], left[1]))
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond & c
-
-    stream, other = (d1, d2) if d1.isStreaming else (d2, d1)
-    out_cols, seen = [], set()
-    for c in stream.columns:
-        out_cols.append(stream[c].alias(c))
-        seen.add(c)
-    for c in other.columns:
-        if c in seen:
-            # the inner equi-join's duplicate key equals the stream
-            # side's copy — drop it; any OTHER collision is ambiguous
-            if how == "inner" and (c, c) in key_pairs:
-                continue
-            return None
-        out_cols.append(other[c].alias(c))
-    return stream.join(other, cond, how).select(*out_cols)
-
-
-def _try_exact_counting(args, res, spec):
-    """Route any streaming SQL group-by matching the simple shape —
-    ``SELECT keys, aggs FROM src [alias] [WHERE cond] GROUP BY keys
-    TRIGGER COUNTING n`` — to the EXACT per-key counting-trigger
-    operator (execution/triggers.go:17-87 semantics; streaming/
-    counting_trigger.py) instead of the per-micro-batch update-mode
-    approximation. The WHERE filter applies BEFORE counting, matching
-    the reference where the trigger counts records as they enter the
-    group-by. Returns None when the query shape doesn't match — the
-    caller falls back to the generic mapping (DEVIATIONS 6 then only
-    covers shapes the exact operator can't express: stream-STREAM
-    joins and non-projection TVFs under a counting trigger —
-    stream-STATIC equi-joins route exactly via
-    _build_counting_join_source, r7). DETERMINISTIC
-    EXPRESSION keys (``GROUP BY v % 2``, ``GROUP BY date_trunc(
-    'hour', ts)``) are precomputed into columns through the dialect
-    rewrites before the stateful operator, so they fire exactly per
-    record too. ``FROM tumble(...)`` also routes exactly: tumble is a
-    pure per-record projection (adds window_start/window_end), so the
-    transpiler's materialized TVF view substitutes for the call text
-    and its window columns group like any other columns. ``FROM
-    max_diff_watermark(...)`` routes exactly too (r8): the streaming
-    TVF is a projection + ``withWatermark`` — not a stateful op — and
-    Spark 4 accepts a single event-time column under
-    ``applyInPandasWithState``; watermark-late rows drop AT the
-    stateful operator, the same point the reference's group-by drops
-    them."""
-    import re
-
+    from octosql_spark.sql.transpiler import group_by_shape
     from octosql_spark.streaming.counting_trigger import (
         counting_trigger_aggregate)
 
-    query = args.query
-    tvf_views = [(v, d) for v, d in res.views.items()
-                 if d in ("tumble", "max_diff_watermark")]
-    jm = None
-    if tvf_views:
-        if len(tvf_views) != 1:
-            return None
-        view, kind = tvf_views[0]
-        query = _swap_tvf_call(query, kind, view)
-        if query is None:
-            return None
-        src_view = view
-    elif len(res.views) == 1:
-        src_view = next(iter(res.views))
-    elif len(res.views) == 2:
-        # stream-static join under a counting trigger: the trigger
-        # counts records ENTERING the group-by (triggers.go:17-87),
-        # i.e. post-join post-WHERE — a stream-static join is not a
-        # stateful op, so the exact operator can sit right behind it
-        src_view = None
-        # RIGHT/FULL/CROSS must NOT parse as an alias (they'd silently
-        # demote an outer join to inner) — they fail the match and the
-        # query falls back to the generic per-micro-batch mapping
-        jm = re.match(
-            r"(?is)^\s*SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<v1>\S+)"
-            r"(?:\s+(?:AS\s+)?(?!JOIN\b|INNER\b|LEFT\b|RIGHT\b|FULL\b"
-            r"|CROSS\b|OUTER\b)(?P<a1>\w+))?"
-            r"\s+(?:(?P<jt>LEFT)\s+(?:OUTER\s+)?|INNER\s+)?JOIN\s+"
-            r"(?P<v2>\S+)"
-            r"(?:\s+(?:AS\s+)?(?!ON\b)(?P<a2>\w+))?"
-            r"\s+ON\s+(?P<on>.*?)\s+"
-            r"(?:WHERE\s+(?P<where>.*?)\s+)?"
-            r"GROUP\s+BY\s+(?P<keys>.*?)\s+TRIGGER\b.*$", query)
-        if not jm:
-            return None
-    else:
+    shape = group_by_shape(res.spark_sql)
+    if shape is None:
         return None
-
-    m = jm or re.match(
-        r"(?is)^\s*SELECT\s+(?P<items>.*?)\s+FROM\s+\S+"
-        r"(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b)\w+)?\s+"      # optional alias
-        r"(?:WHERE\s+(?P<where>.*?)\s+)?"
-        r"GROUP\s+BY\s+(?P<keys>.*?)\s+TRIGGER\b.*$", query)
-    if not m:
+    keys, cols, aggs = {}, [], []
+    for it in shape.items:
+        if it.key is not None and it.key not in keys:
+            keys[it.key] = it
+        elif it.agg and it.agg[0] in ("count", "sum", "min", "max", "avg"):
+            fn, arg = it.agg
+            if arg != "*":
+                cols.append(f"{arg} AS _a{len(aggs)}")
+                arg = f"_a{len(aggs)}"
+            aggs.append((fn, arg, it.name))
+        else:
+            return None
+    if len(keys) != len(shape.keys) or not aggs:
         return None
-    n = int(re.search(r"(?i)COUNTING\s+(\d+)", spec).group(1))
-
-    def _bare(c: str) -> str:
-        # strip quoting and an alias qualifier (t.k -> k)
-        return c.strip().strip('`"').split(".")[-1]
-
-    def _norm(t: str) -> str:
-        return re.sub(r"\s+", " ", t.strip().lower())
-
-    spark = res.df.sparkSession
-    if jm is not None:
-        def _tok_view(tok: str):
-            t = tok.strip()
-            if len(t) >= 2 and t[0] in "'\"" and t[-1] == t[0]:
-                t = t[1:-1]
-            return next((v for v, d in res.views.items() if d == t), None)
-
-        v1, v2 = _tok_view(jm.group("v1")), _tok_view(jm.group("v2"))
-        if not v1 or not v2 or v1 == v2:
-            return None
-        src = _build_counting_join_source(spark, jm, v1, v2)
-        if src is None:
-            return None
-    else:
-        src = spark.table(src_view)
+    cols = [f"{keys[i].expr} AS _k{i}" for i in range(len(keys))] + cols
+    if res.event_time and res.event_time not in shape.keys:
+        cols.append(f"`{res.event_time.strip('`')}`")
+    sql = f"SELECT {', '.join(cols)} FROM {shape.source}"
+    if shape.where:
+        sql += f" WHERE {shape.where}"
+    try:
+        src = res.df.sparkSession.sql(sql)
         if not src.isStreaming:
             return None
-
-    _split = r",(?![^()]*\))"  # top-level commas only
-    # SELECT items as (normalized-expr, alias, full-text)
-    sel = []
-    for it in (i.strip() for i in re.split(_split, m.group("items"))):
-        sm = re.match(r"(?is)^(.*?)\s+AS\s+([\w`\"]+)\s*$", it)
-        sel.append((_norm(sm.group(1)) if sm else _norm(it),
-                    sm.group(2).strip('`"') if sm else None, it))
-
-    # the per-key state machine needs keys stable across re-evaluation
-    nondet = re.compile(r"(?i)\b(rand|randn|random|uuid|shuffle|now|"
-                        r"current_timestamp|current_date)\s*\(")
-    # every key must appear in the SELECT list: the exact operator
-    # always emits its keys, so an unselected key would change the
-    # output projection — fall back to the generic mapping there
-    sel_norms = {nrm for nrm, _a, _i in sel}
-    keys, derived, key_norms = [], [], set()
-    for kt in (k.strip() for k in re.split(_split, m.group("keys"))):
-        bare = _bare(kt)
-        if re.fullmatch(r"[\w.`\"]+", kt) and bare in src.columns:
-            if _norm(bare) not in sel_norms and _norm(kt) not in sel_norms:
-                return None
-            keys.append(bare)
-            key_norms.update((_norm(kt), _norm(bare)))
-            continue
-        if nondet.search(kt):
-            return None
-        # expression key: computed under a SAFE internal name (raw
-        # expression text as a column name would re-parse inside
-        # groupBy), renamed to its SELECT alias — or the expression
-        # text, like the reference names unaliased outputs — at the end
-        out_name = next((alias or it for nrm, alias, it in sel
-                         if nrm == _norm(kt)), None)
-        if out_name is None:
-            return None
-        safe = f"_gk{len(derived)}"
-        keys.append(safe)
-        derived.append((safe, out_name, kt))
-        key_norms.add(_norm(kt))
-
-    aggs = []
-    for nrm, _alias, item in sel:
-        if _bare(item) in keys or nrm in key_norms:
-            continue
-        am = re.match(r"(?i)^(count|sum|min|max|avg)\s*\(\s*(\*|[\w.`\"]+)"
-                      r"\s*\)\s+AS\s+([\w`\"]+)$", item)
-        if not am:
-            return None
-        col = am.group(2)
-        aggs.append((am.group(1).lower(),
-                     col if col == "*" else _bare(col),
-                     am.group(3).strip('`"')))
-    if not aggs:
-        return None
-    try:
-        if m.group("where"):
-            # run the WHERE through the dialect rewrites — raw text
-            # would get Spark semantics ('v / 2 = 1' as float
-            # division) and silently count different rows than the
-            # reference (advisor-found r4)
-            from octosql_spark.sql.transpiler import (
-                rewrite_scalar_expression)
-            where_text = m.group("where")
-            if jm is not None:
-                # the joined frame is flattened to bare names — strip
-                # the two join aliases' qualifiers. Token-aware: a
-                # plain \b regex would also rewrite inside string
-                # literals (alias `s`, WHERE name = 's.x' → 'x' —
-                # advisor-found r7), silently filtering different
-                # rows than the reference.
-                for al in (jm.group("a1"), jm.group("a2")):
-                    if al:
-                        where_text = _strip_alias_qualifier(
-                            where_text, al)
-            src = src.filter(rewrite_scalar_expression(
-                where_text, src))
-        if derived:
-            from pyspark.sql import functions as F
-
-            from octosql_spark.sql.transpiler import (
-                rewrite_scalar_expression)
-            for safe, _out, expr_text in derived:
-                # rewrite_scalar_expression returns dialect-rewritten
-                # SQL text (filter accepts it; withColumn needs a col)
-                src = src.withColumn(
-                    safe, F.expr(rewrite_scalar_expression(expr_text,
-                                                           src)))
-        out = counting_trigger_aggregate(src, keys, aggs, n)
-        for safe, out_name, _expr in derived:
-            out = out.withColumnRenamed(safe, out_name)
-    except Exception:
-        return None
+        out = counting_trigger_aggregate(
+            src, [f"_k{i}" for i in range(len(keys))], aggs,
+            int(spec.split()[1]))
+    except (AnalysisException, ValueError):
+        return None  # ValueError: an aggregate the operator cannot hold
+    out = out.withColumnsRenamed({f"_k{i}": keys[i].name
+                                  for i in range(len(keys))})
     # emitted_at_count stays in the output: it is the emission marker
     # (the positive half of the reference's retract/emit pairs)
     return out
@@ -851,22 +564,29 @@ def _run_streaming(args, res, df, stagers=None) -> int:
     if args.duration is None and not trig:
         trig = {"availableNow": True}  # finite run: drain and exit
 
-    def _start(output_mode, writer):
-        w = df.writeStream.outputMode(output_mode).foreachBatch(writer)
+    def _start(frame, output_mode, writer):
+        w = frame.writeStream.outputMode(output_mode).foreachBatch(writer)
         if trig:
             w = w.trigger(**trig)
         return w.start()
 
-    if spec and spec.upper().startswith("COUNTING"):
-        exact = _try_exact_counting(args, res, spec)
-        if exact is not None:
-            df, mode = exact, "append"
+    from pyspark.errors import AnalysisException
 
+    counting = spec is not None and spec.upper().startswith("COUNTING")
+    exact = _try_exact_counting(res, spec) if counting else None
     try:
         q = None
-        if args.output in ("live_table", "stream_native") \
-                and (spec is None or spec.upper().startswith("COUNTING")) \
-                and "emitted_at_count" not in df.columns:
+        if exact is not None:
+            try:
+                q = _start(exact, "append",
+                           sinks.stream_batch_writer(args.output))
+            except AnalysisException:
+                # Spark will not stream this shape behind the stateful
+                # operator (e.g. a stream-stream outer join without
+                # watermarks): take the generic mapping below
+                q = None
+        if q is None and args.output in ("live_table", "stream_native") \
+                and (spec is None or counting):
             # aggregating queries: complete mode gives the full result
             # per frame — the live table repaints it
             # (live_output.go:165-204) and stream_native diffs frames
@@ -877,11 +597,11 @@ def _run_streaming(args, res, df, stagers=None) -> int:
                       if args.output == "stream_native"
                       else sinks.stream_batch_writer(args.output))
             try:
-                q = _start("complete", writer)
+                q = _start(df, "complete", writer)
             except Exception:
                 q = None
         if q is None:
-            q = _start(mode, sinks.stream_batch_writer(args.output))
+            q = _start(df, mode, sinks.stream_batch_writer(args.output))
     except Exception as ex:
         print(f"error: {_one_line_error(ex)}", file=sys.stderr)
         return 1

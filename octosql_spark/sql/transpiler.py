@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import itertools
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -197,25 +198,6 @@ _STRICT_TYPEOF = {
     "BOOLEAN": ("boolean",),
     "TIMESTAMP": ("timestamp", "timestamp_ntz"),
 }
-
-
-def _collect_variant_cols(spark: SparkSession, toks: list[Tok]) -> set[str]:
-    """Lowercased column names with Spark 4 VARIANT type across the
-    referenced tables/views (union carriers from JSON sources) — the
-    only expressions strict `::` needs the schema_of_variant guard
-    for (the guard is analysis-time illegal on non-variant input)."""
-    sig = _sig(toks)
-    out: set[str] = set()
-    for si in _table_positions(toks):
-        t = toks[sig[si]]
-        if t.kind not in ("IDENT", "QIDENT"):
-            continue
-        try:
-            dtypes = spark.table(t.text.strip('"`')).dtypes
-        except Exception:
-            continue
-        out |= {c.lower() for c, d in dtypes if d == "variant"}
-    return out
 
 
 def _rewrite_type_assert(toks: list[Tok], strict: bool = False,
@@ -544,34 +526,64 @@ def _type_cat(dtype: str) -> str:
     return d
 
 
-def _collect_column_types(spark: SparkSession, toks: list[Tok]) -> dict[str, str]:
-    """Unqualified column name → type category, from every table/view
-    referenced in the (already view-rewritten) query. Names that
-    resolve to conflicting categories across tables are dropped
-    (ambiguous — leave the operator untouched). This is the runtime
-    half of the reference's typecheck-time overload resolution
-    (logical/function.go:24-132)."""
+class _Relation(NamedTuple):
+    name: str | None  # None: a parenthesized subquery or join
+    alias: str | None
+    depth: int  # paren nesting depth; 0 = the top-level FROM/JOIN list
+    dtypes: list[tuple[str, str]] | None  # None: a CTE or unknown table
+
+
+def _relations(spark: SparkSession, toks: list[Tok]) -> list[_Relation]:
+    """Every FROM/JOIN relation of the (already view-rewritten) query.
+    A table named twice is looked up once — each lookup is a py4j
+    round trip plus analysis. CTE names (``name AS (``) shadow any
+    view of that name, and looking one up only fails, after a
+    JVM-side AnalysisException, so they are not looked up."""
     sig = _sig(toks)
-    # CTE names (``name AS (``) shadow any view of that name, and
-    # looking one up only fails, after a py4j round trip and a
-    # JVM-side AnalysisException; a table named twice is looked up once
-    skip = {toks[sig[k]].text.strip('"`').lower() for k in range(len(sig) - 2)
+    ctes = {toks[sig[k]].text.strip('"`').lower() for k in range(len(sig) - 2)
             if toks[sig[k]].kind in ("IDENT", "QIDENT")
             and toks[sig[k + 1]].is_kw("AS") and toks[sig[k + 2]].text == "("}
-    types: dict[str, str] = {}
+    depth_at, depth = [], 0
+    for i in sig:
+        depth_at.append(depth)
+        depth += {"(": 1, ")": -1}.get(toks[i].text, 0)
+    looked_up: dict[str, list[tuple[str, str]] | None] = {}
+    out = []
     for si in _table_positions(toks):
         t = toks[sig[si]]
         if t.kind not in ("IDENT", "QIDENT"):
+            out.append(_Relation(None, None, depth_at[si], None))
             continue
         name = t.text.strip('"`')
-        if name.lower() in skip:
-            continue
-        skip.add(name.lower())
-        try:
-            dtypes = spark.table(name).dtypes
-        except Exception:
-            continue
-        for col, dtype in dtypes:
+        key = name.lower()
+        if key not in looked_up:
+            looked_up[key] = None
+            if key not in ctes:
+                try:
+                    looked_up[key] = spark.table(name).dtypes
+                except Exception:
+                    pass
+        alias = None
+        sj = si + 1
+        if sj < len(sig) and toks[sig[sj]].is_kw("AS"):
+            sj += 1
+        if sj < len(sig) and toks[sig[sj]].kind in ("IDENT", "QIDENT") \
+                and not toks[sig[sj]].is_kw(*_CLAUSE_KW) \
+                and not toks[sig[sj]].is_kw("AS"):
+            alias = toks[sig[sj]].text.strip('"`')
+        out.append(_Relation(name, alias, depth_at[si], looked_up[key]))
+    return out
+
+
+def _collect_column_types(relations: list[_Relation]) -> dict[str, str]:
+    """Unqualified column name → type category, from every table/view
+    the query references. Names that resolve to conflicting
+    categories across tables are dropped (ambiguous — leave the
+    operator untouched). This is the runtime half of the reference's
+    typecheck-time overload resolution (logical/function.go:24-132)."""
+    types: dict[str, str] = {}
+    for rel in relations:
+        for col, dtype in rel.dtypes or ():
             cat = _type_cat(dtype)
             key = col.lower()
             if key in types and types[key] != cat:
@@ -1428,27 +1440,6 @@ def _split_top_commas(toks: list[Tok], start: int, end: int) -> list[tuple[int, 
     return trimmed
 
 
-def _tables_with_aliases(toks: list[Tok]) -> list[tuple[str, str | None]]:
-    """(table_name, alias) for every FROM/JOIN table reference."""
-    sig = _sig(toks)
-    out = []
-    for si in _table_positions(toks):
-        t = toks[sig[si]]
-        if t.kind not in ("IDENT", "QIDENT"):
-            continue
-        name = t.text.strip('"`')
-        alias = None
-        sj = si + 1
-        if sj < len(sig) and toks[sig[sj]].is_kw("AS"):
-            sj += 1
-        if sj < len(sig) and toks[sig[sj]].kind in ("IDENT", "QIDENT") \
-                and not toks[sig[sj]].is_kw(*_CLAUSE_KW) \
-                and not toks[sig[sj]].is_kw("AS"):
-            alias = toks[sig[sj]].text.strip('"`')
-        out.append((name, alias))
-    return out
-
-
 def _name_tok(name: str) -> Tok:
     import re as _re
     if _re.fullmatch(r"\w+", name):
@@ -1456,11 +1447,13 @@ def _name_tok(name: str) -> Tok:
     return Tok("QIDENT", f"`{name}`")
 
 
-def _expand_star(spark: SparkSession, toks: list[Tok]) -> list[Tok]:
+def _expand_star(toks: list[Tok], relations: list[_Relation]) -> list[Tok]:
     """Top-level ``SELECT *`` over 2+ tables expands to qualified
     columns so colliding names render alias-qualified, like the
     reference's requalified output (tests/scenarios/nodes/
-    inner_join_0.out headers ``l.i | r.i``)."""
+    inner_join_0.out headers ``l.i | r.i``). Only the top-level
+    FROM/JOIN list expands — a table named inside a subquery is not
+    in the star's scope."""
     span = _top_select_span(toks)
     if span is None:
         return toks
@@ -1473,17 +1466,11 @@ def _expand_star(spark: SparkSession, toks: list[Tok]) -> list[Tok]:
     s, e = items[0]
     if not (s == e and toks[s].text == "*"):
         return toks
-    tables = _tables_with_aliases(toks)
-    if len(tables) < 2:
+    tables = [rel for rel in relations if rel.depth == 0]
+    if len(tables) < 2 or any(rel.dtypes is None for rel in tables):
         return toks
-    cols: list[tuple[str, str]] = []  # (qualifier, column)
-    for name, alias in tables:
-        try:
-            table_cols = spark.table(name).columns
-        except Exception:
-            return toks
-        ref = alias or name
-        cols.extend((ref, c) for c in table_cols)
+    cols = [(rel.alias or rel.name, c)  # (qualifier, column)
+            for rel in tables for c, _ in rel.dtypes]
     counts: dict[str, int] = {}
     for _, c in cols:
         counts[c] = counts.get(c, 0) + 1
@@ -1547,6 +1534,44 @@ def _classify_item(toks: list[Tok], s: int, e: int):
     return ("expr", None)
 
 
+def _compact(toks: list[Tok], s: int, e: int) -> str:
+    """Token span [s, e] without whitespace and comments: the form in
+    which a SELECT item and a GROUP BY key are compared."""
+    return "".join(t.text for t in toks[s:e + 1]
+                   if t.kind not in ("WS", "COMMENT"))
+
+
+def _group_by_keys(toks: list[Tok], sig: list[int]):
+    """(significant index of GROUP, key token spans) of the depth-0
+    ``GROUP BY``, or None without one. The key list ends at a depth-0
+    HAVING/ORDER/LIMIT/WINDOW/TRIGGER, an unmatched ``)`` or the end
+    of the text."""
+    depth = 0
+    for gb_si in range(len(sig) - 2):
+        t = toks[sig[gb_si]]
+        depth += {"(": 1, ")": -1}.get(t.text, 0)
+        if depth == 0 and t.is_kw("GROUP") and toks[sig[gb_si + 1]].is_kw("BY"):
+            break
+    else:
+        return None
+    gend = len(toks) - 1
+    depth = 0
+    for sj in range(gb_si + 2, len(sig)):
+        t = toks[sig[sj]]
+        if t.text == "(":
+            depth += 1
+        elif t.text == ")":
+            if depth == 0:
+                gend = sig[sj] - 1
+                break
+            depth -= 1
+        elif depth == 0 and t.is_kw("HAVING", "ORDER", "LIMIT",
+                                    "WINDOW", "TRIGGER"):
+            gend = sig[sj] - 1
+            break
+    return gb_si, _split_top_commas(toks, sig[gb_si + 2], gend)
+
+
 def _alias_select_items(toks: list[Tok]) -> list[Tok]:
     """Reference output naming for unaliased select items
     (logical/map.go:100-117, parser/parser.go:140-185): plain
@@ -1562,39 +1587,8 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
     items = _split_top_commas(toks, sig[sel_si] + 1, end_tok)
     infos = [_classify_item(toks, s, e) for s, e in items]
     is_group_by = any(kind == "agg" for kind, _ in infos)
-    group_keys: list[str] = []
-    if is_group_by:
-        depth = 0
-        gb_si = None
-        for sj in range(len(sig)):
-            t = toks[sig[sj]]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.is_kw("GROUP") and sj + 1 < len(sig) \
-                    and toks[sig[sj + 1]].is_kw("BY"):
-                gb_si = sj
-                break
-        if gb_si is not None:
-            gend = len(toks) - 1
-            depth = 0
-            for sj in range(gb_si + 2, len(sig)):
-                t = toks[sig[sj]]
-                if t.text == "(":
-                    depth += 1
-                elif t.text == ")":
-                    if depth == 0:
-                        gend = sig[sj] - 1
-                        break
-                    depth -= 1
-                elif depth == 0 and t.is_kw("HAVING", "ORDER", "LIMIT",
-                                            "WINDOW", "TRIGGER"):
-                    gend = sig[sj] - 1
-                    break
-            for s, e in _split_top_commas(toks, sig[gb_si + 2], gend):
-                group_keys.append("".join(
-                    t.text for t in toks[s:e + 1] if t.kind not in ("WS", "COMMENT")))
+    gb = _group_by_keys(toks, sig) if is_group_by else None
+    group_keys = [_compact(toks, s, e) for s, e in gb[1]] if gb else []
     counter: dict[str, int] = {}
 
     def unique(name: str) -> str:
@@ -1622,8 +1616,7 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
             aggname, argname = detail
             name = f"{aggname}_{argname}" if argname else aggname
         else:  # expr
-            item_text = "".join(t.text for t in toks[s:e + 1]
-                                if t.kind not in ("WS", "COMMENT"))
+            item_text = _compact(toks, s, e)
             if is_group_by and item_text in group_keys:
                 name = f"key_{group_keys.index(item_text)}"
             else:
@@ -1640,9 +1633,96 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
+# calls whose value differs between evaluations of the same row
+_NONDET_FNS = {"rand", "randn", "random", "uuid", "shuffle",
+               "current_timestamp", "current_date", "now"}
+
+
+@dataclass
+class SelectItem:
+    expr: str  # expression text, without its alias
+    name: str  # output column name
+    key: int | None = None  # index of the GROUP BY key it restates
+    agg: tuple[str, str] | None = None  # (function, argument) of a
+    # one-argument aggregate call; DISTINCT shows as ``count_distinct``
+
+
+@dataclass
+class GroupBy:
+    items: list[SelectItem]
+    source: str  # the FROM span: relations, joins and their ON
+    where: str | None
+    keys: list[str]  # GROUP BY key texts, whitespace removed
+
+
+def group_by_shape(sql: str) -> GroupBy | None:
+    """Read transpiled Spark SQL of the shape ``SELECT items FROM
+    source [WHERE cond] GROUP BY keys``; None for any other shape — a
+    WITH prefix, SELECT DISTINCT, a subquery in the FROM span, HAVING,
+    ORDER BY, LIMIT, a set operation, or a key that calls a
+    nondeterministic function."""
+    toks = tokenize(sql)
+    span = _top_select_span(toks)
+    if span is None:
+        return None
+    sig, sel_si, from_si = span
+    if sel_si != 0 or from_si is None \
+            or toks[sig[1]].is_kw("DISTINCT", "ALL"):
+        return None
+    gb = _group_by_keys(toks, sig)
+    if gb is None or not gb[1] or gb[1][-1][1] != sig[-1]:
+        return None
+    gb_si, key_spans = gb
+    where_si, depth = None, 0
+    for sj in range(from_si + 1, gb_si):
+        t = toks[sig[sj]]
+        depth += {"(": 1, ")": -1}.get(t.text, 0)
+        if t.is_kw("SELECT"):
+            return None
+        if depth == 0 and t.is_kw("WHERE"):
+            where_si = sj
+            break
+    if any(toks[j].kind == "IDENT" and toks[j].text.lower() in _NONDET_FNS
+           for s, e in key_spans for j in range(s, e + 1)):
+        return None
+    keys = [_compact(toks, s, e) for s, e in key_spans]
+
+    def text(lo: int, hi: int) -> str:
+        return "".join(t.text for t in toks[lo:hi + 1]).strip()
+
+    items = []
+    for s, e in _split_top_commas(toks, sig[sel_si] + 1, sig[from_si] - 1):
+        kind, detail = _classify_item(toks, s, e)
+        if kind == "aliased":
+            name, alias_i = detail
+            e = max(j for j in range(s, alias_i)  # the AS keyword
+                    if toks[j].kind not in ("WS", "COMMENT")) - 1
+            kind, detail = _classify_item(toks, s, e)
+        elif kind == "bare":
+            name = detail
+        else:
+            return None  # star; every other item is aliased by now
+        compact = _compact(toks, s, e)
+        item = SelectItem(text(s, e), name,
+                          keys.index(compact) if compact in keys else None)
+        if kind == "agg":
+            isig = [j for j in range(s, e + 1)
+                    if toks[j].kind not in ("WS", "COMMENT")]
+            args = _split_call_args(toks, isig[1], isig[-1])
+            if len(args) == 1:
+                item.agg = (detail[0], text(*args[0]))
+        items.append(item)
+    if where_si is None:
+        return GroupBy(items, text(sig[from_si] + 1, sig[gb_si] - 1),
+                       None, keys)
+    return GroupBy(items, text(sig[from_si] + 1, sig[where_si] - 1),
+                   text(sig[where_si] + 1, sig[gb_si] - 1), keys)
+
+
 def _table_positions(toks: list[Tok]) -> list[int]:
     """Significant indices where a table reference starts (after
-    FROM/JOIN, and after commas directly inside a FROM list)."""
+    FROM/JOIN, and after commas directly inside a FROM list); a
+    parenthesized subquery or join starts at its ``(`` token."""
     sig = _sig(toks)
     positions = []
     expecting = False
@@ -1667,7 +1747,8 @@ def _table_positions(toks: list[Tok]) -> list[int]:
             positions.append(si)
             expecting = False
         elif expecting and t.text == "(":
-            expecting = False  # subquery
+            positions.append(si)  # subquery
+            expecting = False
         elif t.is_kw(*_CLAUSE_KW):
             if from_depth is not None and t.is_kw("WHERE", "GROUP", "ORDER",
                                                  "HAVING", "LIMIT"):
@@ -1937,34 +2018,6 @@ def _rewrite_tvfs(spark: SparkSession, toks: list[Tok], out: Transpiled) -> list
 
 # -------------------------------------------------------------- driver
 
-def rewrite_scalar_expression(expr_sql: str, df) -> str:
-    """Dialect rewrites for a standalone scalar expression evaluated
-    against ``df``'s columns. Fast paths that filter with raw SQL text
-    (the counting-trigger shape match in cli.py) must NOT hand the
-    dialect's WHERE to Spark verbatim — ``v / 2 = 1`` is integer
-    division in the dialect (functions.go:320-355) but float division
-    in Spark SQL, silently selecting different rows."""
-    types: dict[str, str | None] = {}
-    for col, dtype in df.dtypes:
-        cat = _type_cat(dtype)
-        key = col.lower()
-        if key in types and types[key] != cat:
-            types[key] = None
-        else:
-            types.setdefault(key, cat)
-    known = {k: v for k, v in types.items() if v}
-    toks = tokenize(expr_sql)
-    toks = _rewrite_arrow(toks)
-    toks = _rewrite_type_assert(toks)
-    toks = _rewrite_regex_ops(toks)
-    toks = _rewrite_subscript(toks)
-    toks = _rewrite_arith_overloads(toks, known)
-    toks = _rewrite_functions(toks, known)
-    toks = _rewrite_float_literals(toks)
-    toks = _expand_durns_markers(toks)
-    return "".join(t.text for t in toks)
-
-
 _ORD_CLAUSE_END = ("LIMIT", "OFFSET", "HAVING", "WINDOW", "UNION",
                    "EXCEPT", "INTERSECT", "ORDER", "GROUP", "TRIGGER",
                    "FROM", "WHERE", "SELECT", "JOIN", "ON", "LEFT",
@@ -2059,12 +2112,16 @@ def transpile(spark: SparkSession, sql: str,
     toks = _rewrite_arrow(toks)
     toks = _rewrite_tvfs(spark, toks, out)
     toks = _rewrite_file_tables(spark, toks, out)
-    toks = _expand_star(spark, toks)
+    relations = _relations(spark, toks)
+    toks = _expand_star(toks, relations)
     toks = _rewrite_distinct_agg_names(toks)
     toks = _alias_select_items(toks)
-    types = _collect_column_types(spark, toks)
-    variant_cols = (_collect_variant_cols(spark, toks)
-                    if strict_assert else set())
+    types = _collect_column_types(relations)
+    # VARIANT union carriers (JSON sources) are the only expressions
+    # strict `::` needs the schema_of_variant guard for (the guard is
+    # analysis-time illegal on non-variant input)
+    variant_cols = {c.lower() for rel in relations
+                    for c, d in rel.dtypes or () if d == "variant"}
     toks = _rewrite_type_assert(toks, strict=strict_assert,
                                 variant_cols=variant_cols)
     toks = _rewrite_regex_ops(toks)

@@ -577,13 +577,15 @@ def test_trigger_counting_join_where_and_fanout(spark, tmp_path,
 
 def test_trigger_counting_right_join_not_demoted(spark, tmp_path,
                                                  capsys):
-    """A RIGHT JOIN under TRIGGER COUNTING must NOT match the exact
-    stream-static route's regex as 'alias RIGHT + inner join' — it
-    falls back to the generic per-micro-batch mapping and still
-    produces the right rows."""
+    """A RIGHT JOIN under TRIGGER COUNTING keeps its join type: the
+    exact route reads the join from the transpiled query as written,
+    and static-left RIGHT OUTER with the stream on the right is a
+    shape Spark streams behind the stateful operator, so the joined
+    records are counted exactly per record."""
     d = tmp_path / "cntr"
     d.mkdir()
-    (d / "a.json").write_text('{"k": 1, "v": 5}\n{"k": 1, "v": 6}\n')
+    (d / "a.json").write_text('{"k": 1, "v": 5}\n{"k": 1, "v": 6}\n'
+                              '{"k": 8, "v": 7}\n{"k": 9, "v": 8}\n')
     dim = tmp_path / "dimr.csv"
     dim.write_text("k,name\n1,alpha\n")
     rc = main([f"SELECT name, COUNT(v) AS n FROM '{dim}' t "
@@ -592,10 +594,31 @@ def test_trigger_counting_right_join_not_demoted(spark, tmp_path,
                "--output", "stream_native"])
     out = capsys.readouterr().out
     assert rc == 0
-    # generic route: per-micro-batch update — the final count of 2
-    # joined records for 'alpha' must appear (no exact per-record
-    # emission markers required)
-    assert "'alpha', 2" in out
+    # 2 joined records for 'alpha' → the exact emission at count 2;
+    # the 2 unmatched stream records keep a NULL name (an inner join
+    # would drop them)
+    assert "{+0001-01-01T00:00:00Z| 'alpha', 2, 2 |}" in out
+    assert "{+0001-01-01T00:00:00Z| <null>, 2, 2 |}" in out
+
+
+def test_trigger_counting_unaliased_aggregate_exact(spark, tmp_path,
+                                                    capsys):
+    """An unaliased aggregate routes exactly: the transpiled query
+    already names every item (``count_v``, the reference's name), so
+    the exact operator emits under that name."""
+    import json
+
+    d = tmp_path / "cntu"
+    d.mkdir()
+    (d / "a.json").write_text(
+        '\n'.join('{"k": "x", "v": %d}' % i for i in range(1, 6)) + '\n')
+    rc = main([f"SELECT k, COUNT(v) FROM '{d}/*.json?tail=true' "
+               "GROUP BY k TRIGGER COUNTING 2", "--output", "json"])
+    out = capsys.readouterr().out
+    assert rc == 0
+    rows = [json.loads(ln) for ln in out.splitlines()]
+    assert rows == [{"k": "x", "emitted_at_count": 2, "count_v": 2},
+                    {"k": "x", "emitted_at_count": 4, "count_v": 4}]
 
 
 def test_trigger_counting_stream_stream_inner(spark, tmp_path, capsys):
@@ -627,36 +650,26 @@ def test_trigger_counting_stream_stream_inner(spark, tmp_path, capsys):
 def test_trigger_counting_stream_stream_outer_falls_back(
         spark, tmp_path, capsys):
     """LEFT OUTER stream-stream needs watermark time bounds by
-    Structured Streaming's rules — the route must NOT claim it; the
-    generic per-micro-batch fallback (or a clean error) handles it."""
+    Structured Streaming's rules, so Spark refuses to start it behind
+    the exact operator. The query takes the generic route instead:
+    generic output or a one-line error, never an exact
+    ``emitted_at_count`` row."""
     da = tmp_path / "sso_a"
     db = tmp_path / "sso_b"
     da.mkdir()
     db.mkdir()
     (da / "a.json").write_text('{"k": 1, "v": 5}\n')
     (db / "b.json").write_text('{"k": 1, "w": 7}\n')
-    from octosql_spark.cli import _build_counting_join_source
-    import re
-    q = (f"SELECT s.k AS k, COUNT(*) AS n FROM '{da}/*.json?tail=true' s "
-         f"LEFT JOIN '{db}/*.json?tail=true' t ON s.k = t.k "
-         "GROUP BY s.k TRIGGER COUNTING 1")
-    # the route's own matcher: LEFT + both-streaming returns None
-    from octosql_spark.sql import run_query
-    res = run_query(spark, q.split(" TRIGGER")[0])
-    jm = re.match(
-        r"(?is)^\s*SELECT\s+(?P<items>.*?)\s+FROM\s+(?P<v1>\S+)"
-        r"(?:\s+(?:AS\s+)?(?!JOIN\b|INNER\b|LEFT\b|RIGHT\b|FULL\b"
-        r"|CROSS\b|OUTER\b)(?P<a1>\w+))?"
-        r"\s+(?:(?P<jt>LEFT)\s+(?:OUTER\s+)?|INNER\s+)?JOIN\s+"
-        r"(?P<v2>\S+)"
-        r"(?:\s+(?:AS\s+)?(?!ON\b)(?P<a2>\w+))?"
-        r"\s+ON\s+(?P<on>.*?)\s+"
-        r"GROUP\s+BY\s+(?P<keys>.*?)\s*$", q.split(" TRIGGER")[0])
-    assert jm is not None
-    views = [v for v in res.views]
-    assert len(views) == 2
-    assert _build_counting_join_source(spark, jm, views[0],
-                                       views[1]) is None
+    rc = main([f"SELECT s.k AS k, COUNT(*) AS n "
+               f"FROM '{da}/*.json?tail=true' s "
+               f"LEFT JOIN '{db}/*.json?tail=true' t ON s.k = t.k "
+               "GROUP BY s.k TRIGGER COUNTING 1", "--output", "json"])
+    cap = capsys.readouterr()
+    assert "emitted_at_count" not in cap.out
+    assert rc in (0, 1)
+    if rc:
+        assert [ln for ln in cap.err.splitlines()
+                if ln.startswith("error:")] and "Traceback" not in cap.err
 
 
 def test_trigger_counting_max_diff_watermark_exact(spark, tmp_path,

@@ -108,25 +108,33 @@ def test_counting_trigger_random_replay(spark, tmp_path):
         assert got == want, f"trial={trial} n={n}"
 
 
-def test_strip_alias_qualifier_token_aware():
-    """Alias-qualifier stripping in the counting-join WHERE must skip
-    string literals: alias `s` with WHERE name = 's.x' previously
-    became 'x' (plain-regex rewrite), silently filtering different
-    rows than the reference (advisor-found r7)."""
-    from octosql_spark.cli import _strip_alias_qualifier as strip
+def test_counting_join_where_literal_keeps_alias_text(spark, tmp_path,
+                                                     capsys):
+    """A counting join's WHERE reaches Spark as transpiled text, so a
+    string literal that looks like an alias qualifier stays verbatim:
+    with alias ``s``, ``name = 's.x'`` keeps only the records whose
+    name is ``s.x``. A text rewrite that stripped ``s.`` also inside
+    literals turned it into ``'x'`` and counted the other records."""
+    from octosql_spark.cli import main
 
-    assert strip("s.v > 3 AND t.k = s.k", "s") == "v > 3 AND t.k = k"
-    # literals survive verbatim — single-quoted (with '' escape),
-    # double-quoted, backticked
-    assert strip("name = 's.x'", "s") == "name = 's.x'"
-    assert strip("note = 'it''s s.y' AND s.v = 1", "s") \
-        == "note = 'it''s s.y' AND v = 1"
-    assert strip('col = "s.z" AND s.a = 2', "s") == 'col = "s.z" AND a = 2'
-    assert strip("`s.q` = s.b", "s") == "`s.q` = b"
-    # identifier boundaries: `os.v` is NOT an `s.` qualifier
-    assert strip("os.v = s.v", "s") == "os.v = v"
-    # case-insensitive alias match (SQL identifiers)
-    assert strip("S.v = 1", "s") == "v = 1"
+    d = tmp_path / "cntq"
+    d.mkdir()
+    (d / "a.json").write_text(
+        "".join('{"k": 1, "v": %d, "name": "%s"}\n' % (v, name)
+                for v, name in ((1, "s.x"), (2, "x"), (3, "s.x"),
+                                (4, "x"))))
+    dim = tmp_path / "dimq.csv"
+    dim.write_text("k,label\n1,one\n")
+    rc = main([f"SELECT label, COUNT(*) AS n, SUM(s.v) AS sv "
+               f"FROM '{d}/*.json?tail=true' s JOIN '{dim}' t "
+               "ON s.k = t.k WHERE s.name = 's.x' "
+               "GROUP BY label TRIGGER COUNTING 2",
+               "--output", "stream_native"])
+    out = capsys.readouterr().out
+    assert rc == 0
+    # v=1 and v=3 pass: one exact emission at count 2, sum 4
+    assert "{+0001-01-01T00:00:00Z| 'one', 2, 2, 4 |}" in out
+    assert "'one', 2, 2, 6" not in out
 
 
 def test_count_string_column_counts_non_nulls(spark, tmp_path):

@@ -144,6 +144,41 @@ def test_file_table_csv(spark, tmp_path):
     assert len(rows) == 1 and rows[0].name == "alice"
 
 
+def test_star_expands_only_top_level_relations(spark, tmp_path):
+    """``SELECT *`` expands the columns of its own FROM list only: a
+    table named inside a WHERE subquery is out of the star's scope
+    (expanding it too made Spark reject ``b.k2`` as unresolved)."""
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string") \
+        .createOrReplaceTempView("star_a")
+    spark.createDataFrame([(1, 10)], "k2 long, w long") \
+        .createOrReplaceTempView("star_b")
+    df = q(spark, "SELECT * FROM star_a WHERE k IN (SELECT k2 FROM star_b)")
+    assert df.columns == ["k", "v"]
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+    p = tmp_path / "dim.csv"
+    p.write_text("k,name\n1,alpha\n2,beta\n")
+    df = q(spark, f"SELECT * FROM '{p}' a WHERE k IN "
+                  f"(SELECT k FROM '{p}' b WHERE name = 'beta')")
+    assert df.columns == ["k", "name"]
+    assert [tuple(r) for r in df.collect()] == [(2, "beta")]
+
+
+def test_one_schema_lookup_per_table(spark, monkeypatch):
+    """A transpile looks each table up once, however many passes
+    (star expansion, overload types, strict ``::``) read its schema."""
+    spark.createDataFrame([(1, "a")], "k long, v string") \
+        .createOrReplaceTempView("lookup_t")
+    calls = []
+    table = spark.table
+    monkeypatch.setattr(spark, "table",
+                        lambda name: calls.append(name) or table(name))
+    t = transpile(spark, "SELECT * FROM lookup_t x JOIN lookup_t y "
+                         "ON x.k = y.k WHERE x.v::string = 'a'",
+                  strict_assert=True)
+    assert calls == ["lookup_t"]
+    assert "x.k AS `x.k`" in t.sql
+
+
 def test_file_table_json(spark, tmp_path):
     p = tmp_path / "objs.json"
     p.write_text("\n".join(json.dumps({"field1": "a", "field2": i})
