@@ -601,7 +601,16 @@ def _run_streaming(args, res, df, stagers=None) -> int:
             except Exception:
                 q = None
         if q is None:
-            q = _start(df, mode, sinks.stream_batch_writer(args.output))
+            try:
+                q = _start(df, mode, sinks.stream_batch_writer(args.output))
+            except AnalysisException:
+                if mode != "update":
+                    raise
+                # Spark streams a stream-stream join only in append
+                # mode, which for a query without an aggregate emits
+                # the rows update mode would
+                q = _start(df, "append",
+                           sinks.stream_batch_writer(args.output))
     except Exception as ex:
         print(f"error: {_one_line_error(ex)}", file=sys.stderr)
         return 1

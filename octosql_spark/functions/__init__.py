@@ -1,3 +1,1 @@
-from octosql_spark.functions.registry import (  # noqa: F401
-    FUNCTIONS, FunctionDef, call, register_sql_functions,
-)
+from octosql_spark.functions.registry import FUNCTIONS, FunctionDef  # noqa: F401

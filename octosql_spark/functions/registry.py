@@ -2,13 +2,10 @@
 
 The reference registers 42 names in one map ``FunctionMap()``
 (functions/functions.go), with per-overload argument types resolved at
-typecheck (logical/function.go:24-132). Here each name maps to a
-Column-builder; overloads that depend on the *runtime* type in the
-reference (e.g. ``len`` on String vs List, ``+`` on Strings) dispatch
-on the Spark column's static dtype when a DataFrame is supplied.
-
-All builders compile to JVM-side Catalyst expressions — no Python UDFs
-anywhere in this catalog (the 100 TB rule: stay inside whole-stage
+typecheck (logical/function.go:24-132). Here each name carries its
+signatures and description for the ``docs.*`` tables; the SQL
+front-end (sql/transpiler.py) compiles every call to JVM-side Catalyst
+expressions — no Python UDFs (the 100 TB rule: stay inside whole-stage
 codegen).
 
 Deviations from the reference, documented:
@@ -26,16 +23,11 @@ Deviations from the reference, documented:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
-
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
 class FunctionDef:
     name: str
-    builder: Callable[..., Column]
     signatures: list[str] = field(default_factory=list)  # for docs.*
     description: str = ""
 
@@ -43,132 +35,82 @@ class FunctionDef:
 FUNCTIONS: dict[str, FunctionDef] = {}
 
 
-def _fn(name: str, signatures: list[str], description: str = ""):
-    def deco(builder):
-        FUNCTIONS[name] = FunctionDef(name, builder, signatures, description)
-        return builder
-    return deco
-
-
-def call(name: str, *args: Column) -> Column:
-    """Invoke a catalog function by its OctoSQL name."""
-    return FUNCTIONS[name].builder(*args)
+def _fn(name: str, signatures: list[str], description: str = "") -> None:
+    FUNCTIONS[name] = FunctionDef(name, signatures, description)
 
 
 # --------------------------------------------------- comparisons, logic
 
-_fn("<", ["(T, T) -> Boolean"])(lambda a, b: a < b)
-_fn("<=", ["(T, T) -> Boolean"])(lambda a, b: a <= b)
-_fn("=", ["(T, T) -> Boolean"])(lambda a, b: a == b)
-_fn("!=", ["(T, T) -> Boolean"])(lambda a, b: a != b)
-_fn(">=", ["(T, T) -> Boolean"])(lambda a, b: a >= b)
-_fn(">", ["(T, T) -> Boolean"])(lambda a, b: a > b)
-_fn("is null", ["(T) -> Boolean"])(lambda a: a.isNull())
-_fn("is not null", ["(T) -> Boolean"])(lambda a: a.isNotNull())
-_fn("not", ["(Boolean) -> Boolean"])(lambda a: ~a)
-_fn("in", ["(T, List) -> Boolean"])(lambda a, *xs: a.isin(*xs))
-_fn("not in", ["(T, List) -> Boolean"])(lambda a, *xs: ~a.isin(*xs))
+_fn("<", ["(T, T) -> Boolean"])
+_fn("<=", ["(T, T) -> Boolean"])
+_fn("=", ["(T, T) -> Boolean"])
+_fn("!=", ["(T, T) -> Boolean"])
+_fn(">=", ["(T, T) -> Boolean"])
+_fn(">", ["(T, T) -> Boolean"])
+_fn("is null", ["(T) -> Boolean"])
+_fn("is not null", ["(T) -> Boolean"])
+_fn("not", ["(Boolean) -> Boolean"])
+_fn("in", ["(T, List) -> Boolean"])
+_fn("not in", ["(T, List) -> Boolean"])
 
 
 # ------------------------------------------------------------ arithmetic
-# Overload sets (functions.go:156-355). Numeric/interval arithmetic is
-# the native operator; String+String is concat, String*Int is repeat —
-# both resolved in `add`/`mul` when dtypes are known (SQL front-end
-# resolves against the schema; see sql/transpiler.py).
+# Overload sets (functions.go:156-355), resolved against the schema by
+# the SQL front-end: String+String is concat, String*Int is repeat.
 
 _fn("+", ["(Int, Int) -> Int", "(Float, Float) -> Float",
           "(Duration, Duration) -> Duration", "(Time, Duration) -> Time",
-          "(String, String) -> String"])(lambda a, b: a + b)
+          "(String, String) -> String"])
 _fn("-", ["(Int, Int) -> Int", "(Float, Float) -> Float",
-          "(Time, Duration) -> Time", "(Int) -> Int"])(
-    lambda a, b=None: (-a) if b is None else (a - b))
+          "(Time, Duration) -> Time", "(Int) -> Int"])
 _fn("*", ["(Int, Int) -> Int", "(Float, Float) -> Float",
-          "(Duration, Int) -> Duration", "(String, Int) -> String"])(
-    lambda a, b: a * b)
+          "(Duration, Int) -> Duration", "(String, Int) -> String"])
 _fn("/", ["(Int, Int) -> Int", "(Float, Float) -> Float",
-          "(Duration, Int) -> Duration"])(lambda a, b: a / b)
-
-_fn("string_concat", ["(String, String) -> String"])(lambda a, b: F.concat(a, b))
-_fn("string_repeat", ["(String, Int) -> String"])(lambda a, n: F.repeat(a, n))
+          "(Duration, Int) -> Duration"])
+_fn("string_concat", ["(String, String) -> String"])
+_fn("string_repeat", ["(String, Int) -> String"])
 
 
 # ------------------------------------------------------------------ math
 
-_fn("abs", ["(Int) -> Int", "(Float) -> Float", "(Duration) -> Duration"])(F.abs)
-_fn("sqrt", ["(Int) -> Float", "(Float) -> Float"])(F.sqrt)
-# the reference types ceil/floor Float -> FLOAT
-# (functions.go:394-412); Spark's return LONG, so cast back
-_fn("ceil", ["(Float) -> Float"])(lambda a: F.ceil(a).cast("double"))
-_fn("floor", ["(Float) -> Float"])(lambda a: F.floor(a).cast("double"))
-_fn("log2", ["(Float) -> Float"])(F.log2)
-_fn("log", ["(Float) -> Float"], "natural log, like the reference")(
-    lambda a: F.log(a))
-_fn("log10", ["(Float) -> Float"])(F.log10)
-_fn("pow", ["(Float, Float) -> Float"])(F.pow)
+_fn("abs", ["(Int) -> Int", "(Float) -> Float", "(Duration) -> Duration"])
+_fn("sqrt", ["(Int) -> Float", "(Float) -> Float"])
+_fn("ceil", ["(Float) -> Float"])
+_fn("floor", ["(Float) -> Float"])
+_fn("log2", ["(Float) -> Float"])
+_fn("log", ["(Float) -> Float"], "natural log, like the reference")
+_fn("log10", ["(Float) -> Float"])
+_fn("pow", ["(Float, Float) -> Float"])
 
 
 # --------------------------------------------------------------- strings
 
 _fn("like", ["(String, String) -> Boolean"],
     "SQL LIKE; the reference compiles %/_ to a cached regexp "
-    "(functions.go:487-590)")(
-    lambda a, p: F.like(a, p) if isinstance(p, Column) else a.like(p))
-_fn("~", ["(String, String) -> Boolean"], "regex match")(F.regexp_like)
-_fn("~*", ["(String, String) -> Boolean"], "case-insensitive regex")(
-    lambda a, p: F.regexp_like(a, F.concat(F.lit("(?i)"), p)))
-_fn("!~", ["(String, String) -> Boolean"])(lambda a, p: ~F.regexp_like(a, p))
-_fn("!~*", ["(String, String) -> Boolean"])(
-    lambda a, p: ~F.regexp_like(a, F.concat(F.lit("(?i)"), p)))
-_fn("upper", ["(String) -> String"])(F.upper)
-_fn("lower", ["(String) -> String"])(F.lower)
-_fn("reverse", ["(String) -> String"])(F.reverse)
-def _substr(s: Column, pos, ln=None) -> Column:
-    # The reference is 0-based (functions.go:720-739; golden
-    # strings.out: substr('test',1)='est') — Spark substring is
-    # 1-based, so shift by +1.
-    pos1 = (pos + 1) if isinstance(pos, int) else (pos + F.lit(1))
-    if ln is not None:
-        return F.substring(s, pos1, ln)
-    pos1 = F.lit(pos1) if isinstance(pos1, int) else pos1
-    return s.substr(pos1, F.lit(2147483647))
-
-
+    "(functions.go:487-590)")
+_fn("~", ["(String, String) -> Boolean"], "regex match")
+_fn("~*", ["(String, String) -> Boolean"], "case-insensitive regex")
+_fn("!~", ["(String, String) -> Boolean"])
+_fn("!~*", ["(String, String) -> Boolean"])
+_fn("upper", ["(String) -> String"])
+_fn("lower", ["(String) -> String"])
+_fn("reverse", ["(String) -> String"])
 _fn("substr", ["(String, Int) -> String", "(String, Int, Int) -> String"],
-    "0-based like the reference (functions.go:720-739)")(_substr)
-_fn("replace", ["(String, String, String) -> String"])(
-    lambda s, old, new: F.replace(s, old, new))
+    "0-based like the reference (functions.go:720-739)")
+_fn("replace", ["(String, String, String) -> String"])
 _fn("position", ["(String, String) -> Int | NULL"],
     "position(haystack, needle): 0-based index of needle, NULL when "
-    "absent (functions.go:757-772)")(
-    lambda s, sub: F.when(F.instr(s, sub) > 0,
-                          (F.instr(s, sub) - 1).cast("long")))
-
-
-@_fn("len", ["(String) -> Int", "(List) -> Int", "(Struct) -> Int"],
-     "length of String/List/Struct (functions.go:774-831); dispatches "
-     "on the column's Spark dtype")
-def _len(col: Column) -> Column:
-    # Static dispatch needs the dtype; the SQL front-end resolves it.
-    # Bare-column calls assume String (the common case).
-    return F.length(col)
-
-
-def len_for_dtype(col: Column, dtype: str) -> Column:
-    if dtype.startswith(("array", "map")):
-        return F.size(col).cast("long")
-    if dtype.startswith("struct"):
-        n = dtype.count(":")  # fields are name:type pairs
-        return F.when(col.isNotNull(), F.lit(n)).cast("long")
-    return F.length(col).cast("long")
+    "absent (functions.go:757-772)")
+_fn("len", ["(String) -> Int", "(List) -> Int", "(Struct) -> Int"],
+    "length of String/List/Struct (functions.go:774-831); dispatches "
+    "on the column's Spark dtype")
 
 
 # ------------------------------------------------------------------ time
 
-_fn("now", ["() -> Time"])(lambda: F.current_timestamp())
-_fn("time_from_unix", ["(Int) -> Time", "(Float) -> Time"])(
-    lambda x: F.timestamp_seconds(x))
-_fn("time_to_unix", ["(Time) -> Int"])(
-    lambda t: F.unix_timestamp(t.cast("timestamp")))
+_fn("now", ["() -> Time"])
+_fn("time_from_unix", ["(Int) -> Time", "(Float) -> Time"])
+_fn("time_to_unix", ["(Time) -> Int"])
 
 
 _GO_TO_JAVA = [
@@ -187,47 +129,23 @@ def go_layout_to_java(layout: str) -> str:
     return out
 
 
-@_fn("parse_time", ["(String) -> Time | NULL", "(String, String) -> Time | NULL"],
-     "RFC3339 by default; unparsable → NULL (functions.go:846-862)")
-def _parse_time(s: Column, layout: Column | str | None = None) -> Column:
-    if layout is None:
-        return F.try_to_timestamp(s)
-    if isinstance(layout, str):
-        layout = F.lit(go_layout_to_java(layout))
-    return F.try_to_timestamp(s, layout)
+_fn("parse_time", ["(String) -> Time | NULL", "(String, String) -> Time | NULL"],
+    "RFC3339 by default; unparsable → NULL (functions.go:846-862)")
 
 
 # ----------------------------------------------------------- conversions
 
 _fn("int", ["(Boolean) -> Int", "(Float) -> Int", "(String) -> Int | NULL",
             "(Duration) -> Int"],
-    "failure → NULL like the reference (functions.go:900-955)")(
-    lambda a: a.try_cast("bigint"))
-_fn("float", ["(Int) -> Float", "(String) -> Float | NULL"])(
-    lambda a: a.try_cast("double"))
-_fn("string", ["(T) -> String"])(lambda a: a.cast("string"))
+    "failure → NULL like the reference (functions.go:900-955)")
+_fn("float", ["(Int) -> Float", "(String) -> Float | NULL"])
+_fn("string", ["(T) -> String"])
 
 
 # -------------------------------------------------------- lists, debug
 
 _fn("[]", ["(List, Int) -> T | NULL"],
     "0-based indexing, out-of-range → NULL (functions.go:1014-1042); "
-    "Spark get() matches both behaviors")(lambda lst, i: F.get(lst, i))
+    "Spark get() matches both behaviors")
 _fn("panic", ["(String) -> !"],
-    "aborts the query (functions.go:1135-1147)")(
-    lambda msg: F.raise_error(msg))
-
-
-# --------------------------------------------------------- SQL exposure
-
-# OctoSQL names that are NOT already Spark SQL builtins with identical
-# semantics get registered (or are rewritten by sql/transpiler.py).
-def register_sql_functions(spark: SparkSession) -> None:
-    """Make catalog-only names callable from spark.sql().
-
-    Most §2.7 names are Spark builtins already (upper, lower, abs, …).
-    The transpiler rewrites the rest (int/float/len/~/::/…) into Spark
-    expressions, so nothing here needs a Python UDF — this hook exists
-    for future genuinely-custom scalar functions.
-    """
-    return None
+    "aborts the query (functions.go:1135-1147)")

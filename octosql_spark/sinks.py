@@ -35,7 +35,8 @@ def go_duration_ns(ns: int) -> str:
     """Go ``time.Duration.String()`` from int64 nanoseconds (Go's own
     representation) — ``5h32m42s``, ``-3s``, ``333.333ms``,
     ``2.333333333s``. Division-derived durations carry exact nanos
-    (see transpiler ``__DURNS__``), everything else is µs-exact."""
+    (the ``named_struct('__dur_ns', CAST((e) AS BIGINT))`` wire form
+    the transpiler emits), everything else is µs-exact."""
     sign = "-" if ns < 0 else ""
     ns = abs(int(ns))
     if ns == 0:
@@ -73,9 +74,10 @@ def go_duration(td) -> str:
 
 
 def _durns(v):
-    """The int64 nanos of a nanosecond-carrying Duration value (the
-    ``{'__dur_ns': n}`` struct the transpiler emits for division
-    results), else None."""
+    """The int64 nanos of a nanosecond-carrying Duration value — a row
+    of the transpiler's wire form ``named_struct('__dur_ns', CAST((e)
+    AS BIGINT))``, which arrives as a ``{'__dur_ns': n}`` struct —
+    else None."""
     try:
         from pyspark.sql import Row
         if isinstance(v, Row) and list(v.__fields__) == ["__dur_ns"]:

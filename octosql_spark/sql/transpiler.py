@@ -12,6 +12,7 @@ Catalyst (SURVEY.md §3 "Spark mapping of the lifecycle"):
 | ``a ~ 'p'`` / ``~*`` / ``!~``| ``regexp_like`` forms (functions.go:591-668) |
 | ``int(x)/float(x)/string(x)``| ``TRY_CAST``/``CAST`` (functions.go:900-1013) |
 | ``len(x)``                   | ``length(x)`` (strings; `size` for arrays) |
+| ``+ * /`` on String/Int/Duration | ``concat``/``repeat``/``DIV``; Duration over int64 nanos (functions.go:156-355) |
 | ``now()``                    | ``current_timestamp()``                |
 | ``parse_time(s)``            | ``try_to_timestamp(s)`` (+Go-layout translation) |
 | ``time_from_unix/to_unix``   | ``timestamp_seconds``/``unix_timestamp`` |
@@ -382,12 +383,8 @@ def _rewrite_functions(toks: list[Tok],
                 open_i = sig[si + 1]
                 close_i = _match_paren(toks, open_i, 1)
                 args = _split_call_args(toks, open_i, close_i)
-                cat = None
-                if len(args) == 1:
-                    asig = [sj for sj in range(len(sig))
-                            if args[0][0] <= sig[sj] <= args[0][1]]
-                    if asig:
-                        cat = _operand_cat(toks, sig, asig[0], "right", types)
+                cat = (_span_cat(toks, *args[0], types)
+                       if len(args) == 1 else None)
                 toks[i] = Tok("IDENT",
                               "size" if cat in ("array", "map") else "length")
                 changed = True
@@ -609,9 +606,6 @@ _FN_RESULT_CAT = {
     # polymorphic (see _POLY_FNS)
     "count": "int", "count_distinct": "int",
     "avg": "float", "avg_distinct": "float",
-    # nanosecond-carrying Duration (division results): see
-    # _rewrite_arith_pass "durdiv_int" and _expand_durns_markers
-    "__durns__": "durns",
 }
 
 # Polymorphic functions whose result category is derived from their
@@ -715,8 +709,7 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
             depth += 1
         elif t.text in (")", "]"):
             depth -= 1
-        elif depth == 0 and ((t.kind == "OP" and t.text in ("+", "-", "*", "/", "%"))
-                             or (t.kind == "IDENT" and t.text.upper() == "DIV")):
+        elif depth == 0 and _is_arith_op_tok(toks, i):
             ops.append(i)
     if ops:
         cats = []
@@ -734,10 +727,7 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
         if set(cats) <= {"int", "float"}:
             return "float"
         if all(c == "string" for c in cats):
-            return "string"  # will rewrite to concat/repeat
-        if "durns" in cats and set(cats) <= {"durns", "duration", "int"}:
-            # any chain touching a nanos-carrying duration stays nanos
-            return "durns"
+            return "string"
         if "duration" in cats and set(cats) <= {"duration", "int", "float"}:
             # duration +/- duration, duration */÷ scalar → duration
             # (functions.go:156-355 Duration overloads)
@@ -817,6 +807,8 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
                 # Int/Int integer division (functions.go:320-355).
                 return _CAST_TARGET_CAT.get(toks[sig[-2]].text.upper())
             fname = t.text.lower()
+            if fname == "named_struct" and toks[sig[2]].text == "'__dur_ns'":
+                return "durns"  # the wire form ``_wire`` emits
             if fname in _POLY_FNS:
                 args = _split_call_args(toks, sig[1], sig[-1])
                 if not args:
@@ -845,93 +837,11 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
     return None
 
 
-def _operand_cat(toks: list[Tok], sig: list[int], si: int, side: str,
-                 types: dict[str, str]) -> str | None:
-    """Type category of the operand ending (side='left') or starting
-    (side='right') at significant index ``si``; None when unknown."""
-    try:
-        if side == "left":
-            start = _primary_start(toks, sig[si])
-            return _span_cat(toks, start, sig[si], types)
-        end = _primary_end(toks, sig[si])
-        return _span_cat(toks, sig[si], end, types)
-    except ValueError:
-        return None
-
-
-def _rewrite_arith_overloads(toks: list[Tok],
-                             types: dict[str, str] | None = None) -> list[Tok]:
-    """The reference's arithmetic overload set (functions.go:156-355):
-    String+String → concat, String*Int / Int*String → repeat,
-    Int/Int → integer division. Literals pin the overload directly;
-    column operands resolve through ``types`` (view schemas collected
-    post-``_rewrite_file_tables`` — the Spark-side equivalent of the
-    reference's typecheck, logical/function.go:24-132)."""
-    types = types or {}
-    # multiplicative ops rewrite BEFORE additive (SQL precedence:
-    # `'x' + s * 2` must become concat('x', repeat(s, 2)), not
-    # concat('x', s) * 2). "-" participates only in the durns rules.
-    # The pass pair iterates to a FIXPOINT: a durns rule only fires
-    # on operands already normalized to a pure __DURNS__ marker, so
-    # `((dur/3 + 1s) * 2) + 1s` needs mul → add → mul → add rounds
-    # before every chain has collapsed. Uncapped: each round either
-    # rewrites at least one site (strictly shrinking the remaining
-    # work) or reaches the fixpoint; the guard only trips on a
-    # rewrite-system bug, not on deep-but-valid nesting.
-    rounds = 0
-    while True:
-        before = "".join(t.text for t in toks)
-        for ops in (("*", "/"), ("+", "-")):
-            toks = _rewrite_arith_pass(toks, types, ops)
-        if "".join(t.text for t in toks) == before:
-            break
-        rounds += 1
-        if rounds > 500:
-            raise ValueError(
-                "arithmetic overload rewrite did not converge "
-                "(internal error; please report the query)")
-    return toks
-
-
-def _ns_of_duration(span: list[Tok]) -> list[Tok]:
-    """Tokens for the exact total NANOSECONDS of a duration expression
-    (epoch-shift to micros, then ×1000 — Spark intervals carry µs, so
-    the ×1000 is exact)."""
-    return ([Tok("PUNCT", "("), Tok("IDENT", "unix_micros"),
-             Tok("PUNCT", "("), Tok("IDENT", "timestamp_micros"),
-             Tok("PUNCT", "("), Tok("NUMBER", "0"), Tok("PUNCT", ")"),
-             Tok("WS", " "), Tok("OP", "+"), Tok("WS", " ")]
-            + span + [Tok("PUNCT", ")"), Tok("WS", " "), Tok("OP", "*"),
-                      Tok("WS", " "), Tok("NUMBER", "1000"),
-                      Tok("PUNCT", ")")])
-
-
-def _durns_inner(span: list[Tok]) -> list[Tok] | None:
-    """For a span that IS a (possibly parenthesized) pure
-    ``__DURNS__( inner )`` marker: the parenthesized raw BIGINT nanos
-    tokens. None for anything else — a durns-categorized CHAIN
-    (marker + interval, marker * int …) is NOT unwrappable until the
-    other passes have collapsed it into one marker."""
-    def _sig_of(s):
-        return [i for i, t in enumerate(s)
-                if t.kind not in ("WS", "COMMENT")]
-    sig = _sig_of(span)
-    while (len(sig) >= 2 and span[sig[0]].text == "("
-           and _match_paren(span, sig[0], 1) == sig[-1]):
-        span = span[sig[0] + 1:sig[-1]]
-        sig = _sig_of(span)
-    if (len(sig) >= 3 and span[sig[0]].kind == "IDENT"
-            and span[sig[0]].text == "__DURNS__"
-            and span[sig[1]].text == "("
-            and _match_paren(span, sig[1], 1) == sig[-1]):
-        return [Tok("PUNCT", "(")] + span[sig[1] + 1:sig[-1]] \
-            + [Tok("PUNCT", ")")]
-    return None
-
-
-def _durns_wrap(inner: list[Tok]) -> list[Tok]:
-    return ([Tok("IDENT", "__DURNS__"), Tok("PUNCT", "(")] + inner
-            + [Tok("PUNCT", ")")])
+def _next_sig(toks: list[Tok], i: int) -> int | None:
+    i += 1
+    while i < len(toks) and toks[i].kind in ("WS", "COMMENT"):
+        i += 1
+    return i if i < len(toks) else None
 
 
 def _is_arith_op_tok(toks: list[Tok], i: int) -> bool:
@@ -940,313 +850,196 @@ def _is_arith_op_tok(toks: list[Tok], i: int) -> bool:
             or (t.kind == "IDENT" and t.text.upper() == "DIV"))
 
 
-def _collect_arith_chain(toks: list[Tok], op_i: int):
-    """Maximal flat run ``primary (op primary)*`` — across BOTH
-    precedence levels — containing the arithmetic operator at token
-    index ``op_i``. Returns ``(operand_spans, op_indices)`` with
-    inclusive (start, end) token ranges, or None when the immediate
-    neighborhood doesn't parse as a chain (unary minus, keyword…)."""
-    def prev_sig(i):
-        i -= 1
-        while i >= 0 and toks[i].kind in ("WS", "COMMENT"):
-            i -= 1
-        return i
-
-    def next_sig(i):
-        i += 1
-        while i < len(toks) and toks[i].kind in ("WS", "COMMENT"):
-            i += 1
-        return i if i < len(toks) else -1
-
+def _operand_end(toks: list[Tok], i: int) -> int | None:
+    """End (inclusive) of the chain operand starting at token ``i``:
+    unary signs, then one primary. None when no operand starts there
+    (a keyword, another operator, a bracket)."""
+    while toks[i].kind == "OP" and toks[i].text in ("+", "-"):
+        i = _next_sig(toks, i)
+        if i is None:
+            return None
+    t = toks[i]
+    if not (t.kind in ("IDENT", "QIDENT", "STRING", "NUMBER")
+            or t.text == "(") or t.is_kw(*_NONCALL_KW):
+        return None
     try:
-        i = prev_sig(op_i)
-        if i < 0:
-            return None
-        spans = [(_primary_start(toks, i), i)]
-        ops = [op_i]
-        i = next_sig(op_i)
-        if i < 0:
-            return None
-        spans.append((i, _primary_end(toks, i)))
+        return _primary_end(toks, i)
     except ValueError:
         return None
-    while True:  # extend left while the previous token is a binary op
-        j = prev_sig(spans[0][0])
-        if j < 0 or not _is_arith_op_tok(toks, j):
-            break
-        k = prev_sig(j)
-        if k < 0 or _is_arith_op_tok(toks, k):
-            break  # doubled op ⇒ unary sign, not part of the chain
-        try:
-            start = _primary_start(toks, k)
-        except ValueError:
-            break
-        ops.insert(0, j)
-        spans.insert(0, (start, k))
-    while True:  # and right symmetrically
-        j = next_sig(spans[-1][1])
-        if j < 0 or not _is_arith_op_tok(toks, j):
-            break
-        k = next_sig(j)
-        if k < 0 or _is_arith_op_tok(toks, k):
-            break
-        try:
-            end = _primary_end(toks, k)
-        except ValueError:
-            break
-        ops.append(j)
-        spans.append((k, end))
-    return spans, ops
 
 
-def _fold_duration_chain(toks: list[Tok], spans, op_idx,
-                         types: dict[str, str]):
-    """Left-to-right precedence-aware fold of a flat arithmetic chain
-    involving Duration operands. Pairwise rewriting at a non-leftmost
-    operator breaks left associativity — ``10s - 3s + 7s/3`` must
-    group as ``(10s - 3s) + (7s/3)``, not ``10s - (3s + 7s/3)``
-    (reference functions.go:156-355 evaluates strictly left-assoc
-    within a precedence level) — so the WHOLE chain folds in one
-    rewrite over exact int64 nanos. Returns the replacement token
-    list, or the sentinel string ``"skip"`` when an operand is a
-    still-mixed durns chain (or unknown type) that a later fixpoint
-    round must collapse first."""
-    sp = [Tok("WS", " ")]
+def _paren(inner: list[Tok]) -> list[Tok]:
+    return [Tok("PUNCT", "(")] + inner + [Tok("PUNCT", ")")]
 
-    def paren(inner):
-        return [Tok("PUNCT", "(")] + inner + [Tok("PUNCT", ")")]
 
-    vals = []  # (cat, toks) — duration operands normalized to ns form
-    for (s, e) in spans:
-        c = _span_cat(toks, s, e, types)
-        span = toks[s:e + 1]
-        if c == "duration":
-            vals.append(("durns", _ns_of_duration(span)))
-        elif c == "durns":
-            inner = _durns_inner(span)
-            if inner is None:
-                return "skip"
-            vals.append(("durns", inner))
-        elif c in ("int", "float"):
-            vals.append((c, paren(span)))
+def _call(fn: str, a: list[Tok], b: list[Tok]) -> list[Tok]:
+    return ([Tok("IDENT", fn), Tok("PUNCT", "(")] + a
+            + [Tok("PUNCT", ","), Tok("WS", " ")] + b + [Tok("PUNCT", ")")])
+
+
+_DIV = [Tok("WS", " "), Tok("IDENT", "DIV"), Tok("WS", " ")]
+
+_Value = tuple[str | None, list[Tok]]  # (category, tokens)
+
+
+def _chain_value(toks: list[Tok], s: int, e: int,
+                 types: dict[str, str]) -> _Value:
+    """(category, tokens) of one chain operand. A signed operand keeps
+    a numeric or Duration category; a nanosecond-carrying Duration
+    operand (the wire form) is read as its int64 nanos."""
+    p = s
+    while toks[p].kind == "OP":
+        p = _next_sig(toks, p)
+    cat = _span_cat(toks, p, e, types)
+    span = toks[s:e + 1]
+    if p != s and cat not in ("int", "float", "duration"):
+        return None, span
+    if cat == "durns":
+        return cat, _paren(span) + tokenize(".__dur_ns")
+    return cat, span
+
+
+def _ns(v: _Value) -> list[Tok]:
+    """int64 nanos of a Duration value: a µs interval is epoch-shifted
+    to micros, then ×1000 (exact, Spark intervals carry µs); a
+    nanosecond-carrying value already is nanos; an Int stays itself."""
+    cat, toks = v
+    if cat != "duration":
+        return toks
+    return _paren(tokenize("unix_micros(timestamp_micros(0) + ")
+                  + _paren(toks) + tokenize(") * 1000"))
+
+
+def _wire(ns: list[Tok]) -> list[Tok]:
+    """The wire form of a nanosecond-carrying Duration: Spark's interval
+    type holds microseconds, so a division-derived Duration travels as a
+    one-field struct of int64 nanos (Go's own representation,
+    time.Duration = int64 ns), which the sinks render through
+    ``go_duration_ns``."""
+    return (tokenize("named_struct('__dur_ns', CAST(") + _paren(ns)
+            + tokenize(" AS BIGINT))"))
+
+
+def _plain(v: _Value) -> list[Tok]:
+    """Tokens of a value under an operator with no nanosecond overload:
+    a nanosecond-carrying Duration degrades to a µs interval there."""
+    cat, toks = v
+    if cat != "durns":
+        return toks
+    return _paren(_paren(toks)
+                  + tokenize(" DIV 1000 * INTERVAL 1 MICROSECOND"))
+
+
+def _arith_step(l: _Value, op: str, sep: list[Tok], r: _Value) -> _Value:
+    """One left-associative step of the dialect's arithmetic overload
+    set (functions.go:156-355, typed in logical/function.go:24-132).
+    ``sep`` is the operator with its
+    original whitespace. Operators no overload covers keep their text
+    and, outside plain numeric/Duration arithmetic, an unknown result
+    category."""
+    (lc, lt), (rc, rt) = l, r
+    cats = {lc, rc}
+    durs = {"duration", "durns"}
+    if op == "+" and "string" in cats:
+        return "string", _call("concat", _plain(l), _plain(r))
+    if op == "*" and cats == {"string", "int"}:
+        return "string", (_call("repeat", lt, rt) if lc == "string"
+                          else _call("repeat", rt, lt))
+    if op == "/" and lc == rc == "int":
+        return "int", lt + _DIV + rt
+    if op in ("/", "DIV") and lc in durs and rc == "int":
+        # Duration / Int divides the int64 nanos (Go truncation), so
+        # INTERVAL 7 SECOND / 3 = 2.333333333s
+        return "durns", _ns(l) + _DIV + rt
+    if op == "/" and cats <= durs:
+        return "float", _ns(l) + sep + _ns(r)  # Duration / Duration ratio
+    if "durns" in cats and ((op in ("+", "-") and cats <= durs)
+                            or (op == "*" and cats == {"durns", "int"})):
+        return "durns", _ns(l) + sep + _ns(r)
+    if cats <= {"int", "float"}:
+        cat = "float" if "float" in cats else "int"
+    elif ((op in ("+", "-") and cats == {"duration"})
+          or (op == "*" and cats in ({"duration", "int"},
+                                     {"duration", "float"}))
+          or (op == "/" and lc == "duration" and rc == "float")):
+        cat = "duration"  # Spark's own µs interval arithmetic
+    else:
+        cat = None
+    return cat, _plain(l) + sep + _plain(r)
+
+
+def _fold_chain(toks: list[Tok], spans: list[tuple[int, int]],
+                ops: list[int], types: dict[str, str]) -> list[Tok]:
+    """Fold one maximal flat chain ``operand (op operand)*`` (inclusive
+    token spans, operator indices): the multiplicative level first,
+    then the additive one, each strictly left-associative like the
+    reference — ``10s - 3s + 7s/3`` is ``(10s - 3s) + (7s/3)``."""
+    vals = [_chain_value(toks, s, e, types) for s, e in spans]
+    names = ["DIV" if toks[o].kind == "IDENT" else toks[o].text
+             for o in ops]
+    seps = [toks[a[1] + 1:b[0]] for a, b in zip(spans, spans[1:])]
+    terms = []  # (index of the additive operator before it, value)
+    lead, cur = None, vals[0]
+    for k, right in enumerate(vals[1:]):
+        if names[k] in ("+", "-"):
+            terms.append((lead, cur))
+            lead, cur = k, right
         else:
-            return "skip"
-
-    def step_mul(left, op, right):
-        (lc, lt), (rc, rt) = left, right
-        if lc == "durns" and op in ("/", "DIV") and rc == "int":
-            # Duration / Int divides the int64 nanos (Go truncation)
-            return ("durns", paren(lt + sp + [Tok("IDENT", "DIV")]
-                                   + sp + rt))
-        if op == "*" and {lc, rc} == {"durns", "int"}:
-            return ("durns", paren(lt + sp + [Tok("OP", "*")] + sp + rt))
-        if lc == rc == "durns" and op == "/":
-            return ("float", paren(lt + sp + [Tok("OP", "/")] + sp + rt))
-        if lc == rc == "int" and op in ("/", "DIV"):
-            return ("int", paren(lt + sp + [Tok("IDENT", "DIV")]
-                                 + sp + rt))
-        if {lc, rc} <= {"int", "float"} and op in ("*", "/", "%"):
-            cat = "float" if ("float" in (lc, rc) or op == "/") else "int"
-            return (cat, paren(lt + sp + [Tok("OP", op)] + sp + rt))
-        return None
-
-    def step_add(left, op, right):
-        (lc, lt), (rc, rt) = left, right
-        if lc == rc == "durns":
-            return ("durns", paren(lt + sp + [Tok("OP", op)] + sp + rt))
-        if {lc, rc} <= {"int", "float"}:
-            cat = "float" if "float" in (lc, rc) else "int"
-            return (cat, paren(lt + sp + [Tok("OP", op)] + sp + rt))
-        return None
-
-    op_texts = ["DIV" if toks[i].kind == "IDENT" else toks[i].text
-                for i in op_idx]
-    # multiplicative level first, grouped into additive terms
-    terms = []
-    pending_add = None
-    cur = vals[0]
-    for op, right in zip(op_texts, vals[1:]):
-        if op in ("*", "/", "%", "DIV"):
-            cur = step_mul(cur, op, right)
-            if cur is None:
-                return "skip"
-        else:
-            terms.append((pending_add, cur))
-            pending_add, cur = op, right
-    terms.append((pending_add, cur))
+            cur = _arith_step(cur, names[k], seps[k], right)
+    terms.append((lead, cur))
     acc = terms[0][1]
-    for op, right in terms[1:]:
-        acc = step_add(acc, op, right)
-        if acc is None:
-            return "skip"
-    cat, body = acc
-    return _durns_wrap(body) if cat == "durns" else body
+    for k, right in terms[1:]:
+        acc = _arith_step(acc, names[k], seps[k], right)
+    return _wire(acc[1]) if acc[0] == "durns" else acc[1]
 
 
-def _rewrite_arith_pass(toks: list[Tok], types: dict[str, str],
-                        ops: tuple[str, ...]) -> list[Tok]:
-    while True:
-        sig = _sig(toks)
-        hit = None
-        chain_repl = None
-        for si in range(1, len(sig) - 1):
-            i = sig[si]
-            if toks[i].kind != "OP" or toks[i].text not in ops:
-                continue
-            op = toks[i].text
-            lcat = _operand_cat(toks, sig, si - 1, "left", types)
-            rcat = _operand_cat(toks, sig, si + 1, "right", types)
-            if op == "+" and "string" in (lcat, rcat):
-                hit = (si, "concat")
-            elif op == "*" and ((lcat == "string" and rcat == "int")
-                                or (lcat == "int" and rcat == "string")):
-                hit = (si, "repeat" if lcat == "string" else "repeat_swap")
-            elif op == "/" and lcat == rcat == "int":
-                hit = (si, "div")
-            elif op == "/" and lcat == "duration" and rcat == "int":
-                # Duration / Int → nanosecond-carrying Duration: Go
-                # divides the int64 nanos (functions.go:320-355), so
-                # INTERVAL 7 SECOND / 3 = 2.333333333s — µs intervals
-                # would lose the last 3 digits (DEVIATIONS 5, closed)
-                hit = (si, "durdiv_int")
-            elif "durns" in (lcat, rcat) and (
-                    (op in ("+", "-") and {lcat, rcat} <= {"durns",
-                                                           "duration"})
-                    or (op == "*" and {lcat, rcat} == {"durns", "int"})
-                    or (op == "/" and lcat == "durns"
-                        and rcat in ("int", "duration", "durns"))
-                    or (op == "/" and lcat == "duration"
-                        and rcat == "durns")):
-                # closure of the nanos-carrying duration over the
-                # reference's Duration overload set — but ONLY once
-                # each durns operand is a pure marker (a still-mixed
-                # chain collapses in a later fixpoint round)
-                try:
-                    lspan = toks[_primary_start(toks, sig[si - 1]):
-                                 sig[si - 1] + 1]
-                    rspan = toks[sig[si + 1]:
-                                 _primary_end(toks, sig[si + 1]) + 1]
-                except ValueError:
-                    continue
-                if (lcat != "durns" or _durns_inner(lspan) is not None) \
-                        and (rcat != "durns"
-                             or _durns_inner(rspan) is not None):
-                    hit = (si, f"durns:{op}:{lcat}:{rcat}")
-            elif op == "/" and lcat == rcat == "duration":
-                # Duration / Duration → Float ratio (functions.go
-                # Duration overloads; arithmetic golden: INTERVAL 7
-                # SECOND / INTERVAL 3 SECOND = 2.333…). Spark can't
-                # divide intervals — convert each to exact micros via
-                # epoch shift, then BIGINT/BIGINT → DOUBLE.
-                hit = (si, "durdiv")
-            if hit and (hit[1] in ("durdiv_int", "durdiv")
-                        or hit[1].startswith("durns:")):
-                # Duration hit inside a longer flat chain: pairwise
-                # rewriting here would steal only the adjacent primary
-                # and break left associativity (`10s - 3s + 7s/3`
-                # must not become `10s - (3s + 7s/3)`). Fold the
-                # whole chain in one precedence-aware rewrite; if an
-                # operand hasn't collapsed yet, pairwise is only safe
-                # at the chain-leftmost operator.
-                chain = _collect_arith_chain(toks, i)
-                if chain is not None and len(chain[0]) > 2:
-                    folded = _fold_duration_chain(toks, chain[0],
-                                                  chain[1], types)
-                    if folded != "skip":
-                        lo, hi = chain[0][0][0], chain[0][-1][1]
-                        chain_repl = (lo, hi, folded)
-                        break
-                    if chain[1][0] != i:
-                        hit = None
-                        continue
-            if hit:
-                break
-        if chain_repl is not None:
-            lo, hi, folded = chain_repl
-            toks = toks[:lo] + folded + toks[hi + 1:]
-            continue
-        if hit is None:
-            return toks
-        si, kind = hit
-        lstart = _primary_start(toks, sig[si - 1])
-        rend = _primary_end(toks, sig[si + 1])
-        left = toks[lstart:sig[si - 1] + 1]
-        right = toks[sig[si + 1]:rend + 1]
-        if kind == "div":
-            repl = left + [Tok("WS", " "), Tok("IDENT", "DIV"), Tok("WS", " ")] + right
-        elif kind == "durdiv_int":
-            # nanos(left) DIV right — Go's integer division of int64
-            # nanos (truncation toward zero, like Spark's DIV)
-            repl = _durns_wrap(
-                _ns_of_duration(left)
-                + [Tok("WS", " "), Tok("IDENT", "DIV"), Tok("WS", " ")]
-                + right)
-        elif kind.startswith("durns:"):
-            _, op, lcat, rcat = kind.split(":")
-            lns = (_durns_inner(left) if lcat == "durns"
-                   else (_ns_of_duration(left) if lcat == "duration"
-                         else left))
-            rns = (_durns_inner(right) if rcat == "durns"
-                   else (_ns_of_duration(right) if rcat == "duration"
-                         else right))
-            if op == "/" and rcat == "int":
-                repl = _durns_wrap(lns + [Tok("WS", " "),
-                                          Tok("IDENT", "DIV"),
-                                          Tok("WS", " ")] + rns)
-            elif op == "/":
-                # ns/ns ratio → Float (Duration/Duration overload)
-                repl = ([Tok("PUNCT", "(")] + lns
-                        + [Tok("WS", " "), Tok("OP", "/"), Tok("WS", " ")]
-                        + rns + [Tok("PUNCT", ")")])
-            else:  # + - * stay nanos-carrying
-                repl = _durns_wrap(lns + [Tok("WS", " "), Tok("OP", op),
-                                          Tok("WS", " ")] + rns)
-        elif kind == "durdiv":
-            def _micros(span: list[Tok]) -> list[Tok]:
-                return ([Tok("IDENT", "unix_micros"), Tok("PUNCT", "("),
-                         Tok("IDENT", "timestamp_micros"), Tok("PUNCT", "("),
-                         Tok("NUMBER", "0"), Tok("PUNCT", ")"),
-                         Tok("WS", " "), Tok("OP", "+"), Tok("WS", " ")]
-                        + span + [Tok("PUNCT", ")")])
-            repl = ([Tok("PUNCT", "(")] + _micros(left)
-                    + [Tok("WS", " "), Tok("OP", "/"), Tok("WS", " ")]
-                    + _micros(right) + [Tok("PUNCT", ")")])
+def _rewrite_arith_overloads(toks: list[Tok],
+                             types: dict[str, str]) -> list[Tok]:
+    """The reference's arithmetic overloads (functions.go:156-355):
+    String+String → concat, String*Int / Int*String → repeat, Int/Int
+    → integer division, and the Duration set over int64 nanos. Literals
+    pin the overload directly; column operands resolve through
+    ``types`` (view schemas collected post-``_rewrite_file_tables`` —
+    the Spark-side equivalent of the reference's typecheck,
+    logical/function.go:24-132). Each paren level is folded before the
+    level that contains it, so an enclosing chain types an inner result
+    from its rewritten text; each maximal flat chain folds once."""
+    level: list[Tok] = []
+    i = 0
+    while i < len(toks):
+        if toks[i].kind == "PUNCT" and toks[i].text in ("(", "["):
+            close = _match_paren(toks, i, 1)
+            level += ([toks[i]]
+                      + _rewrite_arith_overloads(toks[i + 1:close], types)
+                      + [toks[close]])
+            i = close + 1
         else:
-            fn = "concat" if kind == "concat" else "repeat"
-            if kind == "repeat_swap":
-                left, right = right, left  # repeat(str, n)
-            repl = ([Tok("IDENT", fn), Tok("PUNCT", "(")] + left
-                    + [Tok("PUNCT", ","), Tok("WS", " ")] + right
-                    + [Tok("PUNCT", ")")])
-        toks = toks[:lstart] + repl + toks[rend + 1:]
-
-
-def _expand_durns_markers(toks: list[Tok]) -> list[Tok]:
-    """``__DURNS__( e )`` → ``named_struct('__dur_ns', CAST((e) AS
-    BIGINT))`` — the wire form of a nanosecond-carrying Duration.
-    Spark's interval type holds microseconds, so division-derived
-    durations travel as a 1-field struct of int64 nanos (Go's own
-    representation, time.Duration = int64 ns); the sinks detect the
-    field and render through go_duration_ns. Expanded LAST so the
-    arithmetic passes can still compose markers structurally."""
-    while True:
-        idx = next((i for i, t in enumerate(toks)
-                    if t.kind == "IDENT" and t.text == "__DURNS__"), None)
-        if idx is None:
-            return toks
-        j = idx + 1
-        while toks[j].kind in ("WS", "COMMENT"):
-            j += 1
-        close = _match_paren(toks, j, 1)
-        inner = toks[j + 1:close]
-        repl = ([Tok("IDENT", "named_struct"), Tok("PUNCT", "("),
-                 Tok("STRING", "'__dur_ns'"), Tok("PUNCT", ","),
-                 Tok("WS", " "), Tok("IDENT", "CAST"), Tok("PUNCT", "("),
-                 Tok("PUNCT", "(")] + inner
-                + [Tok("PUNCT", ")"), Tok("WS", " "), Tok("IDENT", "AS"),
-                   Tok("WS", " "), Tok("IDENT", "BIGINT"),
-                   Tok("PUNCT", ")"), Tok("PUNCT", ")")])
-        toks = toks[:idx] + repl + toks[close + 1:]
+            level.append(toks[i])
+            i += 1
+    out: list[Tok] = []
+    i = 0
+    while i < len(level):
+        end = (None if level[i].kind in ("WS", "COMMENT")
+               else _operand_end(level, i))
+        if end is None:
+            out.append(level[i])
+            i += 1
+            continue
+        spans, ops = [(i, end)], []
+        while True:
+            op = _next_sig(level, spans[-1][1])
+            if op is None or not _is_arith_op_tok(level, op):
+                break
+            s = _next_sig(level, op)
+            e = None if s is None else _operand_end(level, s)
+            if e is None:
+                break
+            ops.append(op)
+            spans.append((s, e))
+        out += (_fold_chain(level, spans, ops, types) if ops
+                else level[i:end + 1])
+        i = spans[-1][1] + 1
+    return out
 
 
 def _rewrite_float_literals(toks: list[Tok]) -> list[Tok]:
@@ -2129,7 +1922,6 @@ def transpile(spark: SparkSession, sql: str,
     toks = _rewrite_arith_overloads(toks, types)
     toks = _rewrite_functions(toks, types)
     toks = _rewrite_float_literals(toks)
-    toks = _expand_durns_markers(toks)
     toks = _rewrite_ordinal_keys(toks)
     depth = 0
     for t in toks:

@@ -647,6 +647,27 @@ def test_trigger_counting_stream_stream_inner(spark, tmp_path, capsys):
     assert "{+0001-01-01T00:00:00Z| 1, 4, 4, 8 |}" in out
 
 
+def test_stream_stream_join_without_trigger(spark, tmp_path, capsys):
+    """A plain stream-stream inner join with no trigger runs: Spark
+    refuses it in update mode, so the generic route starts it in
+    append mode and prints the joined row."""
+    import json
+
+    da = tmp_path / "ssj_a"
+    db = tmp_path / "ssj_b"
+    da.mkdir()
+    db.mkdir()
+    (da / "a.json").write_text('{"k": 1, "v": 5}\n{"k": 2, "v": 6}\n')
+    (db / "b.json").write_text('{"k": 1, "w": 7}\n')
+    rc = main([f"SELECT s.k AS k, v, w FROM '{da}/*.json?tail=true' s "
+               f"JOIN '{db}/*.json?tail=true' t ON s.k = t.k",
+               "--output", "json"])
+    cap = capsys.readouterr()
+    assert rc == 0, cap.err
+    rows = [json.loads(ln) for ln in cap.out.splitlines() if ln.strip()]
+    assert rows == [{"k": 1, "v": 5, "w": 7}]
+
+
 def test_trigger_counting_stream_stream_outer_falls_back(
         spark, tmp_path, capsys):
     """LEFT OUTER stream-stream needs watermark time bounds by

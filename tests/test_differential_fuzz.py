@@ -285,9 +285,9 @@ def _exprs() -> st.SearchStrategy:
 @example(expr=("(abs(3 - 5) / 2)", "(abs(3 - 5) // 2)"))
 @example(expr=("((CASE WHEN 0 >= 0 THEN 1 ELSE 0 END) / 2)",
                "((CASE WHEN 0 >= 0 THEN 1 ELSE 0 END) // 2)"))
-# regression: a mixed durns chain (marker + interval) must collapse
-# via the additive pass BEFORE an enclosing durns division consumes
-# it (found by this fuzzer)
+# regression: a nanosecond Duration chain inside parens (division
+# result + interval) must fold before the enclosing Duration ratio
+# reads it (found by this fuzzer)
 @example(expr=(
     "(((INTERVAL 1 SECOND / 1) + INTERVAL 1 SECOND) / INTERVAL 1 SECOND)",
     "(CAST((((1 * 1000000000::BIGINT) // 1) + 1 * 1000000000::BIGINT)"

@@ -97,9 +97,7 @@ def test_math(spark):
 # ---------------------------------------------------------- panic.in
 
 def test_panic(spark):
-    from octosql_spark.functions import call
-    from pyspark.sql import functions as F
-    df = spark.range(1).select(call("panic", F.lit("boom")).alias("x"))
+    df = run_query(spark, "SELECT panic('boom')").df
     with pytest.raises(Exception, match="boom"):
         df.collect()
 

@@ -278,9 +278,12 @@ def test_transpile_is_pure_rewrite(spark):
 def test_overload_precedence_mul_before_add(spark, views):
     # 'x' + s * 2 must be concat('x', repeat(s, 2)) — multiplicative
     # overloads resolve before additive ones (functions.go:156-355)
-    df = q(spark, "SELECT 'x' + 'ab' * 2 AS v, 'ab' * 2 + 'x' AS w")
+    df = q(spark, "SELECT 'x' + 'ab' * 2 AS v, 'ab' * 2 + 'x' AS w, "
+                  "'a' + 'b' * (7 / 3) AS u")
     r = df.collect()[0]
     assert r.v == "xabab" and r.w == "ababx"
+    # one chain mixing concat, repeat and Int/Int division
+    assert r.u == "abb"
 
 
 def test_dual_table(spark):
@@ -313,18 +316,25 @@ def test_duration_division_nanosecond_closure(spark, views):
     assert cell("SELECT INTERVAL 1 SECOND / 3") == "333.333333ms"
     assert cell("SELECT INTERVAL 1 MILLISECOND / 3") == "333.333µs"
     assert cell("SELECT INTERVAL 1 MICROSECOND / 3") == "333ns"
-    # fuzz-found: a mixed durns chain consumed by ANOTHER durns rule
-    # before the additive pass collapsed it (fixpoint + purity gate)
+    # fuzz-found: a nanosecond chain inside parens feeds an enclosing
+    # Duration overload
     assert cell("SELECT ((INTERVAL 1 SECOND / 1) + INTERVAL 1 SECOND)"
                 " / INTERVAL 1 SECOND") == "2"
     assert cell("SELECT ((INTERVAL 6 SECOND / 4 + INTERVAL 1 SECOND)"
                 " * 2) + INTERVAL 1 SECOND") == "6s"
+    # Time + a nanosecond Duration has no nanosecond overload: the
+    # Duration degrades to a µs interval (Spark timestamps carry µs)
+    assert cell("SELECT time_to_unix(time_from_unix(10)"
+                " + INTERVAL 7 SECOND / 7)") == "11"
+    assert cell("SELECT time_to_unix(time_from_unix(10)"
+                " + (INTERVAL 7 SECOND / 7))") == "11"
 
 
 def test_duration_chain_left_associativity(spark, views):
     """Flat chains evaluate strictly left-assoc within a precedence
-    level (functions.go:156-355): a durns rewrite at a non-leftmost
-    operator must not regroup the chain (advisor-found r4)."""
+    level (functions.go:156-355): folding a Duration operator that is
+    not the chain's leftmost must not regroup the chain (advisor-found
+    r4)."""
     from octosql_spark.sinks import _native_value
 
     def cell(sql):
@@ -341,11 +351,17 @@ def test_duration_chain_left_associativity(spark, views):
     # mixed precedence folds in one pass: 0.5s + 6s
     assert cell("SELECT INTERVAL 1 SECOND / 2"
                 " + INTERVAL 3 SECOND * 2") == "6.5s"
-    # deep alternating nesting converges without a fixed round cap
+    # a Duration/Duration ratio is a Float operand of the rest
+    assert cell("SELECT INTERVAL 7 SECOND / INTERVAL 2 SECOND + 1") \
+        == _native_value(4.5)
+    # deep alternating nesting: each paren level folds once
     deep = "INTERVAL 1 SECOND / 1"
     for _ in range(10):
         deep = f"(({deep}) + INTERVAL 1 SECOND / 1) * 1"
     assert cell(f"SELECT ({deep}) / INTERVAL 1 SECOND") == "11"
+    for _ in range(10):
+        deep = f"(({deep}) + INTERVAL 1 SECOND / 1) * 1"
+    assert cell(f"SELECT ({deep}) / INTERVAL 1 SECOND") == "21"
 
 
 def test_overload_category_polymorphic_functions(spark):
