@@ -183,7 +183,7 @@ def _run_scoped(args, spark, stagers) -> int:
 
     if args.explain:
         print("-- transpiled Spark SQL --")
-        print(res.spark_sql)
+        print(res.sql)
         print("-- physical plan --")
         df.explain("formatted" if args.explain > 1 else "simple")
         if not args.describe:
@@ -356,23 +356,19 @@ def _diagnose_parse_error(spark, res, ex, query: str = "") -> str | None:
     from pyspark.sql import functions as F
 
     from octosql_spark.sources.files import read_lines
+    from octosql_spark.sql.transpiler import parse_table_ref
 
     # Attribution: when several views exist, probe the ones whose
     # path appears in the exception text FIRST — a parse error in one
     # file must not be reported against a different view that merely
     # iterates earlier and also fails Go's decoder
     ex_text = str(ex)
-    views = sorted(
-        res.views.items(),
-        key=lambda kv: (os.path.basename(
-            str(kv[1]).strip().strip("'\"").split("?")[0]) not in ex_text))
+    refs = sorted(((view, *parse_table_ref(desc))
+                   for view, desc in res.views.items()),
+                  key=lambda ref: os.path.basename(ref[1]) not in ex_text)
     from octosql_spark.sources.files import _local_csv_files
 
-    for view, desc in views:
-        desc = str(desc).strip().strip("'\"")
-        path, _, qs = desc.partition("?")
-        opts = dict(p.split("=", 1) for p in qs.split("&")
-                    if "=" in p) if qs else {}
+    for view, path, opts in refs:
         if "://" in path:
             continue
         # absolutize against the CALLER's cwd (like read_file does):
@@ -390,8 +386,7 @@ def _diagnose_parse_error(spark, res, ex, query: str = "") -> str | None:
             if low.endswith((".csv", ".tsv")):
                 msg = _csv_decode_error(
                     fpath, "\t" if low.endswith(".tsv") else ",",
-                    header=str(opts.get("header",
-                                        "true")).lower() != "false")
+                    header=opts.get("header", True) is not False)
                 if msg:
                     return f"couldn't run query: {chain}{msg}"
                 continue
@@ -449,7 +444,7 @@ def _try_exact_counting(res, spec):
     from octosql_spark.streaming.counting_trigger import (
         counting_trigger_aggregate)
 
-    shape = group_by_shape(res.spark_sql)
+    shape = group_by_shape(res.sql)
     if shape is None:
         return None
     keys, cols, aggs = {}, [], []

@@ -8,8 +8,9 @@ Catalyst (SURVEY.md §3 "Spark mapping of the lifecycle"):
 | OctoSQL                      | rewritten to                           |
 |------------------------------|----------------------------------------|
 | ``obj->field``, ``obj->*``   | ``obj.field`` / ``obj.*`` (parser/parser.go:745-751) |
-| ``x::Int``                   | ``TRY_CAST(x AS BIGINT)`` (TypeAssertion — README.md:271) |
-| ``a ~ 'p'`` / ``~*`` / ``!~``| ``regexp_like`` forms (functions.go:591-668) |
+| ``x::Int``, ``x`` a primary¹ | ``TRY_CAST(x AS BIGINT)`` (TypeAssertion — README.md:271) |
+| ``x ~ y`` / ``~*`` / ``!~``, primaries¹ ``x``, ``y`` | ``regexp_like`` forms (functions.go:591-668) |
+| ``x[i]``, ``x`` a primary¹   | ``get(x, i)``: 0-based, NULL out of range (functions.go:1014-1042) |
 | ``int(x)/float(x)/string(x)``| ``TRY_CAST``/``CAST`` (functions.go:900-1013) |
 | ``len(x)``                   | ``length(x)`` (strings; `size` for arrays) |
 | ``+ * /`` on String/Int/Duration | ``concat``/``repeat``/``DIV``; Duration over int64 nanos (functions.go:156-355) |
@@ -19,6 +20,11 @@ Catalyst (SURVEY.md §3 "Spark mapping of the lifecycle"):
 | ``FROM file.csv`` etc.       | temp view over the file reader (cmd/root.go:192-217) |
 | ``tumble(...)/max_diff_watermark(...)/poll(...)`` TVFs | materialized to temp views via octosql_spark.tvf |
 | ``TRIGGER ...`` clause       | stripped; returned as metadata (→ streaming output modes) |
+
+¹ A primary is a name or dotted chain, a literal (``INTERVAL 1 DAY``,
+``DATE '…'``, ``TIMESTAMP '…'``), a call, ``f(x) OVER (…)``, a paren
+group or ``CASE … END``, with its own ``[i]``/``::T`` suffixes applied
+in text order: ``arr[1]::Int`` is ``TRY_CAST(get(arr, 1) AS BIGINT)``.
 
 ``range(a,b)`` passes through (Spark SQL TVF, column aliased ``i`` by
 the reference — use ``range(a,b) t(i)``-style aliasing or ``id``).
@@ -47,14 +53,16 @@ _CLAUSE_KW = {"WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "ON", "USING",
               "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "OUTER", "CROSS",
               "UNION", "INTERSECT", "EXCEPT", "TRIGGER", "STREAM", "LOOKUP"}
 
-# Keywords that can directly precede a parenthesized expression and
-# must NOT be mistaken for a function-call name when walking back to a
-# primary's start (`SELECT (x) * 2`: the left operand of `*` is `(x)`,
-# not `SELECT(x)`).
-_NONCALL_KW = _CLAUSE_KW | {
+# Keywords that never start an operand: `SELECT (x) * 2` reads the
+# operand `(x)`, not a call `SELECT(x)`. CASE does start one.
+_NOT_OPERAND_KW = _CLAUSE_KW | {
     "SELECT", "FROM", "AND", "OR", "NOT", "WHEN", "THEN", "ELSE", "END",
-    "CASE", "AS", "BY", "IN", "DISTINCT", "ALL", "VALUES", "THEN", "SET",
+    "AS", "BY", "IN", "DISTINCT", "ALL", "VALUES", "SET",
     "BETWEEN", "LIKE", "ILIKE", "IS", "OF", "WITH"}
+
+# keywords of a typed literal `DATE '2020-01-01'`, one primary typed
+# like a column of that type
+_TYPED_LITERALS = ("DATE", "TIMESTAMP", "TIMESTAMP_NTZ", "TIMESTAMP_LTZ")
 
 _view_counter = itertools.count()
 
@@ -67,120 +75,122 @@ class Transpiled:
     polls: list[str] = field(default_factory=list)  # poll() intervals
     event_time: str | None = None  # column carrying record event time
     ordered: bool = False  # top-level ORDER BY (sink must not re-sort)
+    df: DataFrame | None = None  # set by run_query
 
 
 def _sig(toks: list[Tok]) -> list[int]:
     return [i for i, t in enumerate(toks) if t.kind not in ("WS", "COMMENT")]
 
 
-def _match_paren(toks: list[Tok], open_i: int, direction: int = 1) -> int:
-    """Index of the paren/bracket matching toks[open_i]
-    ('('/'[' forward, ')'/']' backward)."""
-    opens, closes = ("(", "["), (")", "]")
+def _next_sig(toks: list[Tok], i: int) -> int | None:
+    i += 1
+    while i < len(toks) and toks[i].kind in ("WS", "COMMENT"):
+        i += 1
+    return i if i < len(toks) else None
+
+
+def _match_paren(toks: list[Tok], open_i: int) -> int:
+    """Index of the ')'/']' matching the '('/'[' at toks[open_i]."""
     depth = 0
-    i = open_i
-    while 0 <= i < len(toks):
-        if toks[i].text in opens:
+    for i in range(open_i, len(toks)):
+        if toks[i].text in ("(", "["):
             depth += 1
-        elif toks[i].text in closes:
+        elif toks[i].text in (")", "]"):
             depth -= 1
         if depth == 0:
             return i
-        i += direction
     raise ValueError("unbalanced parentheses")
 
 
-def _primary_start(toks: list[Tok], end_i: int) -> int:
-    """Start index of the primary expression ending at ``end_i``
-    (inclusive): walks back over dotted chains, subscripts and one
-    balanced paren/bracket group. Used to find the left operand of
-    postfix/infix rewrites (``::``, ``~``)."""
-    i = end_i
-    while True:
+def _case_end(toks: list[Tok], case_i: int) -> int:
+    """Index of the END that closes the CASE at ``case_i``."""
+    depth = 0
+    i = case_i
+    while i < len(toks):
         t = toks[i]
-        if t.text in (")", "]"):
-            i = _match_paren(toks, i, -1)
-            # function call: name before '('
-            j = i - 1
-            while j >= 0 and toks[j].kind in ("WS", "COMMENT"):
-                j -= 1
-            if (j >= 0 and toks[j].kind in ("IDENT", "QIDENT")
-                    and toks[i].text == "("
-                    and toks[j].text.upper() not in _NONCALL_KW):
-                i = j
-        elif t.kind not in ("IDENT", "QIDENT", "STRING", "NUMBER"):
-            raise ValueError(f"cannot find primary start at {t.text!r}")
-        # `INTERVAL <n> <unit>` literal: extend back from the unit
-        if t.kind == "IDENT":
-            back = []
-            j = i - 1
-            while j >= 0 and len(back) < 2:
-                if toks[j].kind not in ("WS", "COMMENT"):
-                    back.append(j)
-                j -= 1
-            if (len(back) == 2 and toks[back[0]].kind in ("NUMBER", "STRING")
-                    and toks[back[1]].is_kw("INTERVAL")):
-                return back[1]
-        # extend over `.`-qualified prefix
-        j = i - 1
-        while j >= 0 and toks[j].kind in ("WS", "COMMENT"):
-            j -= 1
-        if j >= 1 and toks[j].text == "." and toks[j].kind == "PUNCT":
-            k = j - 1
-            while k >= 0 and toks[k].kind in ("WS", "COMMENT"):
-                k -= 1
-            if k >= 0 and toks[k].kind in ("IDENT", "QIDENT") or toks[k].text in (")", "]"):
-                i = k
-                continue
-        return i
+        if t.kind == "PUNCT" and t.text in ("(", "["):
+            i = _match_paren(toks, i)
+        elif t.is_kw("CASE"):
+            depth += 1
+        elif t.is_kw("END"):
+            depth -= 1
+            if depth == 0:
+                return i
+        i += 1
+    raise ValueError("CASE without END")
+
+
+def _starts_operand(t: Tok) -> bool:
+    return ((t.kind in ("IDENT", "QIDENT", "STRING", "NUMBER") or t.text == "(")
+            and not t.is_kw(*_NOT_OPERAND_KW))
 
 
 def _primary_end(toks: list[Tok], start_i: int) -> int:
     """End index (inclusive) of the primary expression starting at
-    ``start_i``: identifier chains, literals, one call/paren group."""
+    ``start_i``: an identifier chain, a literal (``INTERVAL <n> <unit>``
+    and the typed ``DATE '…'`` forms included), a call with its
+    ``OVER (…)``/``OVER w`` clause, a paren group or ``CASE … END``,
+    then its ``[i]``, ``::T`` and ``.field`` suffixes."""
     i = start_i
     while True:
-        t = toks[i]
+        t, j = toks[i], _next_sig(toks, i)
         if t.text == "(":
-            i = _match_paren(toks, i, 1)
+            i = _match_paren(toks, i)
+        elif t.is_kw("CASE"):
+            i = _case_end(toks, i)
         elif t.is_kw("INTERVAL"):
-            # `INTERVAL <n> <unit>` literal spans three tokens
-            j = i + 1
-            while j < len(toks) and toks[j].kind in ("WS", "COMMENT"):
-                j += 1
-            if j < len(toks) and toks[j].kind in ("NUMBER", "STRING"):
-                k = j + 1
-                while k < len(toks) and toks[k].kind in ("WS", "COMMENT"):
-                    k += 1
-                if k < len(toks) and toks[k].kind == "IDENT":
-                    return k
-            raise ValueError("malformed INTERVAL literal")
+            k = None if j is None else _next_sig(toks, j)
+            if (k is None or toks[j].kind not in ("NUMBER", "STRING")
+                    or toks[k].kind != "IDENT"):
+                raise ValueError("malformed INTERVAL literal")
+            i = k
+        elif t.is_kw(*_TYPED_LITERALS) and j is not None \
+                and toks[j].kind == "STRING":
+            i = j
         elif t.kind in ("IDENT", "QIDENT"):
-            # maybe a call: peek next significant
-            j = i + 1
-            while j < len(toks) and toks[j].kind in ("WS", "COMMENT"):
-                j += 1
-            if j < len(toks) and toks[j].text == "(":
-                i = _match_paren(toks, j, 1)
-        elif t.kind in ("STRING", "NUMBER"):
-            pass
-        else:
+            if j is not None and toks[j].text == "(":
+                i = _match_paren(toks, j)
+                over = _next_sig(toks, i)
+                if over is not None and toks[over].is_kw("OVER"):
+                    w = _next_sig(toks, over)
+                    if w is None:
+                        raise ValueError("OVER without a window")
+                    i = _match_paren(toks, w) if toks[w].text == "(" else w
+        elif t.kind not in ("STRING", "NUMBER"):
             raise ValueError(f"cannot find primary end at {t.text!r}")
-        # continue over `.field` / subscript
-        j = i + 1
-        while j < len(toks) and toks[j].kind in ("WS", "COMMENT"):
-            j += 1
-        if j < len(toks) and toks[j].text == ".":
-            k = j + 1
-            while k < len(toks) and toks[k].kind in ("WS", "COMMENT"):
-                k += 1
-            if k < len(toks) and toks[k].kind in ("IDENT", "QIDENT"):
-                i = k
-                continue
-        if j < len(toks) and toks[j].text == "[":
-            i = _match_paren(toks, j, 1)
+        j = _next_sig(toks, i)
+        while j is not None and toks[j].text in ("[", "::"):
+            i = (_match_paren(toks, j) if toks[j].text == "["
+                 else _next_sig(toks, j))  # the type name
+            if i is None:
+                raise ValueError("`::` without a type")
+            j = _next_sig(toks, i)
+        k = None if j is None or toks[j].text != "." else _next_sig(toks, j)
+        if k is None or toks[k].kind not in ("IDENT", "QIDENT"):
+            return i
+        i = k
+
+
+def _inner_first(toks: list[Tok], rewrite) -> list[Tok]:
+    """``toks`` with the inside of each bracket group and each
+    ``CASE … END`` replaced by ``rewrite`` of it. A pass that recurses
+    through this rewrites every inner level before the level holding
+    it, so it reads each operand from rewritten text."""
+    level: list[Tok] = []
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        if t.kind == "PUNCT" and t.text in ("(", "["):
+            close = _match_paren(toks, i)
+        elif t.is_kw("CASE"):
+            close = _case_end(toks, i)
+        else:
+            level.append(t)
+            i += 1
             continue
-        return i
+        level += [t] + rewrite(toks[i + 1:close]) + [toks[close]]
+        i = close + 1
+    return level
 
 
 # ------------------------------------------------------------ rewrites
@@ -201,8 +211,8 @@ _STRICT_TYPEOF = {
 }
 
 
-def _rewrite_type_assert(toks: list[Tok], strict: bool = False,
-                         variant_cols: set[str] | None = None) -> list[Tok]:
+def _type_assert(expr: list[Tok], type_tok: Tok, strict: bool,
+                 variant_cols: set[str]) -> list[Tok]:
     """``expr::Type`` → ``TRY_CAST(expr AS T)``. The reference's
     ``::`` is a runtime TypeAssertion (execution/expressions.go:91-102):
     keep the value if it already has the type, else NULL — never error.
@@ -219,75 +229,95 @@ def _rewrite_type_assert(toks: list[Tok], strict: bool = False,
     carriers, plus a ``schema_of_variant`` guard for Spark 4 VARIANT
     union carriers — so ``'42'::Int`` is NULL, exactly the reference's
     no-conversion TypeCast (execution/expressions.go:79-102)."""
-    while True:
-        sig = _sig(toks)
-        hit = None
-        for si, i in enumerate(sig):
-            if toks[i].kind == "OP" and toks[i].text == "::":
-                hit = (si, i)
-                break
-        if hit is None:
-            return toks
-        si, i = hit
-        type_i = sig[si + 1]
-        tname = toks[type_i].text.lower()
-        sqlt = _TYPE_MAP.get(tname, toks[type_i].text.upper())
-        start = _primary_start(toks, sig[si - 1])
-        expr = toks[start:i]
-        if strict and sqlt in _STRICT_TYPEOF:
-            e = "".join(t.text for t in expr)
-            base = e.rsplit(".", 1)[-1].strip().strip('`"').lower()
-            if variant_cols and base in variant_cols:
-                # VARIANT union carrier: runtime type lives in the
-                # variant itself
-                guarded = (
-                    f"CASE WHEN schema_of_variant({e}) = '{sqlt}' "
-                    f"THEN try_variant_get({e}, '$', '{sqlt}') END")
-            else:
-                names = ", ".join(f"'{n}'" for n in _STRICT_TYPEOF[sqlt])
-                guarded = (
-                    f"CASE WHEN typeof({e}) IN ({names}) "
-                    f"THEN CAST({e} AS {sqlt}) END")
-            toks = (toks[:start] + [Tok("PUNCT", "(")] + tokenize(guarded)
-                    + [Tok("PUNCT", ")")] + toks[type_i + 1:])
-            continue
-        toks = (toks[:start]
-                + [Tok("IDENT", "TRY_CAST"), Tok("PUNCT", "(")]
-                + expr
+    sqlt = _TYPE_MAP.get(type_tok.text.lower(), type_tok.text.upper())
+    if not (strict and sqlt in _STRICT_TYPEOF):
+        return ([Tok("IDENT", "TRY_CAST"), Tok("PUNCT", "(")] + expr
                 + [Tok("WS", " "), Tok("IDENT", "AS"), Tok("WS", " "),
-                   Tok("IDENT", sqlt), Tok("PUNCT", ")")]
-                + toks[type_i + 1:])
+                   Tok("IDENT", sqlt), Tok("PUNCT", ")")])
+    e = "".join(t.text for t in expr)
+    base = e.rsplit(".", 1)[-1].strip().strip('`"').lower()
+    if base in variant_cols:
+        # VARIANT union carrier: runtime type lives in the variant itself
+        guarded = (f"CASE WHEN schema_of_variant({e}) = '{sqlt}' "
+                   f"THEN try_variant_get({e}, '$', '{sqlt}') END")
+    else:
+        names = ", ".join(f"'{n}'" for n in _STRICT_TYPEOF[sqlt])
+        guarded = (f"CASE WHEN typeof({e}) IN ({names}) "
+                   f"THEN CAST({e} AS {sqlt}) END")
+    return _paren(tokenize(guarded))
 
 
-def _rewrite_regex_ops(toks: list[Tok]) -> list[Tok]:
-    while True:
-        sig = _sig(toks)
-        hit = None
-        for si, i in enumerate(sig):
-            if toks[i].kind == "OP" and toks[i].text in ("~", "~*", "!~", "!~*"):
-                hit = (si, i)
-                break
-        if hit is None:
-            return toks
-        si, i = hit
-        op = toks[i].text
-        lstart = _primary_start(toks, sig[si - 1])
-        rstart = sig[si + 1]
-        rend = _primary_end(toks, rstart)
-        left = toks[lstart:sig[si - 1] + 1]
-        right = toks[rstart:rend + 1]
-        out: list[Tok] = []
-        if op.startswith("!"):
-            out += [Tok("IDENT", "NOT"), Tok("WS", " ")]
-        out += [Tok("IDENT", "regexp_like"), Tok("PUNCT", "(")] + left + [Tok("PUNCT", ","), Tok("WS", " ")]
-        if op.endswith("*"):
-            out += [Tok("IDENT", "concat"), Tok("PUNCT", "("),
-                    Tok("STRING", "'(?i)'"), Tok("PUNCT", ","), Tok("WS", " ")] \
-                + right + [Tok("PUNCT", ")")]
+def _regex_match(op: str, left: list[Tok], right: list[Tok]) -> list[Tok]:
+    """``left ~ right`` and its ``~*``/``!~``/``!~*`` forms →
+    ``regexp_like`` (functions.go:591-668)."""
+    if op.endswith("*"):
+        right = _call("concat", [Tok("STRING", "'(?i)'")], right)
+    out = _call("regexp_like", left, right)
+    return [Tok("IDENT", "NOT"), Tok("WS", " ")] + out if op[0] == "!" else out
+
+
+def _postfix_operand(toks: list[Tok], i: int, strict: bool,
+                     variant_cols: set[str]):
+    """(tokens, end) of the operand at ``i``: one primary whose ``[i]``
+    and ``::T`` suffixes are rewritten in text order. ``x[i]`` →
+    ``get(x, i)``, the reference's 0-based, NULL-on-out-of-range
+    indexing (functions.go:1014-1042); Spark's native ``[]`` is also
+    0-based but *errors* out-of-range under ANSI mode. None when no
+    primary starts at ``i``."""
+    if not _starts_operand(toks[i]):
+        return None
+    try:
+        end = _primary_end(toks, i)
+    except ValueError:
+        return None
+    # a `[` or `::` outside the primary's parens is one of its suffixes
+    # (a CASE body holds none: it was rewritten first)
+    val: list[Tok] = []
+    j = i
+    while j <= end:
+        t = toks[j]
+        if t.text == "[":
+            close = _match_paren(toks, j)
+            val = _call("get", val, toks[j + 1:close])
+        elif t.kind == "OP" and t.text == "::":
+            close = _next_sig(toks, j)
+            val = _type_assert(val, toks[close], strict, variant_cols)
         else:
-            out += right
-        out += [Tok("PUNCT", ")")]
-        toks = toks[:lstart] + out + toks[rend + 1:]
+            close = _match_paren(toks, j) if t.text == "(" else j
+            val += toks[j:close + 1]
+        j = close + 1
+    return val, end
+
+
+def _rewrite_postfix_ops(toks: list[Tok], strict: bool,
+                         variant_cols: set[str]) -> list[Tok]:
+    """The dialect's ``x[i]``, ``x::T`` and ``a ~ p`` operators in one
+    forward pass per level, inner levels first. Each operand is read
+    once with ``_primary_end``; ``~`` then takes the operand before it
+    and the one after it, left-associatively."""
+    level = _inner_first(
+        toks, lambda inner: _rewrite_postfix_ops(inner, strict, variant_cols))
+    out: list[Tok] = []
+    i = 0
+    while i < len(level):
+        read = _postfix_operand(level, i, strict, variant_cols)
+        if read is None:
+            out.append(level[i])
+            i += 1
+            continue
+        val, end = read
+        while (op := _next_sig(level, end)) is not None \
+                and level[op].kind == "OP" \
+                and level[op].text in ("~", "~*", "!~", "!~*"):
+            s = _next_sig(level, op)
+            right = None if s is None else _postfix_operand(
+                level, s, strict, variant_cols)
+            if right is None:
+                break
+            val, end = _regex_match(level[op].text, val, right[0]), right[1]
+        out += val
+        i = end + 1
+    return out
 
 
 def _is_call(toks: list[Tok], sig: list[int], si: int) -> bool:
@@ -310,34 +340,6 @@ _CAST_FNS = {"int": ("TRY_CAST", "BIGINT"), "float": ("TRY_CAST", "DOUBLE"),
 _SIMPLE_RENAMES = {"now": "current_timestamp",
                    "time_from_unix": "timestamp_seconds",
                    "panic": "raise_error"}
-
-
-def _split_call_args(toks: list[Tok], open_i: int, close_i: int) -> list[tuple[int, int]]:
-    """Token spans (start, end inclusive) of a call's top-level args,
-    whitespace-trimmed."""
-    spans: list[tuple[int, int]] = []
-    depth = 0
-    start = open_i + 1
-    for j in range(open_i + 1, close_i):
-        t = toks[j]
-        if t.text in ("(", "["):
-            depth += 1
-        elif t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.text == ",":
-            spans.append((start, j - 1))
-            start = j + 1
-    if start <= close_i - 1:
-        spans.append((start, close_i - 1))
-    trimmed = []
-    for s, e in spans:
-        while s <= e and toks[s].kind in ("WS", "COMMENT"):
-            s += 1
-        while e >= s and toks[e].kind in ("WS", "COMMENT"):
-            e -= 1
-        if s <= e:
-            trimmed.append((s, e))
-    return trimmed
 
 
 def _rewrite_functions(toks: list[Tok],
@@ -366,7 +368,7 @@ def _rewrite_functions(toks: list[Tok],
                         and toks[sig[si - 2]].text.upper() == "CAST"):
                     continue
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
+                close_i = _match_paren(toks, open_i)
                 toks = (toks[:i]
                         + [Tok("IDENT", "CAST"), Tok("PUNCT", "("),
                            Tok("IDENT", name), Tok("PUNCT", "(")]
@@ -381,8 +383,8 @@ def _rewrite_functions(toks: list[Tok],
                 # len dispatches on the runtime type in the reference
                 # (functions.go:774-831): String → length, List → size.
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
-                args = _split_call_args(toks, open_i, close_i)
+                close_i = _match_paren(toks, open_i)
+                args = _split_top_commas(toks, open_i + 1, close_i - 1)
                 cat = (_span_cat(toks, *args[0], types)
                        if len(args) == 1 else None)
                 toks[i] = Tok("IDENT",
@@ -392,7 +394,7 @@ def _rewrite_functions(toks: list[Tok],
             if name in _CAST_FNS:
                 fn, sqlt = _CAST_FNS[name]
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
+                close_i = _match_paren(toks, open_i)
                 toks = (toks[:i]
                         + [Tok("IDENT", fn), Tok("PUNCT", "(")]
                         + toks[open_i + 1:close_i]
@@ -405,8 +407,8 @@ def _rewrite_functions(toks: list[Tok],
                 # 0-based in the dialect (functions.go:720-739) →
                 # Spark's 1-based substring: bump arg 2 by one.
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
-                args = _split_call_args(toks, open_i, close_i)
+                close_i = _match_paren(toks, open_i)
+                args = _split_top_commas(toks, open_i + 1, close_i - 1)
                 if len(args) >= 2:
                     s, e = args[1]
                     toks = (toks[:i] + [Tok("IDENT", "substring")]
@@ -424,7 +426,7 @@ def _rewrite_functions(toks: list[Tok],
                 # (functions.go:757-772). Spark's builtin position is
                 # (needle, haystack) 1-based / 0-on-absent.
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
+                close_i = _match_paren(toks, open_i)
                 toks = (toks[:i]
                         + [Tok("PUNCT", "("), Tok("IDENT", "nullif"),
                            Tok("PUNCT", "("), Tok("IDENT", "instr"),
@@ -440,7 +442,7 @@ def _rewrite_functions(toks: list[Tok],
                 break
             if name == "time_to_unix":
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
+                close_i = _match_paren(toks, open_i)
                 toks = (toks[:i]
                         + [Tok("IDENT", "unix_timestamp"), Tok("PUNCT", "("),
                            Tok("IDENT", "CAST"), Tok("PUNCT", "(")]
@@ -455,7 +457,7 @@ def _rewrite_functions(toks: list[Tok],
                 toks[i] = Tok("IDENT", "try_to_timestamp")
                 # translate a literal Go layout 2nd arg, if present
                 open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i, 1)
+                close_i = _match_paren(toks, open_i)
                 depth = 0
                 for j in range(open_i, close_i):
                     if toks[j].text == "(":
@@ -472,36 +474,6 @@ def _rewrite_functions(toks: list[Tok],
                 changed = True
                 break
     return toks
-
-
-def _rewrite_subscript(toks: list[Tok]) -> list[Tok]:
-    """``list[i]`` → ``get(list, i)`` — the reference's 0-based,
-    NULL-on-out-of-range indexing (functions.go:1014-1042). Spark's
-    native ``[]`` is also 0-based but *errors* out-of-range under
-    ANSI mode; ``get()`` matches the reference exactly."""
-    while True:
-        sig = _sig(toks)
-        hit = None
-        for si in range(1, len(sig)):
-            i = sig[si]
-            if toks[i].text != "[" or toks[i].kind != "PUNCT":
-                continue
-            prev = toks[sig[si - 1]]
-            if prev.kind in ("IDENT", "QIDENT") or prev.text in (")", "]"):
-                hit = (si, i)
-                break
-        if hit is None:
-            return toks
-        si, i = hit
-        close = _match_paren(toks, i, 1)
-        start = _primary_start(toks, sig[si - 1])
-        toks = (toks[:start]
-                + [Tok("IDENT", "get"), Tok("PUNCT", "(")]
-                + toks[start:i]
-                + [Tok("PUNCT", ","), Tok("WS", " ")]
-                + toks[i + 1:close]
-                + [Tok("PUNCT", ")")]
-                + toks[close + 1:])
 
 
 def _type_cat(dtype: str) -> str:
@@ -796,9 +768,17 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
                 and toks[sig[1]].kind in ("NUMBER", "STRING")
                 and toks[sig[2]].kind == "IDENT"):
             return "duration"
+        if t.is_kw(*_TYPED_LITERALS) and len(sig) == 2 \
+                and toks[sig[1]].kind == "STRING":
+            return _type_cat(t.text)
         if len(sig) == 1:
             return types.get(t.text.strip('"`').lower())
-        if toks[sig[1]].text == "(" and sig[-1] == _match_paren(toks, sig[1], 1):
+        if toks[sig[1]].text == "(":
+            close = _match_paren(toks, sig[1])
+            if close != sig[-1]:  # a windowed call is typed as its call
+                over = _next_sig(toks, close)
+                return (_span_cat(toks, lo, close, types)
+                        if toks[over].is_kw("OVER") else None)
             if t.text.lower() in ("try_cast", "cast"):
                 # ``x::T`` has already been rewritten to
                 # TRY_CAST(x AS T) by the time the overload pass runs,
@@ -810,7 +790,7 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
             if fname == "named_struct" and toks[sig[2]].text == "'__dur_ns'":
                 return "durns"  # the wire form ``_wire`` emits
             if fname in _POLY_FNS:
-                args = _split_call_args(toks, sig[1], sig[-1])
+                args = _split_top_commas(toks, sig[1] + 1, sig[-1] - 1)
                 if not args:
                     return None
                 if fname == "nullif":
@@ -832,16 +812,9 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
                for i in sig):
             return types.get(toks[sig[-1]].text.strip('"`').lower())
         return None
-    if t.text == "(" and sig[-1] == _match_paren(toks, sig[0], 1):
+    if t.text == "(" and sig[-1] == _match_paren(toks, sig[0]):
         return _span_cat(toks, sig[0] + 1, sig[-1] - 1, types)
     return None
-
-
-def _next_sig(toks: list[Tok], i: int) -> int | None:
-    i += 1
-    while i < len(toks) and toks[i].kind in ("WS", "COMMENT"):
-        i += 1
-    return i if i < len(toks) else None
 
 
 def _is_arith_op_tok(toks: list[Tok], i: int) -> bool:
@@ -858,9 +831,7 @@ def _operand_end(toks: list[Tok], i: int) -> int | None:
         i = _next_sig(toks, i)
         if i is None:
             return None
-    t = toks[i]
-    if not (t.kind in ("IDENT", "QIDENT", "STRING", "NUMBER")
-            or t.text == "(") or t.is_kw(*_NONCALL_KW):
+    if not _starts_operand(toks[i]):
         return None
     try:
         return _primary_end(toks, i)
@@ -1001,26 +972,16 @@ def _rewrite_arith_overloads(toks: list[Tok],
     pin the overload directly; column operands resolve through
     ``types`` (view schemas collected post-``_rewrite_file_tables`` —
     the Spark-side equivalent of the reference's typecheck,
-    logical/function.go:24-132). Each paren level is folded before the
-    level that contains it, so an enclosing chain types an inner result
-    from its rewritten text; each maximal flat chain folds once."""
-    level: list[Tok] = []
-    i = 0
-    while i < len(toks):
-        if toks[i].kind == "PUNCT" and toks[i].text in ("(", "["):
-            close = _match_paren(toks, i, 1)
-            level += ([toks[i]]
-                      + _rewrite_arith_overloads(toks[i + 1:close], types)
-                      + [toks[close]])
-            i = close + 1
-        else:
-            level.append(toks[i])
-            i += 1
+    logical/function.go:24-132). Each paren level and CASE body is
+    folded before the level that contains it, so an enclosing chain
+    types an inner result from its rewritten text; each maximal flat
+    chain folds once."""
+    level = _inner_first(
+        toks, lambda inner: _rewrite_arith_overloads(inner, types))
     out: list[Tok] = []
     i = 0
     while i < len(level):
-        end = (None if level[i].kind in ("WS", "COMMENT")
-               else _operand_end(level, i))
+        end = _operand_end(level, i)
         if end is None:
             out.append(level[i])
             i += 1
@@ -1308,8 +1269,8 @@ def _classify_item(toks: list[Tok], s: int, e: int):
     base = fn[:-9] if fn.endswith("_distinct") else fn
     if (toks[isig[0]].kind == "IDENT" and base in _AGG_FNS
             and len(isig) >= 2 and toks[isig[1]].text == "("
-            and _match_paren(toks, isig[1], 1) == isig[-1]):
-        args = _split_call_args(toks, isig[1], isig[-1])
+            and _match_paren(toks, isig[1]) == isig[-1]):
+        args = _split_top_commas(toks, isig[1] + 1, isig[-1] - 1)
         aggname = fn
         argname = None
         if len(args) == 1:
@@ -1501,7 +1462,7 @@ def group_by_shape(sql: str) -> GroupBy | None:
         if kind == "agg":
             isig = [j for j in range(s, e + 1)
                     if toks[j].kind not in ("WS", "COMMENT")]
-            args = _split_call_args(toks, isig[1], isig[-1])
+            args = _split_top_commas(toks, isig[1] + 1, isig[-1] - 1)
             if len(args) == 1:
                 item.agg = (detail[0], text(*args[0]))
         items.append(item)
@@ -1569,14 +1530,19 @@ def _read_table_ref(spark: SparkSession, desc: str) -> DataFrame | None:
         if db is not None:
             return jdbc_table(spark, db, desc.split(".", 1)[1])
     from octosql_spark.sources import read_file
-    path_opts = desc.split("?", 1)
-    path = path_opts[0]
-    opts: dict[str, object] = {}
-    if len(path_opts) == 2:
-        for kv in path_opts[1].split("&"):
-            k, _, v = kv.partition("=")
-            opts[k] = {"true": True, "false": False}.get(v.lower(), v)
+    path, opts = parse_table_ref(desc)
     return read_file(spark, path, **opts)
+
+
+def parse_table_ref(desc: str) -> tuple[str, dict[str, object]]:
+    """A file table reference ``path?k=v&…`` → (path, options);
+    ``true``/``false`` values become booleans."""
+    path, _, query = desc.partition("?")
+    opts: dict[str, object] = {}
+    for kv in query.split("&") if query else ():
+        k, _, v = kv.partition("=")
+        opts[k] = {"true": True, "false": False}.get(v.lower(), v)
+    return path, opts
 
 
 def _rewrite_file_tables(spark: SparkSession, toks: list[Tok],
@@ -1702,7 +1668,7 @@ def _rewrite_tvfs(spark: SparkSession, toks: list[Tok], out: Transpiled) -> list
             return toks
         si, i = target
         open_i = sig[si + 1]
-        close_i = _match_paren(toks, open_i, 1)
+        close_i = _match_paren(toks, open_i)
         name = toks[i].text.lower()
         args, kwargs = _parse_tvf_args(toks[open_i + 1:close_i])
 
@@ -1915,10 +1881,7 @@ def transpile(spark: SparkSession, sql: str,
     # analysis-time illegal on non-variant input)
     variant_cols = {c.lower() for rel in relations
                     for c, d in rel.dtypes or () if d == "variant"}
-    toks = _rewrite_type_assert(toks, strict=strict_assert,
-                                variant_cols=variant_cols)
-    toks = _rewrite_regex_ops(toks)
-    toks = _rewrite_subscript(toks)
+    toks = _rewrite_postfix_ops(toks, strict_assert, variant_cols)
     toks = _rewrite_arith_overloads(toks, types)
     toks = _rewrite_functions(toks, types)
     toks = _rewrite_float_literals(toks)
@@ -1935,19 +1898,8 @@ def transpile(spark: SparkSession, sql: str,
     return out
 
 
-@dataclass
-class QueryResult:
-    df: DataFrame
-    triggers: list[str]
-    spark_sql: str
-    polls: list[str] = field(default_factory=list)
-    views: dict[str, str] = field(default_factory=dict)
-    event_time: str | None = None
-    ordered: bool = False
-
-
 def run_query(spark: SparkSession, sql: str,
-              strict_assert: bool = False) -> QueryResult:
+              strict_assert: bool = False) -> Transpiled:
     """Full front-end: OctoSQL dialect in, DataFrame out.
 
     ``strict_assert`` switches ``x::T`` from TRY_CAST conversion to
@@ -1962,6 +1914,5 @@ def run_query(spark: SparkSession, sql: str,
     # concurrent plain-Spark-SQL callers on the same session (the
     # checker's thread pool flaked a positional GROUP BY 1 entry).
     t = transpile(spark, sql, strict_assert=strict_assert)
-    df = spark.sql(t.sql)
-    return QueryResult(df, t.triggers, t.sql, t.polls,
-                       t.views, t.event_time, t.ordered)
+    t.df = spark.sql(t.sql)
+    return t

@@ -60,10 +60,14 @@ def _ints(depth: int) -> st.SearchStrategy:
         # CASE / COALESCE / NULLIF are front-end constructs, not
         # registry functions — fuzz them through the transpiler (the
         # condition is an inline int comparison: _bools here would
-        # recurse back into _ints(1) while strategies construct)
-        st.tuples(sub, sub, sub, sub).map(
-            lambda t: (f"(CASE WHEN {t[0][0]} >= {t[1][0]} THEN {t[2][0]}"
-                       f" ELSE {t[3][0]} END)",
+        # recurse back into _ints(1) while strategies construct). The
+        # dialect side is drawn bare or parenthesized: a bare CASE must
+        # be one operand of the operator around it
+        st.tuples(sub, sub, sub, sub, st.booleans()).map(
+            lambda t: ((f"CASE WHEN {t[0][0]} >= {t[1][0]} THEN {t[2][0]}"
+                        f" ELSE {t[3][0]} END") if t[4] else
+                       (f"(CASE WHEN {t[0][0]} >= {t[1][0]} THEN {t[2][0]}"
+                        f" ELSE {t[3][0]} END)"),
                        f"(CASE WHEN {t[0][1]} >= {t[1][1]} THEN {t[2][1]}"
                        f" ELSE {t[3][1]} END)")),
         st.tuples(sub, sub, sub).map(

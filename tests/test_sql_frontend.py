@@ -21,6 +21,15 @@ def q(spark, sql):
     return run_query(spark, sql).df
 
 
+@pytest.fixture(scope="module")
+def shape_t(spark):
+    """One row whose columns the operand shapes below read."""
+    spark.sql("SELECT 3 AS k, array('7','8') AS arr, "
+              "TIMESTAMP '2020-01-01 00:00:00' AS ts") \
+        .createOrReplaceTempView("shape_t")
+    return "shape_t"
+
+
 # --------------------------------------------------------- pure dialect
 
 def test_arrow_and_star(spark, views):
@@ -32,10 +41,17 @@ def test_arrow_and_star(spark, views):
     assert df2.columns == ["key"]
 
 
-def test_type_assertion(spark, views):
+def test_type_assertion(spark, views, shape_t):
     df = q(spark, "SELECT ('42'::Int + 1) AS x, 3.5::String AS s")
     r = df.collect()[0]
     assert r.x == 43 and r.s == "3.5"
+    # `::` applies to the whole primary before it: CASE … END, a typed
+    # literal, a windowed call
+    r = q(spark, "SELECT CASE WHEN k > 0 THEN 1 ELSE 0 END::String AS c, "
+                 "DATE '2020-01-01'::String AS d, "
+                 "SUM(k) OVER (ORDER BY ts)::String AS w "
+                 "FROM shape_t").collect()[0]
+    assert (r.c, r.d, r.w) == ("1", "2020-01-01", "3")
 
 
 def test_type_assertion_strict(spark, views):
@@ -88,6 +104,13 @@ def test_regex_operators(spark, views):
     assert {r.r_name for r in df.collect()} == {"ASIA"}
     df = q(spark, "SELECT r_name FROM region WHERE r_name !~ 'A$'")
     assert {r.r_name for r in df.collect()} == {"EUROPE", "MIDDLE EAST"}
+    # the left operand is the whole primary: CASE … END (its branches
+    # rewritten too), a typed literal
+    r = q(spark, "SELECT CASE WHEN k > 0 THEN 'a' ELSE 'b' END ~ 'a' AS c, "
+                 "TIMESTAMP '2020-01-01 00:00:00' ~ '2020' AS t, "
+                 "CASE WHEN '7'::Int > 0 THEN 'a' + 'b' ELSE 'c' END ~ 'a' "
+                 "AS i FROM shape_t").collect()[0]
+    assert (r.c, r.t, r.i) == (True, True, True)
 
 
 def test_conversion_functions(spark, views):
@@ -132,6 +155,10 @@ def test_subscript_zero_based(spark, views):
     # [] is 0-based in the reference (functions.go:1014-1042)
     df = q(spark, "SELECT array('a','b','c')[1] AS x")
     assert df.collect()[0].x == "b"
+    # a subscripted operand takes the postfix/infix operator after it
+    r = q(spark, "SELECT arr[1]::Int AS i, array('a','b')[1] ~ 'b' AS m "
+                 "FROM shape_t").collect()[0]
+    assert (r.i, r.m) == (8, True)
 
 
 # ----------------------------------------------------------- file tables
@@ -275,7 +302,7 @@ def test_transpile_is_pure_rewrite(spark):
     assert "->" not in t.sql and "::" not in t.sql and "~" not in t.sql
 
 
-def test_overload_precedence_mul_before_add(spark, views):
+def test_overload_precedence_mul_before_add(spark, views, shape_t):
     # 'x' + s * 2 must be concat('x', repeat(s, 2)) — multiplicative
     # overloads resolve before additive ones (functions.go:156-355)
     df = q(spark, "SELECT 'x' + 'ab' * 2 AS v, 'ab' * 2 + 'x' AS w, "
@@ -284,6 +311,12 @@ def test_overload_precedence_mul_before_add(spark, views):
     assert r.v == "xabab" and r.w == "ababx"
     # one chain mixing concat, repeat and Int/Int division
     assert r.u == "abb"
+    # a bare CASE is one String operand; a typed literal is a Time
+    # operand, with no overload for Time + Duration
+    r = q(spark, "SELECT 'x' + CASE WHEN k > 0 THEN 'a' ELSE 'b' END AS c, "
+                 "DATE '2020-01-01' + INTERVAL 1 DAY AS d "
+                 "FROM shape_t").collect()[0]
+    assert r.c == "xa" and str(r.d) == "2020-01-02"
 
 
 def test_dual_table(spark):
@@ -476,6 +509,14 @@ def test_aggregate_results_keep_int_division(spark):
     r2 = run_query(spark, "SELECT (SELECT MAX(v) FROM aggdiv_t) / 3 "
                           "AS q FROM aggdiv_t").df.collect()[0]
     assert r2.q == 1 and isinstance(r2.q, int)
+    # a bare CASE and a windowed call keep their Int category, and a
+    # CASE body is folded too
+    r3 = run_query(spark, "SELECT CASE WHEN v > 0 THEN 1 ELSE 0 END / 2 "
+                          "AS c, SUM(v) OVER () / 2 AS w, "
+                          "CASE WHEN 1 > 0 THEN 7 / 2 ELSE 0 END AS i "
+                          "FROM aggdiv_t").df.collect()[0]
+    assert (r3.c, r3.w, r3.i) == (0, 3, 3)
+    assert all(isinstance(x, int) for x in r3)
 
 
 def test_scalar_subquery_category_safe_fallbacks(spark):
