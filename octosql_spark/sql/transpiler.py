@@ -12,11 +12,16 @@ Catalyst (SURVEY.md §3 "Spark mapping of the lifecycle"):
 | ``x ~ y`` / ``~*`` / ``!~``, primaries¹ ``x``, ``y`` | ``regexp_like`` forms (functions.go:591-668) |
 | ``x[i]``, ``x`` a primary¹   | ``get(x, i)``: 0-based, NULL out of range (functions.go:1014-1042) |
 | ``int(x)/float(x)/string(x)``| ``TRY_CAST``/``CAST`` (functions.go:900-1013) |
+| ``floor(x)``, ``ceil(x)``    | ``CAST(floor(x) AS DOUBLE)``: Float like the reference (functions.go:394-412) |
 | ``len(x)``                   | ``length(x)`` (strings; `size` for arrays) |
+| ``substr(s, i[, n])``        | ``substring(s, (i)+1[, n])``: 0-based (functions.go:720-739) |
+| ``position(s, sub)``         | ``instr`` made 0-based, NULL when absent (functions.go:757-772) |
+| ``count_distinct(x)`` etc.   | ``count(DISTINCT x)``; also ``sum``/``avg``/``array_agg`` (aggregates/table.go) |
 | ``+ * /`` on String/Int/Duration | ``concat``/``repeat``/``DIV``; Duration over int64 nanos (functions.go:156-355) |
 | ``now()``                    | ``current_timestamp()``                |
 | ``parse_time(s)``            | ``try_to_timestamp(s)`` (+Go-layout translation) |
 | ``time_from_unix/to_unix``   | ``timestamp_seconds``/``unix_timestamp`` |
+| ``x -> e``, ``(x, y) -> e``  | kept as written: a Spark lambda in a higher-order function's function argument |
 | ``FROM file.csv`` etc.       | temp view over the file reader (cmd/root.go:192-217) |
 | ``tumble(...)/max_diff_watermark(...)/poll(...)`` TVFs | materialized to temp views via octosql_spark.tvf |
 | ``TRIGGER ...`` clause       | stripped; returned as metadata (→ streaming output modes) |
@@ -171,6 +176,24 @@ def _primary_end(toks: list[Tok], start_i: int) -> int:
         i = k
 
 
+def _group_end(toks: list[Tok], i: int) -> int:
+    """End of the bracket group or ``CASE … END`` that starts at
+    ``toks[i]``; ``i`` itself for any other token."""
+    t = toks[i]
+    if t.kind == "PUNCT" and t.text in ("(", "["):
+        return _match_paren(toks, i)
+    return _case_end(toks, i) if t.is_kw("CASE") else i
+
+
+def _level(toks: list[Tok], lo: int, hi: int):
+    """Indices in ``toks[lo..hi]`` outside its bracket groups and
+    ``CASE … END`` bodies: each group is one step, at its opener."""
+    i = lo
+    while i <= hi:
+        yield i
+        i = _group_end(toks, i) + 1
+
+
 def _inner_first(toks: list[Tok], rewrite) -> list[Tok]:
     """``toks`` with the inside of each bracket group and each
     ``CASE … END`` replaced by ``rewrite`` of it. A pass that recurses
@@ -179,25 +202,42 @@ def _inner_first(toks: list[Tok], rewrite) -> list[Tok]:
     level: list[Tok] = []
     i = 0
     while i < len(toks):
-        t = toks[i]
-        if t.kind == "PUNCT" and t.text in ("(", "["):
-            close = _match_paren(toks, i)
-        elif t.is_kw("CASE"):
-            close = _case_end(toks, i)
-        else:
-            level.append(t)
-            i += 1
-            continue
-        level += [t] + rewrite(toks[i + 1:close]) + [toks[close]]
+        close = _group_end(toks, i)
+        level += ([toks[i]] if close == i else
+                  [toks[i]] + rewrite(toks[i + 1:close]) + [toks[close]])
         i = close + 1
     return level
 
 
 # ------------------------------------------------------------ rewrites
 
+# Spark higher-order functions → the argument positions that take a
+# lambda, ``x -> …`` or ``(x, y) -> …``
+_LAMBDA_ARGS = {
+    **dict.fromkeys(("transform", "filter", "exists", "forall",
+                     "map_filter", "transform_keys", "transform_values",
+                     "array_sort"), (1,)),
+    "zip_with": (2,), "map_zip_with": (2,),
+    "aggregate": (2, 3), "reduce": (2, 3)}
+
+
 def _rewrite_arrow(toks: list[Tok]) -> list[Tok]:
-    return [Tok("PUNCT", ".") if t.kind == "OP" and t.text == "->" else t
-            for t in toks]
+    """``obj->field`` → ``obj.field``; the arrow of a lambda argument
+    of a Spark higher-order function stays."""
+    lambdas = set()
+    for i, t in enumerate(toks):
+        at = _LAMBDA_ARGS.get(t.text.lower()) if t.kind == "IDENT" else None
+        j = at and _next_sig(toks, i)
+        if not j or toks[j].text != "(":
+            continue
+        args = _split_top_commas(toks, j + 1, _match_paren(toks, j) - 1)
+        for k in at:
+            if k < len(args):
+                s = args[k][0]
+                lambdas.add(_next_sig(toks, _match_paren(toks, s)
+                                      if toks[s].text == "(" else s))
+    return [Tok("PUNCT", ".") if t.kind == "OP" and t.text == "->"
+            and i not in lambdas else t for i, t in enumerate(toks)]
 
 
 # runtime typeof() names that satisfy each assertion target — the
@@ -320,160 +360,93 @@ def _rewrite_postfix_ops(toks: list[Tok], strict: bool,
     return out
 
 
-def _is_call(toks: list[Tok], sig: list[int], si: int) -> bool:
-    """significant index si is an IDENT directly followed by '(' and
-    not preceded by '.' (qualified name) — i.e. a function call."""
-    i = sig[si]
-    if toks[i].kind != "IDENT":
-        return False
-    if si + 1 >= len(sig) or toks[sig[si + 1]].text != "(":
-        return False
-    if si > 0 and toks[sig[si - 1]].text == ".":
-        return False
-    return True
+def _wrap(head: str, tail: str):
+    """A call rule that writes ``head``, the argument text, ``tail``."""
+    h, t = tokenize(head), tokenize(tail)
+    return lambda inner, args, types: h + inner + t
 
 
-_CAST_FNS = {"int": ("TRY_CAST", "BIGINT"), "float": ("TRY_CAST", "DOUBLE"),
-             "string": ("CAST", "STRING")}
-# panic(msg) fails the query at runtime (functions.go catalog;
-# tests/scenarios/functions/panic golden) → Spark's raise_error
-_SIMPLE_RENAMES = {"now": "current_timestamp",
-                   "time_from_unix": "timestamp_seconds",
-                   "panic": "raise_error"}
+def _len(inner: list[Tok], args, types: dict[str, str]) -> list[Tok]:
+    # len dispatches on the runtime type in the reference
+    # (functions.go:774-831): String → length, List → size
+    cat = _span_cat(inner, *args[0], types) if len(args) == 1 else None
+    return [Tok("IDENT", "size" if cat in ("array", "map")
+                else "length")] + _paren(inner)
 
 
-def _rewrite_functions(toks: list[Tok],
-                       types: dict[str, str] | None = None) -> list[Tok]:
-    types = types or {}
-    changed = True
-    while changed:
-        changed = False
-        sig = _sig(toks)
-        for si in range(len(sig)):
-            if not _is_call(toks, sig, si):
-                continue
-            i = sig[si]
-            name = toks[i].text.lower()
-            if name in _SIMPLE_RENAMES:
-                toks[i] = Tok("IDENT", _SIMPLE_RENAMES[name])
-                changed = True
-                break
-            if name in ("floor", "ceil"):
-                # the reference returns FLOAT (functions.go:394-412);
-                # Spark's floor/ceil return LONG → wrap in CAST(..
-                # AS DOUBLE). Guard: skip a call we already wrapped
-                # (its immediate parent is the CAST we emitted).
-                if (si >= 2 and toks[sig[si - 1]].text == "("
-                        and toks[sig[si - 2]].kind == "IDENT"
-                        and toks[sig[si - 2]].text.upper() == "CAST"):
-                    continue
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                toks = (toks[:i]
-                        + [Tok("IDENT", "CAST"), Tok("PUNCT", "("),
-                           Tok("IDENT", name), Tok("PUNCT", "(")]
-                        + toks[open_i + 1:close_i]
-                        + [Tok("PUNCT", ")"), Tok("WS", " "),
-                           Tok("IDENT", "AS"), Tok("WS", " "),
-                           Tok("IDENT", "DOUBLE"), Tok("PUNCT", ")")]
-                        + toks[close_i + 1:])
-                changed = True
-                break
-            if name == "len":
-                # len dispatches on the runtime type in the reference
-                # (functions.go:774-831): String → length, List → size.
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                args = _split_top_commas(toks, open_i + 1, close_i - 1)
-                cat = (_span_cat(toks, *args[0], types)
-                       if len(args) == 1 else None)
-                toks[i] = Tok("IDENT",
-                              "size" if cat in ("array", "map") else "length")
-                changed = True
-                break
-            if name in _CAST_FNS:
-                fn, sqlt = _CAST_FNS[name]
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                toks = (toks[:i]
-                        + [Tok("IDENT", fn), Tok("PUNCT", "(")]
-                        + toks[open_i + 1:close_i]
-                        + [Tok("WS", " "), Tok("IDENT", "AS"), Tok("WS", " "),
-                           Tok("IDENT", sqlt), Tok("PUNCT", ")")]
-                        + toks[close_i + 1:])
-                changed = True
-                break
-            if name == "substr":
-                # 0-based in the dialect (functions.go:720-739) →
-                # Spark's 1-based substring: bump arg 2 by one.
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                args = _split_top_commas(toks, open_i + 1, close_i - 1)
-                if len(args) >= 2:
-                    s, e = args[1]
-                    toks = (toks[:i] + [Tok("IDENT", "substring")]
-                            + toks[i + 1:s]
-                            + [Tok("PUNCT", "(")] + toks[s:e + 1]
-                            + [Tok("PUNCT", ")"), Tok("OP", "+"),
-                               Tok("NUMBER", "1")]
-                            + toks[e + 1:])
-                else:
-                    toks[i] = Tok("IDENT", "substring")
-                changed = True
-                break
-            if name == "position":
-                # position(haystack, needle) → 0-based, NULL-on-absent
-                # (functions.go:757-772). Spark's builtin position is
-                # (needle, haystack) 1-based / 0-on-absent.
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                toks = (toks[:i]
-                        + [Tok("PUNCT", "("), Tok("IDENT", "nullif"),
-                           Tok("PUNCT", "("), Tok("IDENT", "instr"),
-                           Tok("PUNCT", "(")]
-                        + toks[open_i + 1:close_i]
-                        + [Tok("PUNCT", ")"), Tok("PUNCT", ","),
-                           Tok("WS", " "), Tok("NUMBER", "0"),
-                           Tok("PUNCT", ")"), Tok("WS", " "),
-                           Tok("OP", "-"), Tok("WS", " "),
-                           Tok("NUMBER", "1"), Tok("PUNCT", ")")]
-                        + toks[close_i + 1:])
-                changed = True
-                break
-            if name == "time_to_unix":
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                toks = (toks[:i]
-                        + [Tok("IDENT", "unix_timestamp"), Tok("PUNCT", "("),
-                           Tok("IDENT", "CAST"), Tok("PUNCT", "(")]
-                        + toks[open_i + 1:close_i]
-                        + [Tok("WS", " "), Tok("IDENT", "AS"), Tok("WS", " "),
-                           Tok("IDENT", "TIMESTAMP"), Tok("PUNCT", ")"),
-                           Tok("PUNCT", ")")]
-                        + toks[close_i + 1:])
-                changed = True
-                break
-            if name == "parse_time":
-                toks[i] = Tok("IDENT", "try_to_timestamp")
-                # translate a literal Go layout 2nd arg, if present
-                open_i = sig[si + 1]
-                close_i = _match_paren(toks, open_i)
-                depth = 0
-                for j in range(open_i, close_i):
-                    if toks[j].text == "(":
-                        depth += 1
-                    elif toks[j].text == ")":
-                        depth -= 1
-                    elif depth == 1 and toks[j].text == ",":
-                        k = j + 1
-                        while k < close_i and toks[k].kind in ("WS", "COMMENT"):
-                            k += 1
-                        if toks[k].kind == "STRING":
-                            layout = toks[k].text[1:-1]
-                            toks[k] = Tok("STRING", f"'{go_layout_to_java(layout)}'")
-                changed = True
-                break
-    return toks
+def _substr(inner: list[Tok], args, types: dict[str, str]) -> list[Tok]:
+    # 0-based in the dialect (functions.go:720-739) → Spark's 1-based
+    # substring: the start argument gains one
+    if len(args) >= 2:
+        s, e = args[1]
+        inner = (inner[:s] + _paren(inner[s:e + 1]) + tokenize("+1")
+                 + inner[e + 1:])
+    return [Tok("IDENT", "substring")] + _paren(inner)
+
+
+def _parse_time(inner: list[Tok], args, types: dict[str, str]) -> list[Tok]:
+    # a literal Go layout argument is translated to a Java pattern
+    for s, _ in args[1:]:
+        if inner[s].kind == "STRING":
+            layout = go_layout_to_java(inner[s].text[1:-1])
+            inner[s] = Tok("STRING", f"'{layout}'")
+    return [Tok("IDENT", "try_to_timestamp")] + _paren(inner)
+
+
+# dialect call name → rule(argument tokens, their trimmed top-level
+# comma spans, column types) → the Spark text of the whole call
+_CALLS = {
+    "now": _wrap("current_timestamp(", ")"),
+    "time_from_unix": _wrap("timestamp_seconds(", ")"),
+    # panic(msg) fails the query at runtime (functions.go catalog;
+    # tests/scenarios/functions/panic golden)
+    "panic": _wrap("raise_error(", ")"),
+    "parse_time": _parse_time,
+    "int": _wrap("TRY_CAST(", " AS BIGINT)"),
+    "float": _wrap("TRY_CAST(", " AS DOUBLE)"),
+    "string": _wrap("CAST(", " AS STRING)"),
+    # the reference returns Float (functions.go:394-412), Spark BIGINT
+    "floor": _wrap("CAST(floor(", ") AS DOUBLE)"),
+    "ceil": _wrap("CAST(ceil(", ") AS DOUBLE)"),
+    "len": _len,
+    "substr": _substr,
+    # position(haystack, needle): 0-based, NULL when absent
+    # (functions.go:757-772); Spark's instr is 1-based, 0 when absent
+    "position": _wrap("(nullif(instr(", "), 0) - 1)"),
+    "time_to_unix": _wrap("unix_timestamp(CAST(", " AS TIMESTAMP))"),
+    # the reference's callable *_distinct aggregates (aggregates/
+    # table.go); Spark has only the AGG(DISTINCT x) form, which
+    # _classify_item names like the call
+    **{f"{agg}_distinct": _wrap(f"{agg}(DISTINCT ", ")")
+       for agg in ("count", "sum", "avg", "array_agg")},
+}
+
+
+def _rewrite_calls(toks: list[Tok], types: dict[str, str]) -> list[Tok]:
+    """The dialect's calls named in ``_CALLS``, in one forward pass per
+    level, inner levels first: each ``name(`` is visited once and its
+    rule reads already rewritten arguments. A qualified ``x.name(`` is
+    not a dialect call."""
+    level = _inner_first(toks, lambda inner: _rewrite_calls(inner, types))
+    out: list[Tok] = []
+    prev = None  # the last significant token
+    i = 0
+    while i < len(level):
+        t = level[i]
+        rule = _CALLS.get(t.text.lower()) if t.kind == "IDENT" else None
+        j = rule and _next_sig(level, i)
+        if j and level[j].text == "(" and not (prev and prev.text == "."):
+            close = _match_paren(level, j)
+            inner = level[j + 1:close]
+            out += rule(inner, _split_top_commas(inner, 0, len(inner) - 1),
+                        types)
+        else:  # an inner level is already rewritten: copy it whole
+            close = _group_end(level, i)
+            out += level[i:close + 1]
+        if level[close].kind not in ("WS", "COMMENT"):
+            prev = level[close]
+        i = close + 1
+    return out
 
 
 def _type_cat(dtype: str) -> str:
@@ -617,41 +590,19 @@ def _scalar_subquery_cat(toks: list[Tok], sig: list[int],
     review); a set-operation subquery (UNION/INTERSECT/EXCEPT
     branches can differ in category and the first branch alone
     doesn't decide — r8 review)."""
-    start = 1
-    if (len(sig) > 1 and toks[sig[1]].kind == "IDENT"
-            and toks[sig[1]].text.upper() == "DISTINCT"):
-        start = 2  # DISTINCT keeps the item's category
-    depth = 0
-    item_end = None
-    from_pos = None
-    for pos in range(start, len(sig)):
-        tt = toks[sig[pos]]
-        up = tt.text.upper() if tt.kind == "IDENT" else ""
-        if tt.text in ("(", "["):
-            depth += 1
-        elif tt.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and tt.text == ",":
-            return None  # multi-column subquery: not scalar
-        elif depth == 0 and up == "AS":
-            return None  # aliased item: alias ≠ a typed column
-        elif depth == 0 and up == "FROM":
-            item_end = sig[pos - 1]
-            from_pos = pos
-            break
-    if item_end is None or item_end < sig[start]:
+    # DISTINCT keeps the item's category
+    start = 2 if len(sig) > 1 and toks[sig[1]].is_kw("DISTINCT") else 1
+    if start >= len(sig):
         return None
-    depth = 0
-    for pos in range(from_pos + 1, len(sig)):
-        tt = toks[sig[pos]]
-        if tt.text in ("(", "["):
-            depth += 1
-        elif tt.text in (")", "]"):
-            depth -= 1
-        elif (depth == 0 and tt.kind == "IDENT" and tt.text.upper()
-              in ("UNION", "INTERSECT", "EXCEPT")):
-            return None  # set-op: later branches may differ
-    return _span_cat(toks, sig[start], item_end, types)
+    marks = [i for i in _level(toks, sig[start], sig[-1])
+             if toks[i].text == ","
+             or toks[i].is_kw("AS", "FROM", "UNION", "INTERSECT", "EXCEPT")]
+    # a `,` or AS before the FROM: several columns or an aliased item;
+    # a set operation anywhere: later branches may differ
+    if not marks or not toks[marks[0]].is_kw("FROM") or any(
+            toks[m].is_kw("UNION", "INTERSECT", "EXCEPT") for m in marks):
+        return None
+    return _span_cat(toks, sig[start], marks[0] - 1, types)
 
 
 def _span_cat(toks: list[Tok], lo: int, hi: int,
@@ -672,90 +623,30 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
         # depth 0 relative to this span and would wrongly split it
         # (r8 review finding on the r8 soak fix)
         return _scalar_subquery_cat(toks, sig, types)
-    # top-level binary operators?
-    depth = 0
-    ops = []
-    for i in sig:
-        t = toks[i]
-        if t.text in ("(", "["):
-            depth += 1
-        elif t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_arith_op_tok(toks, i):
-            ops.append(i)
+    ops = [i for i in _level(toks, lo, hi) if _is_arith_op_tok(toks, i)]
     if ops:
-        cats = []
-        prev = lo
-        for op_i in ops + [hi + 1]:
-            cats.append(_span_cat(toks, prev, op_i - 1, types)
-                        if prev <= op_i - 1 else None)
-            prev = op_i + 1
-        if any(c is None for c in cats):
-            return None
-        if all(c == "int" for c in cats):
-            # dialect semantics: Int/Int is integer division
-            # (functions.go:320-355), so the whole chain stays Int
-            return "int"
-        if set(cats) <= {"int", "float"}:
-            return "float"
-        if all(c == "string" for c in cats):
-            return "string"
-        if "duration" in cats and set(cats) <= {"duration", "int", "float"}:
-            # duration +/- duration, duration */÷ scalar → duration
-            # (functions.go:156-355 Duration overloads)
+        # Int/Int is integer division in the dialect (functions.go:
+        # 320-355), so an Int chain stays Int; Duration ± Duration and
+        # Duration */÷ a number stay Duration (functions.go:156-355)
+        bounds = [lo - 1] + ops + [hi + 1]
+        cats = {_span_cat(toks, a + 1, b - 1, types)
+                for a, b in zip(bounds, bounds[1:])}
+        if "duration" in cats and cats <= {"duration", "int", "float"}:
             return "duration"
-        return None
+        return _union_cat(cats) if cats <= {"int", "float", "string"} \
+            else None
     t = toks[sig[0]]
-    if (t.kind == "IDENT" and t.text.upper() == "CASE"
-            and toks[sig[-1]].kind == "IDENT"
-            and toks[sig[-1]].text.upper() == "END"):
+    if t.is_kw("CASE") and _case_end(toks, sig[0]) == sig[-1]:
         # CASE result category = combined category of the THEN/ELSE
         # result expressions (the reference's planner types CASE as
         # the union of its branch types, so Int branches keep the
         # Int/Int division overload — found by the differential-fuzz
         # sweep via "(CASE WHEN 0 >= 0 THEN 1 ELSE 0 END) / 2")
-        depth = 0
-        casedepth = 0
-        results: list[tuple[int, int]] = []
-        cur: int | None = None
-        mode = ""
-        last = sig[0]
-        for idx in sig:
-            tt = toks[idx]
-            up = tt.text.upper() if tt.kind == "IDENT" else ""
-            if tt.text in ("(", "["):
-                depth += 1
-            elif tt.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and up == "CASE":
-                casedepth += 1
-                if casedepth == 1:
-                    continue
-            elif depth == 0 and up == "END":
-                casedepth -= 1
-                if casedepth == 0:
-                    if mode in ("then", "else") and cur is not None:
-                        results.append((cur, last))
-                    break
-            elif (depth == 0 and casedepth == 1
-                  and up in ("WHEN", "THEN", "ELSE")):
-                if mode in ("then", "else") and cur is not None:
-                    results.append((cur, last))
-                cur = None
-                mode = up.lower()
-                last = idx
-                continue
-            if mode in ("then", "else") and cur is None:
-                cur = idx
-            last = idx
-        cats = {_span_cat(toks, s, e, types) for s, e in results}
-        if not cats or None in cats:
-            return None
-        if cats == {"int"}:
-            return "int"
-        if cats <= {"int", "float"}:
-            return "float"
-        return cats.pop() if len(cats) == 1 else None
+        marks = [i for i in _level(toks, sig[0] + 1, sig[-1] - 1)
+                 if toks[i].is_kw("WHEN", "THEN", "ELSE")] + [sig[-1]]
+        return _union_cat({_span_cat(toks, m + 1, n - 1, types)
+                           for m, n in zip(marks, marks[1:])
+                           if toks[m].is_kw("THEN", "ELSE")})
     if t.kind == "STRING":
         return "string" if len(sig) == 1 else None
     if t.kind == "NUMBER":
@@ -798,14 +689,8 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
                     # compares)
                     return _span_cat(toks, args[0][0], args[0][1],
                                      types)
-                cats = {_span_cat(toks, a, b, types) for a, b in args}
-                if None in cats:
-                    return None
-                if cats == {"int"}:
-                    return "int"
-                if cats <= {"int", "float"}:
-                    return "float"
-                return cats.pop() if len(cats) == 1 else None
+                return _union_cat({_span_cat(toks, a, b, types)
+                                   for a, b in args})
             return _FN_RESULT_CAT.get(fname)
         # dotted chain t.col → category of the final identifier
         if all(toks[i].kind in ("IDENT", "QIDENT") or toks[i].text == "."
@@ -815,6 +700,18 @@ def _span_cat(toks: list[Tok], lo: int, hi: int,
     if t.text == "(" and sig[-1] == _match_paren(toks, sig[0]):
         return _span_cat(toks, sig[0] + 1, sig[-1] - 1, types)
     return None
+
+
+def _union_cat(cats: set[str | None]) -> str | None:
+    """The one category of values drawn from ``cats``: Int when all
+    are Int, Float when all are numeric, else their only category."""
+    if not cats or None in cats:
+        return None
+    if cats == {"int"}:
+        return "int"
+    if cats <= {"int", "float"}:
+        return "float"
+    return cats.pop() if len(cats) == 1 else None
 
 
 def _is_arith_op_tok(toks: list[Tok], i: int) -> bool:
@@ -1051,38 +948,6 @@ def _strip_trigger(toks: list[Tok]) -> tuple[list[Tok], list[str]]:
         triggers.append("".join(t.text for t in toks[i + 1:j]).strip())
         toks = toks[:i] + toks[j:]
     return toks, list(reversed(triggers))
-
-
-_DISTINCT_AGG_NAMES = {"count_distinct": "count", "sum_distinct": "sum",
-                       "avg_distinct": "avg",
-                       "array_agg_distinct": "array_agg"}
-
-
-def _rewrite_distinct_agg_names(toks: list[Tok]) -> list[Tok]:
-    """The reference registers the ``*_distinct`` aggregates as
-    CALLABLE names (aggregates/table.go: count_distinct, sum_distinct,
-    avg_distinct, array_agg_distinct — the same names ``docs.
-    aggregates`` lists), alongside the ``AGG(DISTINCT x)`` syntax the
-    parser folds into them (parser.go:469-472). Spark SQL only has
-    the syntax form, so rewrite ``count_distinct(x)`` →
-    ``count(DISTINCT x)`` (found by the r7 distinct-aggregate
-    fuzzer). Runs before _alias_select_items, whose naming branch
-    re-derives the ``<base>_distinct`` output name from the DISTINCT
-    keyword — reference output naming is unchanged."""
-    sig = _sig(toks)
-    out = list(toks)
-    for k in range(len(sig) - 1):
-        t = toks[sig[k]]
-        base = (_DISTINCT_AGG_NAMES.get(t.text.lower())
-                if t.kind == "IDENT" else None)
-        if base and toks[sig[k + 1]].text == "(":
-            out[sig[k]] = Tok("IDENT", base)
-            out[sig[k + 1]] = Tok("PUNCT", "(")
-            # inject DISTINCT right after the open paren
-            out.insert(sig[k + 1] + 1, Tok("WS", " "))
-            out.insert(sig[k + 1] + 1, Tok("IDENT", "DISTINCT"))
-            return _rewrite_distinct_agg_names(out)  # indices shifted
-    return out
 
 
 def _strip_join_modifiers(toks: list[Tok]) -> list[Tok]:
@@ -1873,7 +1738,6 @@ def transpile(spark: SparkSession, sql: str,
     toks = _rewrite_file_tables(spark, toks, out)
     relations = _relations(spark, toks)
     toks = _expand_star(toks, relations)
-    toks = _rewrite_distinct_agg_names(toks)
     toks = _alias_select_items(toks)
     types = _collect_column_types(relations)
     # VARIANT union carriers (JSON sources) are the only expressions
@@ -1883,7 +1747,7 @@ def transpile(spark: SparkSession, sql: str,
                     for c, d in rel.dtypes or () if d == "variant"}
     toks = _rewrite_postfix_ops(toks, strict_assert, variant_cols)
     toks = _rewrite_arith_overloads(toks, types)
-    toks = _rewrite_functions(toks, types)
+    toks = _rewrite_calls(toks, types)
     toks = _rewrite_float_literals(toks)
     toks = _rewrite_ordinal_keys(toks)
     depth = 0

@@ -39,6 +39,11 @@ def test_arrow_and_star(spark, views):
     df2 = q(spark, "SELECT obj->* FROM "
                    "(SELECT named_struct('key', r_regionkey) AS obj FROM region)")
     assert df2.columns == ["key"]
+    # a Spark lambda's arrow is not a field access
+    r = q(spark, "SELECT transform(array(1, 2), x -> x + 1) AS t, "
+                 "aggregate(array(1, 2, 3), 0, (acc, x) -> acc + x) AS a"
+          ).collect()[0]
+    assert (r.t, r.a) == ([2, 3], 6)
 
 
 def test_type_assertion(spark, views, shape_t):
@@ -414,6 +419,7 @@ def test_overload_category_polymorphic_functions(spark):
         ("floor(2.5)", 2.0),
         ("ceil(2.3)", 3.0),
         ("floor(2.5) / 2", 1.0),
+        ("floor(floor(2.5))", 2.0),
     ]
     for expr, want in cases:
         got = run_query(spark, f"SELECT {expr} AS v FROM one").df \
@@ -490,6 +496,11 @@ def test_distinct_aggregate_call_names(spark):
     r2 = run_query(spark, "SELECT a, COUNT(DISTINCT b) FROM dn_t "
                           "GROUP BY a")
     assert r2.df.columns == ["a", "count_distinct_b"]
+    # a call argument and an enclosing chain
+    r3 = run_query(spark, "SELECT sum_distinct(len(b)), "
+                          "count_distinct(a) + 1 FROM dn_t")
+    assert r3.df.columns == ["sum_distinct", "col_1"]
+    assert tuple(r3.df.collect()[0]) == (1, 3)
 
 
 def test_aggregate_results_keep_int_division(spark):
@@ -517,6 +528,12 @@ def test_aggregate_results_keep_int_division(spark):
                           "FROM aggdiv_t").df.collect()[0]
     assert (r3.c, r3.w, r3.i) == (0, 3, 3)
     assert all(isinstance(x, int) for x in r3)
+    # a CASE branch that is itself a chain keeps the Int category
+    r4 = run_query(spark, "SELECT CASE WHEN 1 > 0 THEN 1 + 2 ELSE 0 END "
+                          "/ 2 AS b, (CASE WHEN 1 > 0 THEN 1 + 2 ELSE 0 "
+                          "END) / 2 AS p").df.collect()[0]
+    assert (r4.b, r4.p) == (1, 1)
+    assert all(isinstance(x, int) for x in r4)
 
 
 def test_scalar_subquery_category_safe_fallbacks(spark):
