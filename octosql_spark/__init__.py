@@ -17,8 +17,9 @@ package is a thin, Spark-first layer:
                     catalog, unnest, global NTILE, temporal joins);
                     plain joins, set ops, DISTINCT and ORDER BY/LIMIT
                     are SQL text compiled by Catalyst.
-- ``functions``   — the scalar function catalog (§2.7) as Column
-                    builders, registered for SQL use.
+- ``functions``   — the scalar function catalog (§2.7): names,
+                    signatures and descriptions for the ``docs.*``
+                    tables; ``sql`` compiles the calls.
 - ``tvf``         — table-valued functions: range, tumble,
                     max_diff_watermark, poll (§2.8).
 - ``plans``       — Graphviz rendering of Catalyst's analyzed plan
@@ -26,8 +27,9 @@ package is a thin, Spark-first layer:
 - ``sql``         — the OctoSQL dialect front-end: tokenizer +
                     transpiler to Spark SQL (``->``, ``::``,
                     file-path tables, TVF keyword args, TRIGGER).
-- ``streaming``   — Structured-Streaming mapping of the dataflow
-                    subset (watermarks, triggers, stream joins).
+- ``streaming``   — the exact TRIGGER COUNTING operator; watermarks,
+                    windows and stream joins are SQL (``sql``, ``tvf``)
+                    and the TRIGGER → output-mode mapping is in ``cli``.
 - ``sinks``       — table/csv/json/stream output + --describe.
 - ``datapipe``    — large-scale training-data ops: dedup (exact,
                     MinHash-LSH, SimHash, n-gram Jaccard, embedding

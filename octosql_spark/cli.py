@@ -533,9 +533,36 @@ def _run_poll(args, spark, first) -> int:
                         strict_assert=args.strict_assert)
 
 
+def map_trigger(spec: str | None):
+    """OctoSQL TRIGGER spec (parser/parser.go:503-534) → (outputMode,
+    writeStream trigger kwargs)."""
+    s = (spec or "").strip().upper()
+    if not s or s == "ON END OF STREAM":
+        # the reference flushes all state at EOS (WatermarkMaxValue,
+        # execution/execution.go:106). Spark's append mode would hold
+        # back windows the watermark hasn't passed — update mode emits
+        # every group by the time the AvailableNow run terminates.
+        return "update", {"availableNow": True}
+    if s == "ON WATERMARK":
+        return "append", {}
+    if s.startswith("COUNTING"):
+        import re
+        if not re.fullmatch(r"COUNTING\s+\d+", s):
+            # a bare COUNTING (no record count) is a parse error in the
+            # reference's grammar too (parser.go:503-534)
+            raise ValueError(f"unsupported trigger: {spec!r} "
+                             f"(COUNTING needs a record count)")
+        # exact per-key counting semantics are implemented in
+        # streaming/counting_trigger.py (applyInPandasWithState); this
+        # mapping is the cheap approximation for generic aggregates:
+        # update mode re-emits refined values per micro-batch.
+        return "update", {}
+    raise ValueError(f"unsupported trigger: {spec!r}")
+
+
 def _run_streaming(args, res, df, stagers=None) -> int:
     """A ``?tail=true`` source (or TVF stream) reached the sink: map
-    the TRIGGER spec to an output mode (streaming/core.map_trigger)
+    the TRIGGER spec to an output mode (``map_trigger``)
     and drive a foreachBatch printer. The reference runs streaming
     queries until killed (cmd/root.go); ``--duration`` bounds that,
     and with no duration the current contents are processed and the
@@ -543,7 +570,6 @@ def _run_streaming(args, res, df, stagers=None) -> int:
     import time
 
     from octosql_spark import sinks
-    from octosql_spark.streaming.core import map_trigger
 
     spec = res.triggers[0] if res.triggers else None
     try:

@@ -43,6 +43,6 @@ from octosql_spark.datapipe.sketch import (  # noqa: F401
     quantile_rollup_summary, quantile_rollup_estimate,
 )
 from octosql_spark.datapipe.multimodal import (  # noqa: F401
-    attach_media_metadata, decode_media, sample_frames, resize_media,
+    attach_media_metadata, decode_media, resize_media,
     extract_features,
 )

@@ -449,8 +449,8 @@ def build_semantic_index(embeddings: DataFrame, path: str,
                          train_cap: int = 100_000) -> None:
     """Write the STORED maintenance form of ``semantic_dedup`` — the
     base ``semantic_ingest`` increments against (r10 verdict #4: the
-    lexical side has ``stream_cluster_ingest``; the embedding side
-    recomputed cells from scratch). Layout under ``path``:
+    embedding side recomputed cells from scratch). Layout under
+    ``path``:
 
     - ``cells``: (cell, centroid) — the k-means quantizer, trained
       ONCE on a bounded sample and frozen; every later increment

@@ -242,8 +242,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       bands: int = 16, shingle: int = 3,
                       jaccard_threshold: float = 0.5,
                       max_bucket: int = 1000,
-                      collapse: bool | str = "auto",
-                      cache_registry: list | None = None) -> DataFrame:
+                      collapse: bool | str = "auto") -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with
     exact shingle Jaccard. Returns (id_a, id_b, jaccard) with
     id_a < id_b.
@@ -284,25 +283,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     data (e.g. JDBC) are never memoized — their data can change
     invisibly, and a stale dup-light verdict past ``max_bucket``
     would cost answers, not just speed. Pass True/False to pin
-    either path.
-
-    ``cache_registry``: a caller-supplied list that receives every
-    DataFrame this call persists, so a scoped consumer (the streaming
-    ingest epoch loop) can unpersist exactly ITS OWN caches instead
-    of diffing the session-global RDD map — which swept caches
-    registered by CONCURRENT queries in a shared session (r8
-    advice)."""
-    def _persist(fr: DataFrame) -> DataFrame:
-        fr = fr.persist()
-        if cache_registry is not None:
-            cache_registry.append(fr)
-        return fr
-
-    if collapse == "auto" and df.isStreaming:
-        # no eager probe on a streaming frame (first() would raise);
-        # keep the r8 always-collapse behavior — micro-batches are
-        # the dup-heavy shape anyway
-        collapse = True
+    either path."""
     if collapse == "auto":
         try:
             ph = df._jdf.queryExecution().analyzed().semanticHash()
@@ -364,11 +345,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         # feeds the signature pipeline, the shingle verify table and
         # the member expansion — un-persisted, its full-text reduce
         # side re-executes per consumer (measured 4× the operator wall)
-        canon = _persist(
-            df.select(F.col(text_col).alias("_s"), F.col(id_col))
-            .groupBy("_s")
-            .agg(F.min(id_col).alias("_rid"),
-                 F.collect_list(id_col).alias("_ids")))
+        canon = (df.select(F.col(text_col).alias("_s"), F.col(id_col))
+                 .groupBy("_s")
+                 .agg(F.min(id_col).alias("_rid"),
+                      F.collect_list(id_col).alias("_ids"))
+                 .persist())
         reps = canon.select(F.col("_rid").alias(id_col),
                             F.col("_s").alias(text_col))
     # signature table (id, minhash, _sh) — persisted: the banding is
@@ -385,7 +366,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     sigs = minhash_signatures(reps.select(id_col, text_col), text_col,
                               num_hashes, shingle, shingles_out="_sh") \
         .select(id_col, "minhash", "_sh")
-    sigs = _persist(sigs)
+    sigs = sigs.persist()
     banded = _band_table(sigs.select(id_col, "minhash"), id_col,
                          num_hashes, bands)
     # ONE shuffle for candidate generation: group each bucket's ids,

@@ -1266,14 +1266,3 @@ def extract_features(df: DataFrame, binary_col: str = "media",
             yield out
 
     return df.mapInPandas(run, out_schema)
-
-
-def sample_frames(df: DataFrame, every_n: int = 30,
-                  frames_col: str = "n_frames") -> DataFrame:
-    """Frame sampling plan for video rows: emits one row per sampled
-    frame index (explode of a sequence — no decode needed to *plan*
-    sampling; the actual pixel fetch is the decode_media extension
-    point)."""
-    idx = F.sequence(F.lit(0), F.greatest(F.col(frames_col) - 1, F.lit(0)),
-                     F.lit(every_n))
-    return df.withColumn("frame_index", F.explode(idx))

@@ -11,7 +11,7 @@ from octosql_spark.operators.joins import (  # noqa: F401
     stream_join, lookup_join, anti_join,
 )
 from octosql_spark.operators.aggregate import group_by, AGGREGATES  # noqa: F401
-from octosql_spark.operators.unnest import unnest, explode_object  # noqa: F401
+from octosql_spark.operators.unnest import unnest  # noqa: F401
 from octosql_spark.operators.runtime_filter import (  # noqa: F401
     build_key_bloom, bloom_might_contain, bloom_prefilter_join,
 )

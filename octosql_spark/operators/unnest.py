@@ -1,12 +1,10 @@
-"""unnest() and object explosion (SURVEY.md §2.2).
+"""unnest() (SURVEY.md §2.2).
 
-- ``unnest(list_col)`` flattens a list column to rows; the reference
-  inserts a physical Unnest node above Map (logical/map.go:80-97,
-  execution/nodes/unnest.go:21-37). Spark: ``explode`` — a narrow,
-  pipelined generator, no shuffle.
-- ``obj->*`` explodes a struct into one column per field
-  (parser/parser.go:201-210, logical/map.go:60-78). Spark:
-  ``select("obj.*")``.
+``unnest(list_col)`` flattens a list column to rows; the reference
+inserts a physical Unnest node above Map (logical/map.go:80-97,
+execution/nodes/unnest.go:21-37). Spark: ``explode`` — a narrow,
+pipelined generator, no shuffle. (Object explosion, ``obj->*``, is
+SQL text: the transpiler rewrites it to ``obj.*``.)
 """
 
 from __future__ import annotations
@@ -24,8 +22,3 @@ def unnest(df: DataFrame, col: str | Column, alias: str = "unnest",
     exploder = F.explode_outer if outer else F.explode
     carried = keep if keep is not None else df.columns
     return df.select(*carried, exploder(col).alias(alias))
-
-
-def explode_object(df: DataFrame, col: str) -> DataFrame:
-    """``SELECT obj->* FROM t`` — one output column per struct field."""
-    return df.select(f"{col}.*")

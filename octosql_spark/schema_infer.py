@@ -195,15 +195,3 @@ def to_spark_schema(cols: dict[str, ot.OctoType],
         fields.append(T.StructField(name, dt, nullable,
                                     metadata={"octosql_type": repr(t)}))
     return T.StructType(fields)
-
-
-def union_columns(cols: dict[str, ot.OctoType]) -> dict[str, ot.OctoType]:
-    """Columns whose inferred type is a non-widening union — these are
-    read as raw strings; ``::T`` accessors try_cast out of them."""
-    out = {}
-    for name, t in cols.items():
-        core = ot.non_nullable(t)
-        if core.id == ot.TypeID.UNION and \
-                not {a.id for a in core.alts} <= {ot.TypeID.INT, ot.TypeID.FLOAT}:
-            out[name] = t
-    return out

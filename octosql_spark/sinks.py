@@ -4,8 +4,9 @@ The reference's sinks: live/batch table (retractable ordered buffer,
 outputs/batch/live_output.go:35-204), eager csv/json writers
 (outputs/eager/eager.go, outputs/formats/*), stream_native printer
 (outputs/stream/printer.go), and ``--describe``
-(cmd/root.go:300-313). Batch equivalents below; streaming variants
-live in octosql_spark.streaming.
+(cmd/root.go:300-313). Batch writers below, and the foreachBatch
+writers the CLI's streaming route drives (``stream_batch_writer``,
+``stream_native_diff_writer``).
 """
 
 from __future__ import annotations

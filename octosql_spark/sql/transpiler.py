@@ -209,6 +209,30 @@ def _inner_first(toks: list[Tok], rewrite) -> list[Tok]:
     return level
 
 
+def _lambda_scoped(toks: list[Tok], types: dict[str, str], rewrite):
+    """A typed pass over a level holding a lambda argument (``x -> …``,
+    ``(acc, x) -> …``): ``rewrite`` of the text before the arrow, of
+    the body, and of the rest. The parameters are not columns, so
+    inside the body, which runs to the end of its argument, they take
+    no column type. None when the level holds no lambda."""
+    if not any(t.text == "->" for t in toks):  # most levels: no lambda
+        return None
+    arrow = next((i for i in _level(toks, 0, len(toks) - 1)
+                  if toks[i].kind == "OP" and toks[i].text == "->"), None)
+    if arrow is None:
+        return None
+    commas = [i for i in _level(toks, 0, len(toks) - 1)
+              if toks[i].text == ","]
+    start = max((c + 1 for c in commas if c < arrow), default=0)
+    end = min((c for c in commas if c > arrow), default=len(toks))
+    params = {t.text.strip('"`').lower() for t in toks[start:arrow]
+              if t.kind in ("IDENT", "QIDENT")}
+    body_types = {k: v for k, v in types.items() if k not in params}
+    return (rewrite(toks[:arrow], types) + [toks[arrow]]
+            + rewrite(toks[arrow + 1:end], body_types)
+            + rewrite(toks[end:], types))
+
+
 # ------------------------------------------------------------ rewrites
 
 # Spark higher-order functions → the argument positions that take a
@@ -427,6 +451,9 @@ def _rewrite_calls(toks: list[Tok], types: dict[str, str]) -> list[Tok]:
     level, inner levels first: each ``name(`` is visited once and its
     rule reads already rewritten arguments. A qualified ``x.name(`` is
     not a dialect call."""
+    scoped = _lambda_scoped(toks, types, _rewrite_calls)
+    if scoped is not None:
+        return scoped
     level = _inner_first(toks, lambda inner: _rewrite_calls(inner, types))
     out: list[Tok] = []
     prev = None  # the last significant token
@@ -873,6 +900,9 @@ def _rewrite_arith_overloads(toks: list[Tok],
     folded before the level that contains it, so an enclosing chain
     types an inner result from its rewritten text; each maximal flat
     chain folds once."""
+    scoped = _lambda_scoped(toks, types, _rewrite_arith_overloads)
+    if scoped is not None:
+        return scoped
     level = _inner_first(
         toks, lambda inner: _rewrite_arith_overloads(inner, types))
     out: list[Tok] = []
@@ -1215,7 +1245,9 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
         counter[name] = n + 1
         return name if n == 0 else f"{name}_{n}"
 
-    edits: list[tuple[int, Tok | None, list[Tok]]] = []
+    # (cut, resume, new): the output takes toks up to ``cut``, then
+    # ``new``, and goes on from ``resume``; one edit per item, in order
+    edits: list[tuple[int, int, list[Tok]]] = []
     for idx, ((s, e), (kind, detail)) in enumerate(zip(items, infos)):
         if kind == "star":
             continue
@@ -1223,13 +1255,14 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
             alias, alias_idx = detail
             final = unique(alias)
             if final != alias:
-                edits.append((e, toks[alias_idx], [_name_tok(final)]))
+                edits.append((alias_idx, alias_idx + 1, [_name_tok(final)]))
             continue
         if kind == "bare":
             final = unique(detail)
             if final != detail:
-                edits.append((e, None, [Tok("WS", " "), Tok("IDENT", "AS"),
-                                        Tok("WS", " "), _name_tok(final)]))
+                edits.append((e + 1, e + 1, [
+                    Tok("WS", " "), Tok("IDENT", "AS"), Tok("WS", " "),
+                    _name_tok(final)]))
             continue
         if kind == "agg":
             aggname, argname = detail
@@ -1241,15 +1274,14 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
             else:
                 name = f"col_{idx}"
         final = unique(name)
-        edits.append((e, None, [Tok("WS", " "), Tok("IDENT", "AS"),
-                                Tok("WS", " "), _name_tok(final)]))
-    for e, replace, new in reversed(edits):
-        if replace is not None:
-            pos = next(j for j in range(e, -1, -1) if toks[j] is replace)
-            toks = toks[:pos] + new + toks[pos + 1:]
-        else:
-            toks = toks[:e + 1] + new + toks[e + 1:]
-    return toks
+        edits.append((e + 1, e + 1, [Tok("WS", " "), Tok("IDENT", "AS"),
+                                     Tok("WS", " "), _name_tok(final)]))
+    out: list[Tok] = []
+    at = 0
+    for cut, resume, new in edits:
+        out += toks[at:cut] + new
+        at = resume
+    return out + toks[at:]
 
 
 # calls whose value differs between evaluations of the same row
@@ -1609,14 +1641,13 @@ def _rewrite_tvfs(spark: SparkSession, toks: list[Tok], out: Transpiled) -> list
                 # (Spark's late-drop is per-micro-batch best-effort in
                 # that direction anyway). Default resolution is
                 # 1 second, like the reference (:108).
-                from octosql_spark.streaming.core import with_watermark
                 from octosql_spark.tvf import interval_micros
                 delay_us = (interval_micros(
                     _interval_to_spark(_str_arg("max_diff")))
                     + interval_micros(
                         _interval_to_spark(resolution)
                         if resolution else "1 second"))
-                res = with_watermark(df, tf, f"{delay_us} microseconds")
+                res = df.withWatermark(tf, f"{delay_us} microseconds")
             else:
                 res = tvfmod.max_diff_watermark(
                     df, _interval_to_spark(_str_arg("max_diff")), tf,

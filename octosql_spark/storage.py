@@ -1,21 +1,23 @@
-"""Storage-layout operations for shuffle avoidance at scale.
+"""Storage-layout and incremental-maintenance operations the registry
+builds on.
 
 The reference is single-machine and has no layout story; on a cluster
 the dominant cost of repeated joins/aggregations over the same keys is
-the shuffle. Two standard tools, exposed as first-class operations:
+the shuffle:
 
-- **Bucketing** (``write_bucketed`` / ``read_bucketed``): persist a
-  table hash-partitioned AND optionally sorted by the join key. Two
-  tables bucketed on the same key with the same bucket count join
-  with ZERO Exchange on either side (sort-merge join reads co-located
-  buckets). At 100 TB this turns every recurring join/groupBy on the
-  bucket key into a narrow, shuffle-free stage.
 - **Salting** (``salted_join``): for skewed keys (one key = 30% of
   rows), split each hot left-side key across ``salt`` sub-keys and
   replicate the right side per sub-key — the hot partition becomes
   ``salt`` parallel partitions. AQE's skew-join handles moderate skew
   automatically (session.py enables it); salting is the explicit tool
-  for extreme generator-style skew.
+  for extreme generator-style skew. ``key_skew_profile`` measures
+  whether a key needs it.
+- **Incremental rollups and SCD2** (``merge_rollup``, ``scd2_build``):
+  fold an increment or a change feed into a stored aggregate or a
+  versioned dimension.
+- **Z-order** (``zorder_key``): a Morton key over several integer
+  columns; range-partitioning and sorting files by it gives each file
+  a tight bounding box in all of them.
 """
 
 from __future__ import annotations
@@ -24,47 +26,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: Sequence[str],
-                   n_buckets: int = 64,
-                   sort_cols: Sequence[str] | None = None,
-                   path: str | None = None,
-                   mode: str = "overwrite") -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) parquet table.
-
-    ``n_buckets`` sizing at scale: total_bytes / n_buckets should land
-    in the 100-500 MB range per bucket file per task."""
-    w = df.write.format("parquet").mode(mode) \
-        .bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table; Catalyst consumes the bucket spec and
-    drops the Exchange for joins/aggregations on the bucket key."""
-    return spark.table(table)
-
-
-def write_partitioned(df: DataFrame, path: str,
-                      partition_cols: Sequence[str],
-                      mode: str = "overwrite",
-                      fmt: str = "parquet") -> None:
-    """Hive-style partitioned layout (``path/col=value/...``): filters
-    on the partition columns become partition PRUNING — whole
-    directories skipped at planning, the single biggest scan saver for
-    date/language/source-keyed corpora. Keep partition cardinality
-    sane (≤ ~10k dirs); high-cardinality keys belong in bucketing."""
-    df.write.format(fmt).mode(mode).partitionBy(*partition_cols).save(path)
-
-
-def read_partitioned(spark: SparkSession, path: str,
-                     fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
 
 
 def salted_join(left: DataFrame, right: DataFrame,
@@ -112,105 +73,6 @@ def key_skew_profile(df: DataFrame, key_col: str) -> DataFrame:
         F.round(F.expr("percentile(cnt, 0.5)"), 6).alias("p50_per_key"),
         F.round(F.expr("percentile(cnt, 0.99)"), 6).alias("p99_per_key"),
         F.round(F.max("cnt") / F.avg("cnt"), 6).alias("skew_ratio"))
-
-
-def compact_parquet(spark: SparkSession, src: str, dst: str,
-                    target_mb: int = 256,
-                    sort_within_by: Sequence[str] | None = None) -> int:
-    """Small-file compaction: rewrite a parquet directory into files of
-    ~``target_mb`` each — the standing maintenance task of any
-    streaming/incremental ingest, whose thousands of KB-sized files
-    otherwise bloat the NameNode/listing path and turn every scan into
-    a task-scheduling storm (the "small files problem").
-
-    File count = ceil(input_bytes / target_mb), decided from the real
-    directory size, not a guess. With ``sort_within_by`` the data is
-    additionally range-partitioned and sorted by those columns before
-    writing, so each output file covers a tight key range and parquet
-    min/max row-group stats prune scans with key predicates (poor
-    man's clustering — the layout you want under a 100 TB time- or
-    key-partitioned table).
-
-    Returns the number of files written. One job: scan → (optional
-    range shuffle) → write; never collects to the driver.
-    """
-    import math
-    import os
-    size = sum(os.path.getsize(os.path.join(r, f))
-               for r, _, fs in os.walk(src) for f in fs
-               if f.endswith(".parquet") or "." not in f)
-    n_files = max(1, math.ceil(size / (target_mb << 20)))
-    df = spark.read.parquet(src)
-    if sort_within_by:
-        cols = [F.col(c) for c in sort_within_by]
-        df = (df.repartitionByRange(n_files, *cols)
-              .sortWithinPartitions(*cols))
-    else:
-        df = df.coalesce(n_files)
-    df.write.mode("overwrite").parquet(dst)
-    return sum(1 for f in os.listdir(dst) if f.endswith(".parquet"))
-
-
-def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
-                       key_cols: Sequence[str],
-                       partition_cols: Sequence[str],
-                       version_col: str | None = None,
-                       fmt: str = "parquet") -> None:
-    """Partition-level MERGE (upsert) into a Hive-partitioned table
-    without a table format: rows in ``updates`` replace base rows with
-    the same key; new keys append. Only the partitions PRESENT IN THE
-    UPDATE are read and rewritten (dynamic partition overwrite) — the
-    standing incremental-ingest primitive when Delta/Iceberg isn't on
-    the cluster.
-
-    Mechanics: the update's partition values prune the base read
-    (partition filter → directory pruning), base rows losing to an
-    update key are anti-joined out, and the union writes back with
-    ``partitionOverwriteMode=dynamic`` so untouched partitions are
-    never listed, read, or rewritten. With ``version_col``, the
-    max-version row wins per key (late-arriving updates can't
-    regress a newer base row); without it the update always wins.
-
-    At 100 TB this touches |affected partitions| of data — the same
-    contract as a MERGE on a partition-aligned key. Keys should not
-    straddle partitions (enforce upstream: partition by a stable
-    function of the key)."""
-    parts = [r.asDict() for r in
-             updates.select(*partition_cols).distinct().collect()]
-    if not parts:
-        return
-    # partition filter: (p1=a AND p2=b) OR ... — bounded by the
-    # update's partition count, prunes the base scan to dirs touched
-    cond = None
-    for p in parts:
-        c = None
-        for k, v in p.items():
-            # null-safe: a NULL partition value lands in
-            # __HIVE_DEFAULT_PARTITION__ and reads back as NULL; a
-            # plain == would never match it, silently dropping that
-            # partition's base rows from the merged rewrite
-            e = F.col(k).eqNullSafe(F.lit(v))
-            c = e if c is None else (c & e)
-        cond = c if cond is None else (cond | c)
-    base = spark.read.format(fmt).load(path).filter(cond)
-    keys = list(key_cols)
-    if version_col is not None:
-        from pyspark.sql.window import Window
-        merged = (base.unionByName(updates)
-                  .withColumn("_rn", F.row_number().over(
-                      Window.partitionBy(*keys)
-                      .orderBy(F.col(version_col).desc())))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
-    else:
-        survivors = base.join(updates.select(*keys).distinct(),
-                              keys, "left_anti")
-        merged = survivors.unionByName(updates)
-    writer = (merged.write.format(fmt).mode("overwrite")
-              .partitionBy(*partition_cols)
-              # per-write option, not session conf: the dynamic mode
-              # must not leak into later overwrite writes
-              .option("partitionOverwriteMode", "dynamic"))
-    writer.save(path)
 
 
 def merge_rollup(spark: SparkSession, rollup_path: str,
@@ -347,17 +209,3 @@ def zorder_key(df: DataFrame, cols: Sequence[str],
             z = z + (F.shiftright(q, b).bitwiseAND(F.lit(1)).cast("long")
                      * F.lit(1 << (b * n + i)))
     return df.withColumn(out_col, z)
-
-
-def zorder_write(df: DataFrame, path: str, cols: Sequence[str],
-                 bits: int = 16, n_files: int = 8) -> None:
-    """Persist ``df`` laid out by z-value: range-partition on the
-    Morton key (balanced output files) and sort within each partition
-    so every file covers a tight multi-column bounding box. One
-    shuffle + local sort; the key column itself is dropped from the
-    written schema (it is reconstructible)."""
-    keyed = zorder_key(df, cols, bits=bits)
-    (keyed.repartitionByRange(n_files, "zvalue")
-     .sortWithinPartitions("zvalue")
-     .drop("zvalue")
-     .write.mode("overwrite").parquet(path))

@@ -1,10 +1,3 @@
-from octosql_spark.streaming.core import (  # noqa: F401
-    read_stream_file, with_watermark, windowed_aggregate,
-    sliding_aggregate, session_aggregate,
-    stream_stream_join, map_trigger, run_to_memory, write_stream,
-    stream_dedup, stream_near_dup_ingest, stream_cluster_ingest,
-    read_cluster_labels, compact_cluster_labels,
-)
 from octosql_spark.streaming.counting_trigger import (  # noqa: F401
     counting_trigger_aggregate,
 )

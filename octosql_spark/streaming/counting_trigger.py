@@ -4,7 +4,7 @@ The reference's counting trigger (execution/triggers.go:17-87) fires a
 key's aggregate every n records seen for that key; each re-emission
 retracts the prior value (custom_trigger_group_by.go:62-233,
 ``previouslySentValues``). Structured Streaming has no per-record
-trigger, so ``map_trigger`` approximates with update mode — THIS
+trigger, so ``cli.map_trigger`` approximates with update mode — THIS
 module is the exact version: a custom stateful operator via
 ``applyInPandasWithState`` keeping (per key) the running aggregate
 state and a records-since-last-emit counter, emitting one output row

@@ -31,6 +31,10 @@ def _default_time_field(df: DataFrame) -> str:
     raise ValueError("tumble: no timestamp column; pass time_field")
 
 
+# the column metadata key Spark's withWatermark sets on its time field
+_WATERMARK_KEY = "spark.watermarkDelayMs"
+
+
 def tumble(df: DataFrame, window_length: str,
            time_field: str | None = None, offset: str = "0 seconds") -> DataFrame:
     """tumble(source, window_length, [time_field], [offset]) — appends
@@ -40,8 +44,16 @@ def tumble(df: DataFrame, window_length: str,
     ``timestamp.Truncate``."""
     tf = time_field or _default_time_field(df)
     w = F.window(F.col(tf), window_length, window_length, offset)
+    end = w.getField("end")
+    delay = next((f.metadata.get(_WATERMARK_KEY) for f in df.schema.fields
+                  if f.name == tf), None)
+    if delay is not None:
+        # a watermarked stream: window_end carries the watermark on,
+        # so a GROUP BY window_end aggregate can run in append mode
+        # (TRIGGER ON WATERMARK) and its state expires with the window
+        end = end.alias("window_end", metadata={_WATERMARK_KEY: delay})
     return (df.withColumn("window_start", w.getField("start"))
-              .withColumn("window_end", w.getField("end")))
+              .withColumn("window_end", end))
 
 
 _INTERVAL_UNITS_US = {
@@ -63,21 +75,19 @@ def interval_micros(interval: str) -> int:
 
 
 def max_diff_watermark(df: DataFrame, max_diff: str, time_field: str,
-                       resolution: str | None = None,
-                       order_col: str | None = None) -> DataFrame:
+                       resolution: str | None = None) -> DataFrame:
     """max_diff_watermark(source, max_diff, time_field, [resolution])
     (table_valued_functions/max_diff_watermark.go:14-180).
 
-    Streaming: this is exactly ``withWatermark`` — use
-    octosql_spark.streaming.with_watermark on a streaming DataFrame.
+    Streaming: this is exactly ``DataFrame.withWatermark``, which the
+    transpiler applies to a streaming source instead of calling this.
 
     Batch emulation (the reference treats files as streams in file
     order): the watermark before row i is
     ``max_{j<i}(round(ts_j, resolution)) - max_diff``, and rows at or
     below it are dropped (:148-153). We reproduce that with a running
-    max over the file order (``order_col``; defaults to a
-    monotonically increasing id, which follows file order for
-    file-based sources)."""
+    max over the file order (a monotonically increasing id, which
+    follows file order for file-based sources)."""
     ts = F.col(time_field)
     # The reference rounds event time *down* to `resolution` (default
     # 1s) before updating the watermark (max_diff_watermark.go:108-160).
@@ -90,17 +100,7 @@ def max_diff_watermark(df: DataFrame, max_diff: str, time_field: str,
         (F.floor(F.unix_micros(ts.cast("timestamp")) / F.lit(res_us))
          * F.lit(res_us)).cast("long")).cast(ts_dtype)
     diff = F.expr(f"INTERVAL {max_diff}")
-    if order_col is not None:
-        # caller-supplied ordering: the running max needs a GLOBAL sort
-        # — test/emulation only, not a scale path (real streams use
-        # streaming.with_watermark)
-        w = (Window.orderBy(F.col(order_col))
-             .rowsBetween(Window.unboundedPreceding, -1))
-        wm = F.max(rounded).over(w) - diff
-        return (df.withColumn("_wm", wm)
-                  .filter(F.col("_wm").isNull() | (ts > F.col("_wm")))
-                  .drop("_wm"))
-    # Default file order, computed WITHOUT a single-task global sort:
+    # File order, computed WITHOUT a single-task global sort:
     # split index is the order prefix, so
     #   running max before row i = max(max of all earlier splits,
     #                                  prefix max within this split)

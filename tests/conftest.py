@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 import warnings
 
 import pytest
@@ -74,11 +75,6 @@ SLOW_TESTS = {
     "test_scale_report.py::test_repartition1_plant_is_detectable_by_ratio",
     "test_stdin_tsv.py::test_stdin_json",
     "test_stdin_tsv.py::test_stdin_lines_seqsum",
-    "test_streaming.py::test_stream_cluster_ingest_combined_bucket_cap",
-    "test_streaming.py::test_stream_cluster_ingest_matches_full_recompute",
-    "test_streaming.py::test_stream_cluster_ingest_restart_and_compaction",
-    "test_streaming.py::test_stream_near_dup_ingest",
-    "test_streaming.py::test_stream_near_dup_ingest_epoch_replay_idempotent",
     "test_streaming.py::test_stream_stream_join",
     "test_streaming.py::test_stream_stream_left_outer_emits_unmatched",
     "test_workloads.py::test_workload_runs[ann_lsh_consistency]",
@@ -129,3 +125,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def read_stream(spark, path, fmt="json", **options):
+    """A streaming file source over ``path``; its schema is read from
+    the current contents with the same reader options."""
+    schema = spark.read.format(fmt).options(**options).load(path).schema
+    return (spark.readStream.format(fmt).schema(schema).options(**options)
+            .load(path))
+
+
+def run_to_memory(df, output_mode="append", timeout_s=120.0):
+    """Drain a streaming frame once (Trigger.AvailableNow) into an
+    in-memory table and return that table."""
+    name = f"mem_{uuid.uuid4().hex[:8]}"
+    q = (df.writeStream.format("memory").queryName(name)
+         .outputMode(output_mode).trigger(availableNow=True).start())
+    if not q.awaitTermination(timeout_s):
+        q.stop()  # a silent partial table is worse than the error
+        raise TimeoutError(f"streaming pass did not finish in {timeout_s}s")
+    return df.sparkSession.table(name)
+
+
+def make_wav(samples, n_ch=1, rate=8000):
+    """16-bit PCM WAV bytes of ``samples`` (floats in [-1, 1]); with
+    ``n_ch=2`` every sample is written to both channels."""
+    import struct
+
+    import numpy as np
+    ints = np.clip(samples * 32767, -32768, 32767).astype("<i2")
+    if n_ch == 2:
+        ints = np.repeat(ints, 2)
+    pcm = ints.tobytes()
+    fmt = struct.pack("<HHIIHH", 1, n_ch, rate,
+                      rate * 2 * n_ch, 2 * n_ch, 16)
+    return (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm)

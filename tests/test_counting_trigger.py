@@ -6,7 +6,7 @@ from __future__ import annotations
 import json
 import uuid
 
-from octosql_spark import streaming as st
+from conftest import read_stream, run_to_memory
 from octosql_spark.streaming.counting_trigger import counting_trigger_aggregate
 
 
@@ -19,12 +19,12 @@ def test_counting_trigger_emits_every_n(spark, tmp_path):
     p.mkdir()
     (p / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
 
-    src = st.read_stream_file(spark, str(p), "json")
+    src = read_stream(spark, str(p))
     agg = counting_trigger_aggregate(src, ["user"],
                                      [("count", "*", "cnt"),
                                       ("sum", "v", "sv"),
                                       ("avg", "v", "av")], n=2)
-    out = st.run_to_memory(agg, f"ct_{uuid.uuid4().hex[:8]}")
+    out = run_to_memory(agg)
     got = {(r.user, r.emitted_at_count): (r.cnt, r.sv, r.av)
            for r in out.collect()}
     # user 1 at 2 records: v=1,2
@@ -44,11 +44,9 @@ def test_counting_trigger_state_across_batches(spark, tmp_path):
     p.mkdir()
     (p / "a.json").write_text(json.dumps({"user": 7, "v": 1.0}))
     chk = str(tmp_path / "chk")
-    name = f"ct_{uuid.uuid4().hex[:8]}"
 
     outdir = str(tmp_path / "out")
-    src = st.read_stream_file(spark, str(p), "json",
-                              maxFilesPerTrigger="1")
+    src = read_stream(spark, str(p), maxFilesPerTrigger="1")
     agg = counting_trigger_aggregate(src, ["user"],
                                      [("count", "*", "cnt")], n=2)
 
@@ -86,12 +84,12 @@ def test_counting_trigger_random_replay(spark, tmp_path):
         p.mkdir()
         (p / "a.json").write_text(
             "\n".join(json.dumps(r) for r in rows))
-        src = st.read_stream_file(spark, str(p), "json")
+        src = read_stream(spark, str(p))
         agg = counting_trigger_aggregate(
             src, ["user"], [("count", "*", "cnt"), ("sum", "v", "sv"),
                             ("min", "v", "mn"), ("max", "v", "mx"),
                             ("avg", "v", "av")], n=n)
-        out = st.run_to_memory(agg, f"ctr_{uuid.uuid4().hex[:8]}")
+        out = run_to_memory(agg)
         got = {(r.user, r.emitted_at_count):
                (r.cnt, round(r.sv, 6), r.mn, r.mx, round(r.av, 6))
                for r in out.collect()}
@@ -143,23 +141,18 @@ def test_count_string_column_counts_non_nulls(spark, tmp_path):
     over a string column raise a clean driver-side error (the CLI
     route then falls back to the generic mapping); n=0 rejects."""
     import json as _json
-    import uuid
 
     import pytest
-
-    from octosql_spark import streaming as st
-    from octosql_spark.streaming.counting_trigger import (
-        counting_trigger_aggregate)
 
     p = tmp_path / "cstr"
     p.mkdir()
     rows = [{"user": 1, "name": "a"}, {"user": 1, "name": None},
             {"user": 1, "name": "b"}, {"user": 1, "name": "c"}]
     (p / "a.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    src = st.read_stream_file(spark, str(p), "json")
+    src = read_stream(spark, str(p))
     agg = counting_trigger_aggregate(
         src, ["user"], [("count", "name", "c")], n=2)
-    out = st.run_to_memory(agg, f"cs_{uuid.uuid4().hex[:8]}")
+    out = run_to_memory(agg)
     got = {(r.user, r.emitted_at_count, r.c) for r in out.collect()}
     # records 1..4; name null at record 2 → counts 1,3 at boundaries
     assert got == {(1, 2, 1), (1, 4, 3)}

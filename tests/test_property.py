@@ -1,13 +1,16 @@
 """Property-based tests (hypothesis) for the pure-Python kernels:
 the type algebra (TypeSum lattice laws the reference relies on,
-octosql/types.go:239-382) and CSV cell inference."""
+octosql/types.go:239-382), CSV cell inference and the media decoders
+on damaged input."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import make_wav
 from octosql_spark import types as ot
+from octosql_spark.datapipe import multimodal as mm
 from octosql_spark.schema_infer import _infer_csv_cell
 
 _SCALARS = [ot.NULL, ot.INT, ot.FLOAT, ot.BOOLEAN, ot.STRING, ot.TIME]
@@ -74,3 +77,53 @@ def test_csv_cell_total(s):
     # inference is total: every cell gets exactly one type
     t = _infer_csv_cell(s)
     assert t in (ot.INT, ot.FLOAT, ot.BOOLEAN, ot.TIME, ot.STRING, ot.NULL)
+
+
+def _media(kind: str, w: int, h: int, seed: int) -> bytes:
+    """Valid seed bytes: a random w×h PNG (grey or RGB), baseline JPEG
+    (grey, RGB or 4:2:0 RGB) or a short 16-bit WAV."""
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    if kind == "wav":
+        return make_wav(rng.uniform(-1, 1, w * h), n_ch=1 + seed % 2)
+    ch = 1 if kind.endswith("grey") else 3
+    arr = rng.integers(0, 256, (h, w, ch), dtype=np.uint8)
+    if kind.startswith("png"):
+        return mm._png_encode(arr)
+    return mm._jpeg_encode(arr, subsample=kind == "jpeg420")
+
+
+# (op, position, byte): flip one byte, cut the tail, or insert a byte;
+# positions wrap around the current length
+_MUTATION = st.tuples(st.sampled_from(["flip", "cut", "insert"]),
+                      st.integers(0, 1 << 16), st.integers(0, 255))
+
+
+def _mutate(data: bytes, ops) -> bytes:
+    b = bytearray(data)
+    for op, pos, byte in ops:
+        if not b:
+            break
+        pos %= len(b)
+        if op == "flip":
+            b[pos] ^= byte or 0xFF
+        elif op == "cut":
+            del b[pos:]
+        else:
+            b.insert(pos, byte)
+    return bytes(b)
+
+
+@settings(max_examples=300, derandomize=True, deadline=None)
+@given(st.sampled_from(["png_grey", "png_rgb", "jpeg_grey", "jpeg_rgb",
+                        "jpeg420", "wav"]),
+       st.integers(1, 17), st.integers(1, 9), st.integers(0, 2**31),
+       st.lists(_MUTATION, min_size=1, max_size=4))
+def test_decoders_never_raise_on_damaged_media(kind, w, h, seed, ops):
+    # a damaged blob is a NULL / stub-path row, never a failed task
+    data = _mutate(_media(kind, w, h, seed), ops)
+    for decode in (mm._pixels_decode, mm._wav_decode):
+        arr = decode(data)
+        assert arr is None or arr.flags.writeable
+    mm._parse_image_header(data)
+    mm._parse_av_header(data)

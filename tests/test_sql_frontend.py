@@ -44,6 +44,22 @@ def test_arrow_and_star(spark, views):
                  "aggregate(array(1, 2, 3), 0, (acc, x) -> acc + x) AS a"
           ).collect()[0]
     assert (r.t, r.a) == ([2, 3], 6)
+    # a lambda parameter is not the same-named column: over a String
+    # `x` its `+` stays numeric, over an Int `x` its `/` stays a
+    # float division of the array's elements, over a List `x` its
+    # `len` stays a string length
+    spark.sql("SELECT 'a' AS x").createOrReplaceTempView("lambda_s")
+    spark.sql("SELECT 5 AS x").createOrReplaceTempView("lambda_i")
+    spark.sql("SELECT array(1) AS x").createOrReplaceTempView("lambda_l")
+    r = q(spark, "SELECT transform(array(1, 2), x -> x + 1) AS t "
+                 "FROM lambda_s").collect()[0]
+    assert r.t == [2, 3]
+    r = q(spark, "SELECT transform(array(1.5, 3.0), x -> x / 2) AS t "
+                 "FROM lambda_i").collect()[0]
+    assert r.t == [0.75, 1.5]
+    r = q(spark, "SELECT transform(array('ab', 'c'), x -> len(x)) AS t "
+                 "FROM lambda_l").collect()[0]
+    assert r.t == [2, 1]
 
 
 def test_type_assertion(spark, views, shape_t):

@@ -1,58 +1,12 @@
-"""Bucketed co-located joins (zero-Exchange plans) and salted skew
-joins — the storage-layout scale tools."""
+"""Storage-layout scale tools: salted skew joins, skew profiles,
+incremental rollups, SCD2 and Z-order keys, plus partition pruning and
+columnar formats through the SQL front end."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from octosql_spark.storage import read_bucketed, salted_join, write_bucketed
-
-
-@pytest.fixture
-def bucketed_pair(spark, tmp_path):
-    spark.sql("DROP TABLE IF EXISTS _bt_orders")
-    spark.sql("DROP TABLE IF EXISTS _bt_custs")
-    orders = spark.range(0, 10_000).select(
-        (F.col("id") % 500).alias("custkey"),
-        (F.col("id") * 3).alias("amount"))
-    custs = spark.range(0, 500).select(
-        F.col("id").alias("custkey"),
-        F.concat(F.lit("c"), F.col("id")).alias("name"))
-    write_bucketed(orders, "_bt_orders", ["custkey"], 8,
-                   sort_cols=["custkey"],
-                   path=str(tmp_path / "bt_orders"))
-    write_bucketed(custs, "_bt_custs", ["custkey"], 8,
-                   sort_cols=["custkey"],
-                   path=str(tmp_path / "bt_custs"))
-    yield "_bt_orders", "_bt_custs"
-    spark.sql("DROP TABLE IF EXISTS _bt_orders")
-    spark.sql("DROP TABLE IF EXISTS _bt_custs")
-
-
-def test_bucketed_join_no_shuffle(spark, bucketed_pair):
-    t1, t2 = bucketed_pair
-    # disable auto-broadcast so the join exercises the bucket layout
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = read_bucketed(spark, t1).join(read_bucketed(spark, t2),
-                                          "custkey")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        # co-located buckets: sort-merge join with NO Exchange
-        assert "Exchange" not in plan
-        assert j.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucketed_groupby_no_shuffle(spark, bucketed_pair):
-    t1, _ = bucketed_pair
-    agg = (read_bucketed(spark, t1).groupBy("custkey")
-           .agg(F.sum("amount").alias("s")))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert agg.count() == 500
+from octosql_spark.storage import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -84,52 +38,22 @@ def test_salted_left_join(spark):
 
 
 def test_partitioned_write_prunes(spark, tmp_path):
-    from octosql_spark.storage import read_partitioned, write_partitioned
+    from octosql_spark.sql import run_query
     df = spark.range(0, 1000).select(
         F.col("id").alias("v"),
         F.when(F.col("id") % 3 == 0, "en").when(F.col("id") % 3 == 1, "fr")
         .otherwise("de").alias("lang"))
-    p = str(tmp_path / "part")
-    write_partitioned(df, p, ["lang"])
-    back = read_partitioned(spark, p).filter(F.col("lang") == "en")
+    p = str(tmp_path / "part.parquet")
+    df.write.mode("overwrite").partitionBy("lang").parquet(p)
+    back = run_query(spark, f"SELECT v, lang FROM '{p}' WHERE lang = 'en'").df
     plan = back._jdf.queryExecution().executedPlan().toString()
     # the lang=en predicate prunes partitions at planning time
-    assert "PartitionFilters: [isnotnull(lang" in plan.replace("#", "")[:10**6] \
-        or "PartitionFilters" in plan
+    import re
+    assert re.search(r"PartitionFilters: \[[^\]]*lang", plan), plan
     assert back.count() == 334
     # only the en directory is read
-    import re
     scans = [l for l in plan.splitlines() if "Location" in l]
     assert all("lang=fr" not in l for l in scans)
-
-
-def test_compact_parquet(spark, tmp_path):
-    import os
-    from octosql_spark.storage import compact_parquet
-    src = str(tmp_path / "frag")
-    # fragment: 40 tiny files
-    spark.range(0, 40000).withColumn("k", F.col("id") % 100) \
-        .repartition(40).write.parquet(src)
-    assert sum(1 for f in os.listdir(src) if f.endswith(".parquet")) == 40
-    dst = str(tmp_path / "compact")
-    n = compact_parquet(spark, src, dst, target_mb=256)
-    assert n == 1  # tiny input → single right-sized file
-    assert spark.read.parquet(dst).count() == 40000
-
-    # clustered variant: range-partitioned + sorted files
-    dst2 = str(tmp_path / "clustered")
-    compact_parquet(spark, src, dst2, target_mb=256, sort_within_by=["k"])
-    out = spark.read.parquet(dst2)
-    assert out.count() == 40000
-    # sorted within files: per-partition k is nondecreasing
-    from pyspark.sql.window import Window
-    import pyspark.sql.functions as SF
-    chk = (out.select("k", SF.spark_partition_id().alias("pid"),
-                      SF.monotonically_increasing_id().alias("mid")))
-    w = Window.partitionBy("pid").orderBy("mid")
-    bad = (chk.withColumn("prev", SF.lag("k").over(w))
-           .filter(SF.col("prev") > SF.col("k")).count())
-    assert bad == 0
 
 
 def test_key_skew_profile_values(spark):
@@ -160,51 +84,6 @@ def test_orc_roundtrip_and_query(spark, tmp_path):
     got = back.filter("n_regionkey = 2").count()
     want = n.filter("n_regionkey = 2").count()
     assert got == want
-
-
-def test_upsert_partitioned(spark, tmp_path):
-    """Partition-level MERGE: updated keys replace, new keys append,
-    untouched partitions stay byte-identical on disk."""
-    import os
-    from octosql_spark.storage import upsert_partitioned, write_partitioned
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40)],
-        "id long, part string, v long")
-    path = str(tmp_path / "tbl")
-    write_partitioned(base, path, ["part"])
-    untouched = {f: os.path.getmtime(os.path.join(path, "part=c", f))
-                 for f in os.listdir(os.path.join(path, "part=c"))
-                 if f.endswith(".parquet")}
-    updates = spark.createDataFrame(
-        [(2, "a", 21), (5, "b", 50)], "id long, part string, v long")
-    upsert_partitioned(spark, path, updates, ["id"], ["part"])
-    got = {(r.id, r.part, r.v)
-           for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a", 10), (2, "a", 21), (3, "b", 30),
-                   (4, "c", 40), (5, "b", 50)}
-    # dynamic overwrite: partition c was never rewritten
-    after = {f: os.path.getmtime(os.path.join(path, "part=c", f))
-             for f in os.listdir(os.path.join(path, "part=c"))
-             if f.endswith(".parquet")}
-    assert after == untouched
-
-
-def test_upsert_partitioned_version_wins(spark, tmp_path):
-    """With version_col, a LATE (older) update cannot regress a newer
-    base row; a newer update replaces."""
-    from octosql_spark.storage import upsert_partitioned, write_partitioned
-    base = spark.createDataFrame(
-        [(1, "a", 10, 5), (2, "a", 20, 5)],
-        "id long, part string, v long, ver long")
-    path = str(tmp_path / "tbl")
-    write_partitioned(base, path, ["part"])
-    updates = spark.createDataFrame(
-        [(1, "a", 11, 9), (2, "a", 22, 3)],  # id 2 is stale (ver 3 < 5)
-        "id long, part string, v long, ver long")
-    upsert_partitioned(spark, path, updates, ["id"], ["part"],
-                       version_col="ver")
-    got = {(r.id, r.v, r.ver) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, 11, 9), (2, 20, 5)}
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):
@@ -252,26 +131,6 @@ def test_merge_rollup_incremental_equals_full(spark, tmp_path):
     assert got == want
 
 
-def test_upsert_partitioned_null_partition_value(spark, tmp_path):
-    """A NULL partition value lands in __HIVE_DEFAULT_PARTITION__;
-    the base-pruning filter must be null-safe or that partition's
-    surviving base rows are silently dropped by the rewrite."""
-    from octosql_spark.storage import upsert_partitioned, write_partitioned
-    base = spark.createDataFrame(
-        [(1, None, 10), (2, None, 20), (3, "a", 30)],
-        "id long, part string, v long")
-    path = str(tmp_path / "tbl")
-    write_partitioned(base, path, ["part"])
-    updates = spark.createDataFrame(
-        [(2, None, 21)], "id long, part string, v long")
-    upsert_partitioned(spark, path, updates, ["id"], ["part"])
-    got = {(r.id, r.part, r.v)
-           for r in spark.read.parquet(path).collect()}
-    # pre-fix: (1, None, 10) vanished — the == filter never matched
-    # the NULL partition so base row 1 wasn't carried into the rewrite
-    assert got == {(1, None, 10), (2, None, 21), (3, "a", 30)}
-
-
 def test_scd2_build_hand_fixture(spark):
     from octosql_spark.storage import scd2_build
     rows = [
@@ -314,14 +173,17 @@ def test_zorder_tightens_file_bounding_boxes(spark, tmp_path):
     what parquet min/max stats let a 2-predicate scan skip."""
     import pyspark.sql.functions as F
     from octosql_spark.catalog import load_table
-    from octosql_spark.storage import zorder_write
+    from octosql_spark.storage import zorder_key
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem") \
         .select("l_orderkey", "l_partkey", "l_suppkey")
     nat, zord = str(tmp_path / "nat"), str(tmp_path / "zord")
     # "natural": sorted by orderkey only (the ingest order layout)
     (li.repartitionByRange(8, "l_orderkey")
      .sortWithinPartitions("l_orderkey").write.parquet(nat))
-    zorder_write(li, zord, ["l_partkey", "l_suppkey"], n_files=8)
+    # z-order: range-partition on the Morton key, sort within files
+    (zorder_key(li, ["l_partkey", "l_suppkey"])
+     .repartitionByRange(8, "zvalue").sortWithinPartitions("zvalue")
+     .drop("zvalue").write.parquet(zord))
 
     def mean_bbox_area(path):
         df = spark.read.parquet(path)

@@ -1,295 +1,136 @@
-"""Streaming subset tests (SURVEY.md §2.8/M6): file stream sources,
-watermarks, windowed aggregation, stream-stream join, trigger mapping.
-All runs use Trigger.AvailableNow (end-of-stream semantics — finite
-inputs, like the reference's batch-as-stream model) so they terminate."""
+"""Streaming subset tests (SURVEY.md §2.8/M6) through the SQL surface:
+``?tail=true`` sources, the ``max_diff_watermark``/``tumble`` TVFs,
+Spark's ``window``/``session_window``, stream-stream joins and the
+TRIGGER mapping. Every run drains its input once (Trigger.AvailableNow
+— end-of-stream semantics, like the reference's batch-as-stream model)
+so it terminates."""
 
 from __future__ import annotations
 
 import json
-import uuid
+import os
 
 import pytest
 
-from octosql_spark import streaming as st
+from conftest import run_to_memory
+from octosql_spark.cli import map_trigger
+
+_EVENTS = [
+    {"ts": "2024-01-01T00:00:05", "user": 1, "v": 1.0},
+    {"ts": "2024-01-01T00:00:30", "user": 2, "v": 2.0},
+    {"ts": "2024-01-01T00:01:10", "user": 1, "v": 3.0},
+    {"ts": "2024-01-01T00:02:20", "user": 2, "v": 4.0},
+    {"ts": "2024-01-01T00:00:01", "user": 1, "v": 9.0},  # late
+]
 
 
 @pytest.fixture()
-def events_dir(tmp_path):
-    rows = [
-        {"ts": "2024-01-01T00:00:05", "user": 1, "v": 1.0},
-        {"ts": "2024-01-01T00:00:30", "user": 2, "v": 2.0},
-        {"ts": "2024-01-01T00:01:10", "user": 1, "v": 3.0},
-        {"ts": "2024-01-01T00:02:20", "user": 2, "v": 4.0},
-        {"ts": "2024-01-01T00:00:01", "user": 1, "v": 9.0},  # late
-    ]
-    p = tmp_path / "stream"
-    p.mkdir()
-    (p / "part1.json").write_text("\n".join(json.dumps(r) for r in rows))
+def events_file(tmp_path):
+    # a tailed file is staged by complete lines: end every row with \n
+    p = tmp_path / "events.json"
+    p.write_text("".join(json.dumps(r) + "\n" for r in _EVENTS))
     return str(p)
 
 
-def _mem(df, mode="append"):
-    return st.run_to_memory(df, f"t_{uuid.uuid4().hex[:8]}", output_mode=mode)
+def _sql_to_memory(spark, query, mode=None):
+    """Run ``query`` through ``run_query`` into a memory table in
+    ``mode`` (default: the one its TRIGGER maps to) and collect it."""
+    from octosql_spark.sources.files import (stop_tail_stagers,
+                                              tail_stager_scope)
+    from octosql_spark.sql import run_query
+    with tail_stager_scope() as stagers:
+        res = run_query(spark, query)
+    try:
+        assert res.df.isStreaming
+        if mode is None:
+            mode, _trigger = map_trigger(res.triggers[0])
+        return run_to_memory(res.df, mode).collect()
+    finally:
+        stop_tail_stagers(stagers)  # direct run_query: no CLI teardown
 
 
-def test_read_stream_and_windowed_agg(spark, events_dir):
-    src = st.read_stream_file(spark, events_dir, "json")
-    assert src.isStreaming
-    from pyspark.sql import functions as F
-    typed = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    wm = st.with_watermark(typed, "ts", "10 seconds")
-    agg = st.windowed_aggregate(wm, "1 minute", ["user"],
-                                [("count", "*", "n"), ("sum", "v", "sv")],
-                                time_field="ts")
-    # append mode: only watermark-finalized windows emit — the last
-    # window (00:02) is held back because Spark does NOT flush state at
-    # end-of-stream (deviation from the reference's WatermarkMaxValue
-    # flush; use map_trigger("ON END OF STREAM") → update mode for that)
-    out = _mem(agg)
-    rows = {(r.user, str(r.window_start)[11:16], r.n, r.sv)
-            for r in out.collect()}
+def _watermarked(src, max_diff, time_field):
+    return (f"max_diff_watermark(source => TABLE({src}), "
+            f"max_diff => INTERVAL {max_diff}, "
+            f"time_field => DESCRIPTOR({time_field}))")
+
+
+def test_read_stream_and_windowed_agg(spark, events_file):
+    query = ("SELECT user, window_start, window_end, COUNT(*) AS n, "
+             "SUM(v) AS sv FROM tumble(source => TABLE(SELECT * FROM "
+             + _watermarked(f"SELECT * FROM '{events_file}?tail=true'",
+                            "10 SECOND", "ts")
+             + "), window_length => INTERVAL 1 MINUTE) "
+             "GROUP BY user, window_start, window_end TRIGGER {}")
+
+    def windows(trigger):
+        return {(r.user, str(r.window_start)[11:16], r.n, r.sv)
+                for r in _sql_to_memory(spark, query.format(trigger))}
+
+    # ON WATERMARK (append mode): only watermark-finalized windows
+    # emit — the last window (00:02) is held back because Spark does
+    # NOT flush state at end-of-stream (deviation from the reference's
+    # WatermarkMaxValue flush; ON END OF STREAM → update mode for that)
+    rows = windows("ON WATERMARK")
     assert (1, "00:00", 2, 10.0) in rows  # late row in same micro-batch counts
     assert (2, "00:00", 1, 2.0) in rows
     assert not any(w == "00:02" for (_, w, _, _) in rows)
 
     # EOS trigger mapping flushes everything:
-    mode, _kw = st.map_trigger("ON END OF STREAM")
-    out2 = _mem(st.windowed_aggregate(wm, "1 minute", ["user"],
-                                      [("count", "*", "n"), ("sum", "v", "sv")],
-                                      time_field="ts"), mode=mode)
-    rows2 = {(r.user, str(r.window_start)[11:16], r.n, r.sv)
-             for r in out2.collect()}
+    rows2 = windows("ON END OF STREAM")
     assert (2, "00:02", 1, 4.0) in rows2
 
 
-def test_stream_stream_join(spark, events_dir):
-    from pyspark.sql import functions as F
-    src = st.read_stream_file(spark, events_dir, "json")
-    typed = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    left = typed.select("user", F.col("ts").alias("lts"), "v")
-    right = typed.select(F.col("user").alias("user_r"),
-                         F.col("ts").alias("rts"))
-    joined = st.stream_stream_join(
-        left, right,
-        (F.col("user") == F.col("user_r"))
-        & (F.col("rts") >= F.col("lts"))
-        & (F.col("rts") <= F.col("lts") + F.expr("INTERVAL 1 MINUTE")),
-        "inner",
-        left_watermark=("lts", "10 seconds"),
-        right_watermark=("rts", "10 seconds"))
-    out = _mem(joined)
-    assert out.count() > 0
+def test_stream_stream_join(spark, events_file):
+    side = _watermarked(f"SELECT * FROM '{events_file}?tail=true'",
+                        "10 SECOND", "ts")
+    rows = _sql_to_memory(
+        spark,
+        f"SELECT l.user AS user, l.ts AS lts, r.ts AS rts, l.v AS v "
+        f"FROM {side} l JOIN {side} r ON l.user = r.user "
+        "AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 MINUTE",
+        mode="append")
+    assert len(rows) > 0
 
 
 def test_trigger_mapping():
-    assert st.map_trigger(None) == ("update", {"availableNow": True})
-    assert st.map_trigger("ON END OF STREAM") == ("update", {"availableNow": True})
-    assert st.map_trigger("ON WATERMARK") == ("append", {})
-    mode, kw = st.map_trigger("COUNTING 100")
+    assert map_trigger(None) == ("update", {"availableNow": True})
+    assert map_trigger("ON END OF STREAM") == ("update", {"availableNow": True})
+    assert map_trigger("ON WATERMARK") == ("append", {})
+    mode, kw = map_trigger("COUNTING 100")
     assert mode == "update"
     with pytest.raises(ValueError):
-        st.map_trigger("DELAY 5s")  # reference panics on Delay too
+        map_trigger("DELAY 5s")  # reference panics on Delay too
 
 
-def test_update_mode_counting_equivalent(spark, events_dir):
-    from pyspark.sql import functions as F
-    src = st.read_stream_file(spark, events_dir, "json")
-    agg = src.groupBy("user").agg(F.count(F.lit(1)).alias("n"))
-    mode, kw = st.map_trigger("COUNTING 1")
-    out = _mem(agg, mode=mode)
-    rows = {(r.user, r.n) for r in out.collect()}
+def test_update_mode_counting_equivalent(spark, events_file):
+    got = _sql_to_memory(
+        spark, f"SELECT user, COUNT(*) AS n FROM '{events_file}?tail=true' "
+               "GROUP BY user TRIGGER COUNTING 1")
+    rows = {(r.user, r.n) for r in got}
     assert rows == {(1, 3), (2, 2)}
 
 
-def test_sliding_and_session_aggregates(spark, events_dir):
-    from pyspark.sql import functions as F
-    src = st.read_stream_file(spark, events_dir, "json")
-    typed = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    slide = st.sliding_aggregate(typed, "2 minutes", "1 minute", ["user"],
-                                 [("count", "*", "n")], "ts")
-    out = _mem(slide, mode="update")
-    rows = {(r.user, str(r.window_start)[11:16]): r.n for r in out.collect()}
+def test_sliding_and_session_aggregates(spark, events_file):
+    src = f"'{events_file}?tail=true'"
+    slide = _sql_to_memory(
+        spark, "SELECT user, window.start AS window_start, COUNT(*) AS n "
+               f"FROM {src} GROUP BY user, window(ts, '2 minutes', '1 minute')",
+        mode="update")
+    rows = {(r.user, str(r.window_start)[11:16]): r.n for r in slide}
     # user 1 events at 00:00:05, 00:01:10 (+late 00:00:01) fall in the
     # 23:59-00:01 and 00:00-00:02 and 00:01-00:03 sliding windows
     assert rows[(1, "00:00")] == 3  # all three user-1 events
     # session-window streaming aggs support append (with watermark) or
     # complete — not update (Spark constraint); finite input → complete
-    sess = st.session_aggregate(typed, "1 minute", ["user"],
-                                [("count", "*", "n")], "ts")
-    out2 = _mem(sess, mode="complete")
-    got = {(r.user, r.n) for r in out2.collect()}
+    sess = _sql_to_memory(
+        spark, f"SELECT user, COUNT(*) AS n FROM {src} "
+               "GROUP BY user, session_window(ts, '1 minute')",
+        mode="complete")
+    got = {(r.user, r.n) for r in sess}
     # user 1: 00:00:01+00:00:05 chain (gap 4s); 00:01:10 is 65s later
     # → a separate session. user 2: two singleton sessions.
     assert got == {(1, 2), (1, 1), (2, 1)}
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Replayed keys are dropped across micro-batches while the
-    watermark still covers them; batch mode degrades to distinct."""
-    import os
-    from pyspark.sql import functions as F
-    p = tmp_path / "dedup_stream"
-    p.mkdir()
-    rows1 = [{"ts": "2024-01-01T00:00:05", "doc": "a", "v": 1},
-             {"ts": "2024-01-01T00:00:06", "doc": "b", "v": 2}]
-    rows2 = [{"ts": "2024-01-01T00:00:07", "doc": "a", "v": 3},   # replay
-             {"ts": "2024-01-01T00:00:08", "doc": "c", "v": 4}]
-    f1, f2 = p / "p1.json", p / "p2.json"
-    f1.write_text("\n".join(json.dumps(r) for r in rows1))
-    f2.write_text("\n".join(json.dumps(r) for r in rows2))
-    os.utime(f1, (1, 1)); os.utime(f2, (2, 2))  # order micro-batches
-    src = st.read_stream_file(spark, str(p), "json",
-                              maxFilesPerTrigger=1)
-    typed = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    out = st.stream_dedup(typed, ["doc"], "ts", "1 minute")
-    got = _mem(out).collect()
-    docs = sorted(r.doc for r in got)
-    assert docs == ["a", "b", "c"]  # the replayed "a" was dropped
-    kept_a = [r.v for r in got if r.doc == "a"]
-    assert kept_a == [1]            # first occurrence wins
-
-    # batch path: same call, plain DataFrame
-    b = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3)], "doc string, v long")
-    assert st.stream_dedup(b, ["doc"]).count() == 2
-
-
-def test_stream_ingest_upsert_partitioned(spark, tmp_path):
-    """Incremental-ingest upsert: foreachBatch applies each
-    micro-batch as a partition-level MERGE, so a key replayed in a
-    later batch REPLACES its earlier row instead of duplicating —
-    the lakehouse upsert pattern on plain parquet."""
-    import os
-    from pyspark.sql import functions as F
-    from octosql_spark.storage import upsert_partitioned, write_partitioned
-
-    table = str(tmp_path / "table")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (9, "z", 90)], "id long, part string, v long")
-    write_partitioned(base, table, ["part"])
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    b1 = [{"id": 2, "part": "a", "v": 20},
-          {"id": 3, "part": "b", "v": 30}]
-    b2 = [{"id": 2, "part": "a", "v": 21},   # replay: must replace
-          {"id": 4, "part": "b", "v": 40}]
-    f1, f2 = src / "b1.json", src / "b2.json"
-    f1.write_text("\n".join(json.dumps(r) for r in b1))
-    f2.write_text("\n".join(json.dumps(r) for r in b2))
-    os.utime(f1, (1, 1)); os.utime(f2, (2, 2))
-
-    stream = (st.read_stream_file(spark, str(src), "json",
-                                  maxFilesPerTrigger=1)
-              .select(F.col("id").cast("long"), "part",
-                      F.col("v").cast("long")))
-    q = (stream.writeStream
-         .foreachBatch(lambda bdf, _id: upsert_partitioned(
-             spark, table, bdf, ["id"], ["part"]))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
-
-    got = {(r.id, r.part, r.v) for r in spark.read.parquet(table).collect()}
-    assert got == {(1, "a", 10), (9, "z", 90), (2, "a", 21),
-                   (3, "b", 30), (4, "b", 40)}
-
-
-def test_stream_near_dup_ingest(spark, tmp_path):
-    """Streaming near-dup-free ingest with a STORED band index: batch
-    1 seeds corpus+index; batch 2's exact copy and one-word-changed
-    near copy of seeded docs are rejected by the index probe, a fresh
-    doc is accepted, and a within-batch near-dup pair collapses to
-    its min id. The index grows only by accepted documents."""
-    import os
-    from pyspark.sql import functions as F
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "sun sets slowly behind the tall green hills of summer")
-    seeded2 = ("many colorful birds sing sweet morning songs in the "
-               "old oak tree near the quiet village river bank today")
-    fresh = ("completely different vocabulary about spacecraft "
-             "engines orbital mechanics and interplanetary travel "
-             "using ion propulsion systems for deep space missions")
-    near = base.replace("lazy", "sleepy")          # near dup of doc 1
-    twin_a = ("gentle ocean waves crash softly against the rocky "
-              "northern shore as seagulls circle high above the old "
-              "wooden fishing boats anchored in the misty harbor")
-    twin_b = twin_a.replace("misty", "foggy")      # near dup of twin_a
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    b1 = [{"doc_id": 1, "text": base}, {"doc_id": 2, "text": seeded2}]
-    b2 = [{"doc_id": 10, "text": base},    # exact copy → rejected
-          {"doc_id": 11, "text": near},    # near copy → rejected
-          {"doc_id": 12, "text": fresh},   # new → accepted
-          {"doc_id": 13, "text": twin_a},  # batch-internal pair:
-          {"doc_id": 14, "text": twin_b}]  # keep 13, drop 14
-    f1, f2 = src / "b1.json", src / "b2.json"
-    f1.write_text("\n".join(json.dumps(r) for r in b1))
-    f2.write_text("\n".join(json.dumps(r) for r in b2))
-    os.utime(f1, (1, 1)); os.utime(f2, (2, 2))
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    stream = (st.read_stream_file(spark, str(src), "json",
-                                  maxFilesPerTrigger=1)
-              .select(F.col("doc_id").cast("long"), "text"))
-    q = st.stream_near_dup_ingest(
-        stream, corpus, index,
-        checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-
-    got = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert got == {1, 2, 12, 13}
-    idx_ids = {r.corpus_id for r in spark.read.parquet(index).collect()}
-    assert idx_ids == {1, 2, 12, 13}  # bands only for accepted docs
-
-
-def test_checkpoint_restart_resumes_not_reprocesses(spark, tmp_path):
-    """Stop/restart durability: a restarted query with the same
-    checkpoint processes ONLY files that arrived while it was down —
-    replaying none. The upsert sink makes reprocessing visible (a
-    replayed batch would still converge, but the per-batch row count
-    proves exactly-once file accounting)."""
-    import os
-    from pyspark.sql import functions as F
-    from octosql_spark.storage import upsert_partitioned, write_partitioned
-
-    table = str(tmp_path / "tbl")
-    write_partitioned(
-        spark.createDataFrame([(0, "a", 0)], "id long, part string, v long"),
-        table, ["part"])
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    seen_batches: list[int] = []
-
-    def apply(bdf, _id):
-        n = bdf.count()
-        if n:
-            seen_batches.append(n)
-            upsert_partitioned(spark, table, bdf, ["id"], ["part"])
-
-    def run_once():
-        stream = (st.read_stream_file(spark, str(src), "json")
-                  .select(F.col("id").cast("long"), "part",
-                          F.col("v").cast("long")))
-        q = (stream.writeStream.foreachBatch(apply)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    (src / "f1.json").write_text(json.dumps({"id": 1, "part": "a", "v": 1}))
-    run_once()
-    # down-time arrival, then restart from the same checkpoint
-    (src / "f2.json").write_text(json.dumps({"id": 2, "part": "a", "v": 2}))
-    run_once()
-
-    assert seen_batches == [1, 1]  # second run saw ONLY the new file
-    got = {(r.id, r.v) for r in spark.read.parquet(table).collect()}
-    assert got == {(0, 0), (1, 1), (2, 2)}
 
 
 def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
@@ -297,8 +138,6 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
     right match within the interval condition ARE emitted (with
     NULLs) once the watermark passes — the semantics that need state
     expiry, impossible without both-side watermarks."""
-    import os
-    from pyspark.sql import functions as F
     p = tmp_path / "souter"
     p.mkdir()
     rows1 = [
@@ -318,27 +157,21 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
               "v": 8},
              {"side": "R", "user": "yy", "ts": "2024-01-01T02:00:00",
               "v": 0}]
-    f1, f2, f3 = p / "b1.json", p / "b2.json", p / "b3.json"
-    f1.write_text("\n".join(json.dumps(r) for r in rows1))
-    f2.write_text("\n".join(json.dumps(r) for r in rows2))
-    f3.write_text("\n".join(json.dumps(r) for r in rows3))
-    os.utime(f1, (1, 1)); os.utime(f2, (2, 2)); os.utime(f3, (3, 3))
-    src = (st.read_stream_file(spark, str(p), "json", maxFilesPerTrigger=1)
-           .withColumn("ts", F.col("ts").cast("timestamp")))
-    left = (src.filter(F.col("side") == "L")
-            .select("user", F.col("ts").alias("lts"), "v"))
-    right = (src.filter(F.col("side") == "R")
-             .select(F.col("user").alias("user_r"),
-                     F.col("ts").alias("rts")))
-    joined = st.stream_stream_join(
-        left, right,
-        (F.col("user") == F.col("user_r"))
-        & (F.col("rts") >= F.col("lts"))
-        & (F.col("rts") <= F.col("lts") + F.expr("INTERVAL 10 SECONDS")),
-        "left_outer",
-        left_watermark=("lts", "5 seconds"),
-        right_watermark=("rts", "5 seconds"))
-    got = {(r.user, r.user_r) for r in _mem(joined).collect()}
+    for i, rows in enumerate((rows1, rows2, rows3), 1):
+        f = p / f"b{i}.json"
+        f.write_text("\n".join(json.dumps(r) for r in rows))
+        os.utime(f, (i, i))  # order micro-batches
+    src = f"'{p}/*.json?tail=true&maxFilesPerTrigger=1'"
+    left = _watermarked(f"SELECT user, ts::Time AS lts, v FROM {src} "
+                        "WHERE side = 'L'", "5 SECOND", "lts")
+    right = _watermarked(f"SELECT user AS user_r, ts::Time AS rts FROM {src} "
+                         "WHERE side = 'R'", "5 SECOND", "rts")
+    got = {(r.user, r.user_r) for r in _sql_to_memory(
+        spark,
+        f"SELECT l.user AS user, r.user_r AS user_r FROM {left} l "
+        f"LEFT JOIN {right} r ON l.user = r.user_r AND r.rts >= l.lts "
+        "AND r.rts <= l.lts + INTERVAL 10 SECOND",
+        mode="append")}
     assert ("a", "a") in got          # matched pair
     assert ("b", None) in got         # unmatched left emitted with NULLs
 
@@ -412,107 +245,6 @@ def test_stream_stream_join_front_door(spark, tmp_path):
         q.stop()
         stop_tail_stagers(stagers)  # direct run_query: no CLI teardown
     assert [(r.v, r.w) for r in rows] == [(10, 20)]
-
-
-def test_stream_near_dup_ingest_epoch_replay_idempotent(spark, tmp_path):
-    """A foreachBatch REPLAY of a committed epoch must be idempotent:
-    the probe reads only epochs BEFORE the replayed one, so accepted
-    docs do not match themselves at Jaccard 1.0 and get erased (r8
-    review: the old read included the epoch's own partitions — a
-    crash-after-write replay permanently deleted the epoch). Also
-    pins the per-epoch cache sweep: no persistent RDDs survive."""
-    import json as _json
-    import os
-    from pyspark.sql import functions as F
-
-    docs = [{"doc_id": 1, "text": "alpha beta gamma delta epsilon "
-                                  "zeta eta theta iota kappa"},
-            {"doc_id": 2, "text": "one two three four five six seven "
-                                  "eight nine ten eleven twelve"}]
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in docs))
-    corpus, index = str(tmp_path / "c"), str(tmp_path / "i")
-
-    def run_once():
-        stream = (st.read_stream_file(spark, str(src), "json")
-                  .select(F.col("doc_id").cast("long"), "text"))
-        # NO checkpoint: the second run re-delivers the same batch
-        # with the same epoch_id=0 — exactly the replay shape
-        q = st.stream_near_dup_ingest(stream, corpus, index)
-        q.awaitTermination(120)
-
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    run_once()
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} \
-        == {1, 2}
-    run_once()  # replay of epoch 0
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} \
-        == {1, 2}  # NOT emptied
-    assert {r.corpus_id for r in spark.read.parquet(index).collect()} \
-        == {1, 2}
-    # the per-epoch sweep released every cache the batches registered
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() \
-        == base
-
-
-def test_near_dup_ingest_corrupt_corpus_clear_error(spark, tmp_path):
-    """An index with prior epochs but a MISSING/epoch-less corpus is
-    corruption, not first-epoch state: the batch fails with a clear
-    error instead of an AttributeError on corpus.join (r8 advice)."""
-    from pyspark.sql import functions as F
-
-    # fabricate a prior-epoch index with no matching corpus table
-    spark.createDataFrame(
-        [(1, 0, 123)], "corpus_id long, band_id int, band_hash long"
-    ).write.parquet(str(tmp_path / "index" / "epoch=0"))
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    (src / "b.json").write_text(json.dumps(
-        {"doc_id": 5, "text": "some fresh text about nothing much"}))
-    stream = (st.read_stream_file(spark, str(src), "json")
-              .select(F.col("doc_id").cast("long"), "text"))
-    q = st.stream_near_dup_ingest(stream, str(tmp_path / "corpus"),
-                                  str(tmp_path / "index"))
-    with pytest.raises(Exception) as ei:
-        q.awaitTermination(120)
-    assert "refusing to ingest against a corrupt corpus" in str(ei.value)
-
-
-def test_epoch_cache_sweep_spares_concurrent_caches(spark, tmp_path):
-    """The per-epoch cache sweep releases exactly the frames the
-    epoch persisted — a cache registered by a CONCURRENT query in the
-    shared session survives the micro-batch (r8 advice: the old
-    before/after diff of the global RDD map swept it too)."""
-    from pyspark.sql import functions as F
-
-    def live():
-        return {int(k) for k in spark.sparkContext._jsc
-                .getPersistentRDDs().keySet().toArray()}
-
-    before = live()
-    other = spark.range(100).select((F.col("id") * 2).alias("v")).persist()
-    other.count()
-    pre = live()
-    mine = pre - before   # the concurrent query's cache entries
-    assert mine
-
-    src = tmp_path / "incoming"
-    src.mkdir()
-    (src / "b.json").write_text("\n".join(json.dumps(
-        {"doc_id": i, "text": f"document number {i} about topic {i % 3}"})
-        for i in range(6)))
-    stream = (st.read_stream_file(spark, str(src), "json")
-              .select(F.col("doc_id").cast("long"), "text"))
-    q = st.stream_near_dup_ingest(stream, str(tmp_path / "corpus"),
-                                  str(tmp_path / "index"))
-    q.awaitTermination(120)
-    post = live()
-    assert mine <= post, "concurrent query's cache was swept"
-    # and the epoch released everything IT persisted
-    assert post == pre
-    other.unpersist()
 
 
 def test_tail_stager_scope_isolates_queries(tmp_path):
@@ -625,240 +357,3 @@ def test_tail_stager_ownership_matrix(tmp_path):
     # idempotent re-stop: nothing left to signal in either scope
     assert stop_tail_stagers(scopes["qa"]) == 0
     assert stop_tail_stagers(scopes["qb"]) == 0
-
-
-def test_stream_cluster_ingest_matches_full_recompute(spark, tmp_path):
-    """Streaming cluster-label maintenance (r9 verdict #7's streaming
-    twin): three micro-batches ingest near-dup docs — including a
-    LATER doc whose id UNDERCUTS an existing cluster's label (5 joins
-    {10,11}: the whole cluster must relabel to 5 via the delta path,
-    not a rewrite) — and the resolved labels equal dedup_clusters run
-    from scratch on the full corpus with the same LSH parameters."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from octosql_spark.datapipe import dedup_clusters, minhash_lsh_pairs
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "sun sets slowly behind the tall green hills of summer")
-    uniq = ("completely different vocabulary about spacecraft "
-            "engines orbital mechanics and interplanetary travel "
-            "using ion propulsion systems for deep space missions")
-    fresh = ("many colorful birds sing sweet morning songs in the "
-             "old oak tree near the quiet village river bank today")
-    b1 = [{"doc_id": 10, "text": base},
-          {"doc_id": 11, "text": base.replace("lazy", "sleepy")},
-          {"doc_id": 12, "text": uniq}]
-    b2 = [{"doc_id": 5, "text": base.replace("summer", "autumn")}]
-    b3 = [{"doc_id": 20, "text": uniq.replace("deep", "far")},
-          {"doc_id": 21, "text": fresh}]
-
-    src = tmp_path / "in"
-    src.mkdir()
-    for i, b in enumerate((b1, b2, b3), 1):
-        f = src / f"b{i}.json"
-        f.write_text("\n".join(_json.dumps(r) for r in b))
-        os.utime(f, (i, i))
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    labels = str(tmp_path / "labels")
-    stream = (st.read_stream_file(spark, str(src), "json",
-                                  maxFilesPerTrigger=1)
-              .select(F.col("doc_id").cast("long"), "text"))
-    q = st.stream_cluster_ingest(stream, corpus, index, labels,
-                                 checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(240)
-
-    got = {(r.doc_id, r.component)
-           for r in st.read_cluster_labels(spark, labels).collect()}
-    # every ingested doc got a label; the id-5 merge relabeled 10+11
-    assert got == {(5, 5), (10, 5), (11, 5), (12, 12),
-                   (20, 12), (21, 21)}
-    # differential: full recompute on the whole corpus agrees
-    all_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for b in (b1, b2, b3) for r in b],
-        "doc_id long, text string")
-    pairs = minhash_lsh_pairs(all_docs)
-    full = {(r.doc_id, r.cluster_id)
-            for r in dedup_clusters(all_docs, pairs).collect()}
-    assert got == full
-    # delta discipline: epoch 1 wrote 3 rows; the id-5 merge wrote
-    # rows only for the touched cluster (5, 10, 11), not for 12
-    by_epoch = {}
-    for r in spark.read.parquet(labels).collect():
-        by_epoch.setdefault(r.epoch, set()).add((r.doc_id, r.component))
-    assert by_epoch[0] == {(10, 10), (11, 10), (12, 12)}
-    assert by_epoch[1] == {(5, 5), (10, 5), (11, 5)}
-    assert by_epoch[2] == {(20, 12), (21, 21)}
-
-
-def test_stream_cluster_ingest_combined_bucket_cap(spark, tmp_path):
-    """ADVICE r10 (low): the ``max_bucket`` cap must count the UNION
-    of prior-index and batch members per bucket — a bucket that is
-    under the cap on each side separately but over it combined has to
-    be suppressed, exactly as a from-scratch recompute suppresses it.
-    With max_bucket=1: a prior doc and a near-dup batch doc occupy
-    their shared buckets 1+1=2 > 1, so they must NOT link (the old
-    per-side cap linked them); verbatim within-batch duplicates still
-    link via the cap-exempt hash-chain edges, mirroring the batch
-    operator's collapse exemption. The resolved labels equal
-    dedup_clusters run from scratch with the same cap."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from octosql_spark.datapipe import dedup_clusters, minhash_lsh_pairs
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "sun sets slowly behind the tall green hills of summer")
-    vtext = ("many colorful birds sing sweet morning songs in the "
-             "old oak tree near the quiet village river bank today")
-    b1 = [{"doc_id": 1, "text": base}]
-    b2 = [{"doc_id": 2, "text": base.replace("lazy", "sleepy")},
-          {"doc_id": 3, "text": vtext},
-          {"doc_id": 4, "text": vtext}]
-    src = tmp_path / "in"
-    src.mkdir()
-    for i, b in enumerate((b1, b2), 1):
-        f = src / f"b{i}.json"
-        f.write_text("\n".join(_json.dumps(r) for r in b))
-        os.utime(f, (i, i))
-    labels = str(tmp_path / "labels")
-    stream = (st.read_stream_file(spark, str(src), "json",
-                                  maxFilesPerTrigger=1)
-              .select(F.col("doc_id").cast("long"), "text"))
-    q = st.stream_cluster_ingest(stream, str(tmp_path / "corpus"),
-                                 str(tmp_path / "index"), labels,
-                                 max_bucket=1,
-                                 checkpoint=str(tmp_path / "ckpt"))
-    q.awaitTermination(240)
-    got = {(r.doc_id, r.component)
-           for r in st.read_cluster_labels(spark, labels).collect()}
-    assert got == {(1, 1), (2, 2), (3, 3), (4, 3)}
-    all_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for b in (b1, b2) for r in b],
-        "doc_id long, text string")
-    full = {(r.doc_id, r.cluster_id) for r in dedup_clusters(
-        all_docs, minhash_lsh_pairs(all_docs, max_bucket=1)).collect()}
-    assert got == full
-
-
-def test_compact_cluster_labels(spark, tmp_path):
-    """Compaction folds every delta into the reserved BASE partition
-    (epoch=-1, below every stream epoch id) and drops the stream
-    epoch dirs; read_cluster_labels resolves identically before and
-    after, and a node whose latest row lived only in an OLD epoch
-    survives the fold."""
-    labels = str(tmp_path / "labels")
-    rows = {0: [(1, 1), (2, 1), (3, 3)],       # epoch 0
-            1: [(2, 2)],                       # epoch 1: 2 relabeled
-            2: [(4, 4)]}                       # epoch 2: new node
-    for e, rs in rows.items():
-        spark.createDataFrame(rs, "doc_id long, component long") \
-            .write.mode("overwrite").parquet(f"{labels}/epoch={e}")
-    before = {(r.doc_id, r.component)
-              for r in st.read_cluster_labels(spark, labels).collect()}
-    assert before == {(1, 1), (2, 2), (3, 3), (4, 4)}
-    removed = st.compact_cluster_labels(spark, labels)
-    assert removed == 3
-    after = {(r.doc_id, r.component)
-             for r in st.read_cluster_labels(spark, labels).collect()}
-    assert after == before
-    import os
-    dirs = sorted(d for d in os.listdir(labels) if d.startswith("epoch="))
-    assert dirs == ["epoch=-1"]
-    # idempotent: base-only table is a no-op
-    assert st.compact_cluster_labels(spark, labels) == 0
-
-
-def test_compact_cluster_labels_survives_uncommitted_replay(spark,
-                                                            tmp_path):
-    """ADVICE r10 (medium): if the max epoch present at compaction
-    time was written by a micro-batch that crashed BEFORE its
-    checkpoint commit, the restart replays that epoch id and
-    overwrites its dir. Under the old fold-into-max-epoch scheme that
-    overwrite destroyed the compacted full state (older epochs were
-    already deleted). With the base at epoch=-1 the replay can only
-    touch its own dir: simulate the worst case — the replay writes an
-    EMPTY delta over the former max epoch — and every node, including
-    those whose latest row lived only in deleted older epochs, still
-    resolves from the base."""
-    labels = str(tmp_path / "labels")
-    rows = {0: [(1, 1), (2, 1), (3, 3)],
-            1: [(2, 2)],
-            2: [(4, 4)]}  # pretend epoch 2's commit never landed
-    for e, rs in rows.items():
-        spark.createDataFrame(rs, "doc_id long, component long") \
-            .write.mode("overwrite").parquet(f"{labels}/epoch={e}")
-    assert st.compact_cluster_labels(spark, labels) == 3
-    # replay of uncommitted epoch 2: prior = base only (epoch -1 < 2),
-    # which already carries (4, 4) — the delta it rewrites is empty
-    empty = spark.createDataFrame([], "doc_id long, component long")
-    empty.write.mode("overwrite").parquet(f"{labels}/epoch=2")
-    got = {(r.doc_id, r.component)
-           for r in st.read_cluster_labels(spark, labels).collect()}
-    assert got == {(1, 1), (2, 2), (3, 3), (4, 4)}
-
-
-def test_stream_cluster_ingest_restart_and_compaction(spark, tmp_path):
-    """Stop/restart durability for cluster maintenance: the restarted
-    query processes only the file that arrived while it was down, its
-    merge still relabels the existing cluster, and an offline
-    compaction between the runs does not disturb the checkpointed
-    epoch sequence (compaction folds into the reserved base epoch=-1,
-    numbered below every stream epoch — it can never collide with the
-    next batch id or be overwritten by a crash-replay)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from octosql_spark.datapipe import dedup_clusters, minhash_lsh_pairs
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "sun sets slowly behind the tall green hills of summer")
-    b1 = [{"doc_id": 10, "text": base},
-          {"doc_id": 11, "text": base.replace("lazy", "sleepy")}]
-    b2 = [{"doc_id": 5, "text": base.replace("summer", "autumn")}]
-    src = tmp_path / "in"
-    src.mkdir()
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    labels = str(tmp_path / "labels")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (st.read_stream_file(spark, str(src), "json")
-                  .select(F.col("doc_id").cast("long"), "text"))
-        q = st.stream_cluster_ingest(stream, corpus, index, labels,
-                                     checkpoint=ckpt)
-        q.awaitTermination(180)
-
-    (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b1))
-    run_once()
-    assert {(r.doc_id, r.component) for r in
-            st.read_cluster_labels(spark, labels).collect()} == \
-        {(10, 10), (11, 10)}
-    # offline compaction while the stream is down: folds epoch 0 into
-    # the base; the restarted stream's next epoch id (1, from the
-    # checkpoint) is untouched by it
-    assert st.compact_cluster_labels(spark, labels) == 1
-    (src / "b2.json").write_text("\n".join(_json.dumps(r) for r in b2))
-    run_once()
-    got = {(r.doc_id, r.component) for r in
-           st.read_cluster_labels(spark, labels).collect()}
-    assert got == {(5, 5), (10, 5), (11, 5)}
-    # restart processed ONLY b2: epoch 0 rows intact, epoch 1 = merge
-    all_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in b1 + b2],
-        "doc_id long, text string")
-    full = {(r.doc_id, r.cluster_id) for r in dedup_clusters(
-        all_docs, minhash_lsh_pairs(all_docs)).collect()}
-    assert got == full
-    # compaction after the merge folds history and preserves state
-    assert st.compact_cluster_labels(spark, labels) == 1
-    assert {(r.doc_id, r.component) for r in
-            st.read_cluster_labels(spark, labels).collect()} == got

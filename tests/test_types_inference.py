@@ -8,9 +8,7 @@ import json
 from pyspark.sql import types as T
 
 from octosql_spark import types as ot
-from octosql_spark.schema_infer import (
-    infer_csv, infer_json, to_spark_schema, union_columns,
-)
+from octosql_spark.schema_infer import infer_csv, infer_json, to_spark_schema
 from octosql_spark.sources import read_csv, read_json
 
 
@@ -73,7 +71,6 @@ def test_infer_csv_typed(tmp_path):
     assert cols["c_str"] == ot.STRING
     assert cols["c_nullable"] == ot.union_of(ot.INT, ot.NULL)
     assert cols["c_mixed"] == ot.union_of(ot.INT, ot.STRING)
-    assert set(union_columns(cols)) == {"c_mixed"}
     schema = to_spark_schema(cols)
     assert schema["c_int"].dataType == T.LongType()
     assert schema["c_nullable"].nullable
