@@ -66,6 +66,32 @@ def timed_runs(build, warmups: int, runs: int) -> list[float]:
     return out
 
 
+# optional keys of the contract line, shed in this order to fit it
+_SHED_KEYS = ("detail", "clamped_sec", "sf1_total_sec",
+              "tpch_floor_normalized_sec", "floor_flags", "clean_blocks")
+
+
+def fit_line(line_obj: dict, headline: dict, limit: int = 1900) -> str:
+    """``line_obj`` as one JSON line of at most ``limit`` characters, so
+    it fits the tail a reader keeps: optional keys go first, then the
+    ``sf1_`` query timings, and last the queries map falls back to the
+    ``headline`` timings."""
+    obj = dict(line_obj)
+    line = json.dumps(obj)
+    for key in _SHED_KEYS:
+        if len(line) <= limit:
+            return line
+        obj.pop(key, None)
+        line = json.dumps(obj)
+    for queries in ({k: v for k, v in obj["queries"].items()
+                     if not k.startswith("sf1_")}, headline):
+        if len(line) <= limit:
+            return line
+        obj["queries"] = queries
+        line = json.dumps(obj)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -410,19 +436,7 @@ def main() -> None:
         "sf1_total_sec": sf1_block.get("total_sec"),
         "detail": "BENCH_DETAIL.json",
     }
-    line = json.dumps(line_obj)
-    # hard guard: shed optional keys until the line fits the tail
-    for drop in ("detail", "clamped_sec", "sf1_total_sec",
-                 "tpch_floor_normalized_sec",
-                 "floor_flags", "clean_blocks"):
-        if len(line) <= 1900:
-            break
-        line_obj.pop(drop, None)
-        line = json.dumps(line_obj)
-    if len(line) > 1900:  # last resort: queries back to headline-only
-        line_obj["queries"] = timings
-        line = json.dumps(line_obj)
-    print(line)
+    print(fit_line(line_obj, timings))
     spark.stop()
 
 

@@ -142,35 +142,49 @@ def _nesting(obj) -> int:
     return mx
 
 
-def infer_json(path: str, sample_rows: int = SAMPLE_ROWS) -> dict[str, ot.OctoType]:
-    """Key → OctoType from the first ``sample_rows`` JSON lines, with
-    per-key TypeSum merge (absent keys become nullable)."""
+def _sample_lines(paths: list[str], sample_rows: int):
+    """(line number in its file, line) of the first ``sample_rows``
+    lines of ``paths``, read in order."""
+    for path in paths:
+        with open(path) as f:
+            for lineno, raw in zip(range(1, sample_rows + 1), f):
+                yield lineno, raw
+                sample_rows -= 1
+        if sample_rows <= 0:
+            return
+
+
+def infer_json(path: str | list[str],
+               sample_rows: int = SAMPLE_ROWS) -> dict[str, ot.OctoType]:
+    """Key → OctoType from the first ``sample_rows`` JSON lines of one
+    file, or of several read in order, with per-key TypeSum merge
+    (absent keys become nullable)."""
     per_row: list[dict[str, ot.OctoType]] = []
-    with open(path) as f:
-        for lineno, raw in zip(range(1, sample_rows + 1), f):
-            line = raw.strip()
-            if not line:
-                continue
-            try:
-                obj = json.loads(line)
-                if not isinstance(obj, dict):
-                    raise ValueError(f"expected JSON object, got {line!r}")
-                if _nesting(obj) > 250:
-                    # Python json has no depth cap but fastjson
-                    # rejects >300 (parser.go MaxDepth); defer the
-                    # exact boundary + message to the goemu replay.
-                    # Sample-only check — like every inference-sample
-                    # error, a deep line past the sample parses
-                    # (DEVIATIONS: Spark scans have no depth limit).
-                    from octosql_spark.goemu import fastjson_parse_error
-                    deep_err, _ = fastjson_parse_error(line)
-                    if deep_err:
-                        raise ValueError(deep_err)
-            except (ValueError, RecursionError):
-                # the reference's error chain + 1-based line number
-                # (datasources/json/execution.go; error goldens)
-                raise JsonLineParseError(lineno, raw.rstrip("\n")) from None
-            per_row.append({k: _infer_json_value(v) for k, v in obj.items()})
+    for lineno, raw in _sample_lines([path] if isinstance(path, str) else path,
+                                     sample_rows):
+        line = raw.strip()
+        if not line:
+            continue
+        try:
+            obj = json.loads(line)
+            if not isinstance(obj, dict):
+                raise ValueError(f"expected JSON object, got {line!r}")
+            if _nesting(obj) > 250:
+                # Python json has no depth cap but fastjson
+                # rejects >300 (parser.go MaxDepth); defer the
+                # exact boundary + message to the goemu replay.
+                # Sample-only check — like every inference-sample
+                # error, a deep line past the sample parses
+                # (DEVIATIONS: Spark scans have no depth limit).
+                from octosql_spark.goemu import fastjson_parse_error
+                deep_err, _ = fastjson_parse_error(line)
+                if deep_err:
+                    raise ValueError(deep_err)
+        except (ValueError, RecursionError):
+            # the reference's error chain + 1-based line number
+            # (datasources/json/execution.go; error goldens)
+            raise JsonLineParseError(lineno, raw.rstrip("\n")) from None
+        per_row.append({k: _infer_json_value(v) for k, v in obj.items()})
     all_keys: list[str] = []
     for row in per_row:
         for k in row:

@@ -286,9 +286,9 @@ _CSV_PROBE_CACHE_MAX = 256
 
 
 def _local_csv_files(path: str) -> list[str]:
-    """The local files a Spark csv read of ``path`` will scan: the
-    file itself, every file in a directory, or the glob matches —
-    the probe set for strict-quote parity."""
+    """The local files a Spark read of ``path`` will scan: the file
+    itself, every file in a directory, or the glob matches — the probe
+    set for strict-quote parity and the JSON inference sample."""
     import glob as _glob
     if os.path.isfile(path):
         return [path]
@@ -460,9 +460,13 @@ def read_json(spark: SparkSession, path: str, octosql_infer: bool = True,
     TypeSum merge). Union-typed columns are read as raw JSON text and
     accessed via ``::T`` try_cast accessors (SURVEY.md §7 policy)."""
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]"
-    if octosql_infer and "://" not in path and os.path.isfile(path):
+    # a directory or glob is typed like one file, from its files' lines
+    # in scan order; with no file yet, Spark's inference types it
+    files = _local_csv_files(path) if octosql_infer and "://" not in path \
+        else []
+    if files:
         from octosql_spark.schema_infer import infer_json, to_spark_schema
-        cols = infer_json(path)
+        cols = infer_json(files)
         # union-typed columns → VariantType (exact per-value runtime
         # types, like the reference's union values)
         schema = to_spark_schema(cols, union_carrier="variant")

@@ -23,20 +23,18 @@ Catalyst (SURVEY.md §3 "Spark mapping of the lifecycle"):
 | ``time_from_unix/to_unix``   | ``timestamp_seconds``/``unix_timestamp`` |
 | ``x -> e``, ``(x, y) -> e``  | kept as written: a Spark lambda in a higher-order function's function argument |
 | ``FROM file.csv`` etc.       | temp view over the file reader (cmd/root.go:192-217) |
-| ``tumble(...)/max_diff_watermark(...)/poll(...)`` TVFs | materialized to temp views via octosql_spark.tvf |
+| ``tumble(...)/max_diff_watermark(...)/poll(...)/range(a, b)`` TVFs | materialized to temp views via octosql_spark.tvf; ``range``'s column is ``i`` |
 | ``TRIGGER ...`` clause       | stripped; returned as metadata (→ streaming output modes) |
 
 ¹ A primary is a name or dotted chain, a literal (``INTERVAL 1 DAY``,
 ``DATE '…'``, ``TIMESTAMP '…'``), a call, ``f(x) OVER (…)``, a paren
 group or ``CASE … END``, with its own ``[i]``/``::T`` suffixes applied
 in text order: ``arr[1]::Int`` is ``TRY_CAST(get(arr, 1) AS BIGINT)``.
-
-``range(a,b)`` passes through (Spark SQL TVF, column aliased ``i`` by
-the reference — use ``range(a,b) t(i)``-style aliasing or ``id``).
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 from dataclasses import dataclass, field
 from typing import NamedTuple
@@ -192,6 +190,26 @@ def _level(toks: list[Tok], lo: int, hi: int):
     while i <= hi:
         yield i
         i = _group_end(toks, i) + 1
+
+
+def _levels(toks: list[Tok], lo: int = 0, hi: int | None = None,
+            depth: int = 0):
+    """Every level of ``toks[lo..hi]`` as (depth, its significant
+    indices, hi): the span itself, then the inside of each of its
+    bracket groups and ``CASE … END`` bodies, recursively. ``depth``
+    counts the groups around a level."""
+    hi = len(toks) - 1 if hi is None else hi
+    level, inner = [], []
+    i = lo
+    while i <= hi:  # _level's walk, keeping each group's span
+        if toks[i].kind not in ("WS", "COMMENT"):
+            level.append(i)
+        if (close := _group_end(toks, i)) != i:
+            inner.append((i + 1, close - 1))
+        i = close + 1
+    yield depth, level, hi
+    for a, b in inner:
+        yield from _levels(toks, a, b, depth + 1)
 
 
 def _inner_first(toks: list[Tok], rewrite) -> list[Tok]:
@@ -498,50 +516,8 @@ def _type_cat(dtype: str) -> str:
 class _Relation(NamedTuple):
     name: str | None  # None: a parenthesized subquery or join
     alias: str | None
-    depth: int  # paren nesting depth; 0 = the top-level FROM/JOIN list
+    depth: int  # groups around it; 0 = the top-level FROM/JOIN list
     dtypes: list[tuple[str, str]] | None  # None: a CTE or unknown table
-
-
-def _relations(spark: SparkSession, toks: list[Tok]) -> list[_Relation]:
-    """Every FROM/JOIN relation of the (already view-rewritten) query.
-    A table named twice is looked up once — each lookup is a py4j
-    round trip plus analysis. CTE names (``name AS (``) shadow any
-    view of that name, and looking one up only fails, after a
-    JVM-side AnalysisException, so they are not looked up."""
-    sig = _sig(toks)
-    ctes = {toks[sig[k]].text.strip('"`').lower() for k in range(len(sig) - 2)
-            if toks[sig[k]].kind in ("IDENT", "QIDENT")
-            and toks[sig[k + 1]].is_kw("AS") and toks[sig[k + 2]].text == "("}
-    depth_at, depth = [], 0
-    for i in sig:
-        depth_at.append(depth)
-        depth += {"(": 1, ")": -1}.get(toks[i].text, 0)
-    looked_up: dict[str, list[tuple[str, str]] | None] = {}
-    out = []
-    for si in _table_positions(toks):
-        t = toks[sig[si]]
-        if t.kind not in ("IDENT", "QIDENT"):
-            out.append(_Relation(None, None, depth_at[si], None))
-            continue
-        name = t.text.strip('"`')
-        key = name.lower()
-        if key not in looked_up:
-            looked_up[key] = None
-            if key not in ctes:
-                try:
-                    looked_up[key] = spark.table(name).dtypes
-                except Exception:
-                    pass
-        alias = None
-        sj = si + 1
-        if sj < len(sig) and toks[sig[sj]].is_kw("AS"):
-            sj += 1
-        if sj < len(sig) and toks[sig[sj]].kind in ("IDENT", "QIDENT") \
-                and not toks[sig[sj]].is_kw(*_CLAUSE_KW) \
-                and not toks[sig[sj]].is_kw("AS"):
-            alias = toks[sig[sj]].text.strip('"`')
-        out.append(_Relation(name, alias, depth_at[si], looked_up[key]))
-    return out
 
 
 def _collect_column_types(relations: list[_Relation]) -> dict[str, str]:
@@ -894,7 +870,7 @@ def _rewrite_arith_overloads(toks: list[Tok],
     String+String → concat, String*Int / Int*String → repeat, Int/Int
     → integer division, and the Duration set over int64 nanos. Literals
     pin the overload directly; column operands resolve through
-    ``types`` (view schemas collected post-``_rewrite_file_tables`` —
+    ``types`` (view schemas collected by ``_bind_tables`` —
     the Spark-side equivalent of the reference's typecheck,
     logical/function.go:24-132). Each paren level and CASE body is
     folded before the level that contains it, so an enclosing chain
@@ -951,33 +927,31 @@ def _rewrite_float_literals(toks: list[Tok]) -> list[Tok]:
     return out
 
 
+# keywords that end a TRIGGER clause: ``TRIGGER ON WATERMARK`` and
+# ``STREAM`` belong to it
+_TRIGGER_END = _CLAUSE_KW - {"ON", "STREAM"}
+
+
 def _strip_trigger(toks: list[Tok]) -> tuple[list[Tok], list[str]]:
-    """Remove ``TRIGGER <spec>[, <spec>]*`` clauses; return the specs
-    (parser/parser.go:503-534)."""
-    triggers: list[str] = []
-    sig = _sig(toks)
-    for si in range(len(sig) - 1, -1, -1):
-        i = sig[si]
-        if not toks[i].is_kw("TRIGGER"):
-            continue
-        # consume until a clause keyword / ')' / end at same depth
-        j = i + 1
-        depth = 0
-        while j < len(toks):
-            t = toks[j]
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and t.kind == "IDENT" and t.text.upper() in (
-                    _CLAUSE_KW - {"TRIGGER", "ON", "STREAM"}) and t.text.upper() != "OF":
-                break
-            j += 1
-        triggers.append("".join(t.text for t in toks[i + 1:j]).strip())
-        toks = toks[:i] + toks[j:]
-    return toks, list(reversed(triggers))
+    """Remove each ``TRIGGER <spec>[, <spec>]*`` clause, at any level;
+    return the specs in text order (parser/parser.go:503-534). A
+    clause runs to the next clause keyword of its level, else to the
+    level's end."""
+    spans = []
+    for _, level, hi in _levels(toks):
+        for k, i in enumerate(level):
+            if toks[i].is_kw("TRIGGER"):
+                spans.append((i, next((j for j in level[k + 1:]
+                                       if toks[j].is_kw(*_TRIGGER_END)),
+                                      hi + 1)))
+    spans.sort()
+    out: list[Tok] = []
+    at = 0
+    for i, end in spans:
+        out += toks[at:i]
+        at = end
+    return out + toks[at:], ["".join(t.text for t in toks[i + 1:end]).strip()
+                             for i, end in spans]
 
 
 def _strip_join_modifiers(toks: list[Tok]) -> list[Tok]:
@@ -1032,54 +1006,30 @@ _EXPR_KW = {"NULL", "TRUE", "FALSE", "IS", "NOT", "AND", "OR", "BETWEEN",
             "CURRENT_TIMESTAMP", "CURRENT_DATE"}
 
 
-def _top_select_span(toks: list[Tok]):
-    """(sig, select_si, from_si_or_None) for the single depth-0
-    SELECT; None for set operations / multiple statements."""
-    sig = _sig(toks)
-    depth = 0
-    selects = []
-    for si, i in enumerate(sig):
-        t = toks[i]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("SELECT"):
-            selects.append(si)
-        elif depth == 0 and t.is_kw("UNION", "INTERSECT", "EXCEPT"):
-            return None
-    if len(selects) != 1:
+def _top_level(toks: list[Tok]) -> list[int]:
+    """Significant indices of the top level of ``toks``."""
+    return [i for i in _level(toks, 0, len(toks) - 1)
+            if toks[i].kind not in ("WS", "COMMENT")]
+
+
+def _top_select_span(toks: list[Tok]) -> tuple[int, int | None] | None:
+    """(index of SELECT, index of its FROM or None) for the single
+    top-level SELECT; None for set operations / multiple statements."""
+    level = _top_level(toks)
+    selects = [i for i in level if toks[i].is_kw("SELECT")]
+    if len(selects) != 1 or any(toks[i].is_kw("UNION", "INTERSECT", "EXCEPT")
+                                for i in level):
         return None
-    si = selects[0]
-    depth = 0
-    for sj in range(si + 1, len(sig)):
-        t = toks[sig[sj]]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("FROM"):
-            return sig, si, sj
-    return sig, si, None
+    return selects[0], next((i for i in level if i > selects[0]
+                             and toks[i].is_kw("FROM")), None)
 
 
 def _split_top_commas(toks: list[Tok], start: int, end: int) -> list[tuple[int, int]]:
-    """Comma-split token span [start, end] at depth 0, trimmed."""
-    spans = []
-    depth = 0
-    s = start
-    for j in range(start, end + 1):
-        t = toks[j]
-        if t.text in ("(", "["):
-            depth += 1
-        elif t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.text == ",":
-            spans.append((s, j - 1))
-            s = j + 1
-    spans.append((s, end))
+    """Comma-split token span [start, end] at its own level, trimmed."""
+    commas = [j for j in _level(toks, start, end) if toks[j].text == ","]
     trimmed = []
-    for s, e in spans:
+    for s, e in zip([start] + [c + 1 for c in commas],
+                    [c - 1 for c in commas] + [end]):
         while s <= e and toks[s].kind in ("WS", "COMMENT"):
             s += 1
         while e >= s and toks[e].kind in ("WS", "COMMENT"):
@@ -1103,13 +1053,10 @@ def _expand_star(toks: list[Tok], relations: list[_Relation]) -> list[Tok]:
     inner_join_0.out headers ``l.i | r.i``). Only the top-level
     FROM/JOIN list expands — a table named inside a subquery is not
     in the star's scope."""
-    span = _top_select_span(toks)
-    if span is None:
+    sel, frm = _top_select_span(toks) or (None, None)
+    if frm is None:
         return toks
-    sig, sel_si, from_si = span
-    if from_si is None:
-        return toks
-    items = _split_top_commas(toks, sig[sel_si] + 1, sig[from_si] - 1)
+    items = _split_top_commas(toks, sel + 1, frm - 1)
     if len(items) != 1:
         return toks
     s, e = items[0]
@@ -1144,15 +1091,11 @@ def _classify_item(toks: list[Tok], s: int, e: int):
     if not isig:
         return ("expr", None)
     # trailing explicit alias?
-    depth = 0
-    for k, j in enumerate(isig):
-        t = toks[j]
-        if t.text in ("(", "["):
-            depth += 1
-        elif t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.is_kw("AS") and k + 1 < len(isig):
-            return ("aliased", (toks[isig[k + 1]].text.strip('"`'), isig[k + 1]))
+    alias = next((j for j in _level(toks, isig[0], e)
+                  if toks[j].is_kw("AS") and j < isig[-1]), None)
+    if alias is not None:
+        name = _next_sig(toks, alias)
+        return ("aliased", (toks[name].text.strip('"`'), name))
     if any(toks[j].text == "*" and toks[j].kind == "OP" for j in isig) \
             and len(isig) <= 3 and toks[isig[-1]].text == "*":
         return ("star", None)  # `*` / `t.*` / (post-arrow) `obj.*`
@@ -1190,35 +1133,18 @@ def _compact(toks: list[Tok], s: int, e: int) -> str:
                    if t.kind not in ("WS", "COMMENT"))
 
 
-def _group_by_keys(toks: list[Tok], sig: list[int]):
-    """(significant index of GROUP, key token spans) of the depth-0
-    ``GROUP BY``, or None without one. The key list ends at a depth-0
-    HAVING/ORDER/LIMIT/WINDOW/TRIGGER, an unmatched ``)`` or the end
-    of the text."""
-    depth = 0
-    for gb_si in range(len(sig) - 2):
-        t = toks[sig[gb_si]]
-        depth += {"(": 1, ")": -1}.get(t.text, 0)
-        if depth == 0 and t.is_kw("GROUP") and toks[sig[gb_si + 1]].is_kw("BY"):
-            break
-    else:
+def _group_by_keys(toks: list[Tok]):
+    """(index of GROUP, key token spans) of the top-level ``GROUP
+    BY``, or None without one. The key list ends at a top-level
+    HAVING/ORDER/LIMIT/WINDOW/TRIGGER or the end of the text."""
+    level = _top_level(toks)
+    at = next((k for k in range(len(level) - 2) if toks[level[k]].is_kw("GROUP")
+               and toks[level[k + 1]].is_kw("BY")), None)
+    if at is None:
         return None
-    gend = len(toks) - 1
-    depth = 0
-    for sj in range(gb_si + 2, len(sig)):
-        t = toks[sig[sj]]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            if depth == 0:
-                gend = sig[sj] - 1
-                break
-            depth -= 1
-        elif depth == 0 and t.is_kw("HAVING", "ORDER", "LIMIT",
-                                    "WINDOW", "TRIGGER"):
-            gend = sig[sj] - 1
-            break
-    return gb_si, _split_top_commas(toks, sig[gb_si + 2], gend)
+    end = next((j - 1 for j in level[at + 2:] if toks[j].is_kw(
+        "HAVING", "ORDER", "LIMIT", "WINDOW", "TRIGGER")), len(toks) - 1)
+    return level[at], _split_top_commas(toks, level[at + 2], end)
 
 
 def _alias_select_items(toks: list[Tok]) -> list[Tok]:
@@ -1231,12 +1157,12 @@ def _alias_select_items(toks: list[Tok]) -> list[Tok]:
     span = _top_select_span(toks)
     if span is None:
         return toks
-    sig, sel_si, from_si = span
-    end_tok = sig[from_si] - 1 if from_si is not None else len(toks) - 1
-    items = _split_top_commas(toks, sig[sel_si] + 1, end_tok)
+    sel, frm = span
+    items = _split_top_commas(toks, sel + 1,
+                              len(toks) - 1 if frm is None else frm - 1)
     infos = [_classify_item(toks, s, e) for s, e in items]
     is_group_by = any(kind == "agg" for kind, _ in infos)
-    gb = _group_by_keys(toks, sig) if is_group_by else None
+    gb = _group_by_keys(toks) if is_group_by else None
     group_keys = [_compact(toks, s, e) for s, e in gb[1]] if gb else []
     counter: dict[str, int] = {}
 
@@ -1316,23 +1242,19 @@ def group_by_shape(sql: str) -> GroupBy | None:
     span = _top_select_span(toks)
     if span is None:
         return None
-    sig, sel_si, from_si = span
-    if sel_si != 0 or from_si is None \
+    sel, frm = span
+    sig = _sig(toks)
+    if sel != sig[0] or frm is None \
             or toks[sig[1]].is_kw("DISTINCT", "ALL"):
         return None
-    gb = _group_by_keys(toks, sig)
+    gb = _group_by_keys(toks)
     if gb is None or not gb[1] or gb[1][-1][1] != sig[-1]:
         return None
-    gb_si, key_spans = gb
-    where_si, depth = None, 0
-    for sj in range(from_si + 1, gb_si):
-        t = toks[sig[sj]]
-        depth += {"(": 1, ")": -1}.get(t.text, 0)
-        if t.is_kw("SELECT"):
-            return None
-        if depth == 0 and t.is_kw("WHERE"):
-            where_si = sj
-            break
+    group, key_spans = gb
+    where = next((i for i in _level(toks, frm + 1, group - 1)
+                  if toks[i].is_kw("WHERE")), None)
+    if any(t.is_kw("SELECT") for t in toks[frm + 1:where or group]):
+        return None
     if any(toks[j].kind == "IDENT" and toks[j].text.lower() in _NONDET_FNS
            for s, e in key_spans for j in range(s, e + 1)):
         return None
@@ -1342,7 +1264,7 @@ def group_by_shape(sql: str) -> GroupBy | None:
         return "".join(t.text for t in toks[lo:hi + 1]).strip()
 
     items = []
-    for s, e in _split_top_commas(toks, sig[sel_si] + 1, sig[from_si] - 1):
+    for s, e in _split_top_commas(toks, sel + 1, frm - 1):
         kind, detail = _classify_item(toks, s, e)
         if kind == "aliased":
             name, alias_i = detail
@@ -1363,51 +1285,91 @@ def group_by_shape(sql: str) -> GroupBy | None:
             if len(args) == 1:
                 item.agg = (detail[0], text(*args[0]))
         items.append(item)
-    if where_si is None:
-        return GroupBy(items, text(sig[from_si] + 1, sig[gb_si] - 1),
-                       None, keys)
-    return GroupBy(items, text(sig[from_si] + 1, sig[where_si] - 1),
-                   text(sig[where_si] + 1, sig[gb_si] - 1), keys)
+    if where is None:
+        return GroupBy(items, text(frm + 1, group - 1), None, keys)
+    return GroupBy(items, text(frm + 1, where - 1),
+                   text(where + 1, group - 1), keys)
 
 
-def _table_positions(toks: list[Tok]) -> list[int]:
-    """Significant indices where a table reference starts (after
-    FROM/JOIN, and after commas directly inside a FROM list); a
-    parenthesized subquery or join starts at its ``(`` token."""
-    sig = _sig(toks)
+def _table_positions(toks: list[Tok]) -> list[tuple[int, int]]:
+    """(index, depth) of every table reference start, in text order:
+    the name after FROM/JOIN or after a comma of a FROM list, each
+    level read on its own; a parenthesized subquery or join starts at
+    its ``(`` token. A FROM list ends at its level's next WHERE,
+    GROUP, ORDER, HAVING, LIMIT or SELECT."""
     positions = []
-    expecting = False
-    from_depth = None
-    depth = 0
-    for si, i in enumerate(sig):
-        t = toks[i]
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-            if from_depth is not None and depth < from_depth:
-                from_depth = None
-        if t.is_kw("FROM", "JOIN"):
-            expecting = True
-            from_depth = depth if t.is_kw("FROM") else from_depth
-            continue
-        if t.text == "," and from_depth is not None and depth == from_depth:
-            expecting = True
-            continue
-        if expecting and t.kind in ("IDENT", "QIDENT", "STRING"):
-            positions.append(si)
-            expecting = False
-        elif expecting and t.text == "(":
-            positions.append(si)  # subquery
-            expecting = False
-        elif t.is_kw(*_CLAUSE_KW):
-            if from_depth is not None and t.is_kw("WHERE", "GROUP", "ORDER",
-                                                 "HAVING", "LIMIT"):
-                from_depth = None
-    return positions
+    for depth, level, _ in _levels(toks):
+        expecting = in_from = False
+        for i in level:
+            t = toks[i]
+            if t.is_kw("FROM", "JOIN"):
+                expecting = True
+                in_from = in_from or t.is_kw("FROM")
+            elif t.text == "," and in_from:
+                expecting = True
+            elif expecting and (t.kind in ("IDENT", "QIDENT", "STRING")
+                                or t.text == "("):
+                positions.append((i, depth))
+                expecting = False
+            elif t.is_kw("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
+                         "SELECT"):
+                in_from = False
+    return sorted(positions)
 
 
-def _read_table_ref(spark: SparkSession, desc: str) -> DataFrame | None:
+def _alias(toks: list[Tok], end: int) -> str | None:
+    """The alias after the relation that ends at ``toks[end]``."""
+    j = _next_sig(toks, end)
+    if j is not None and toks[j].is_kw("AS"):
+        j = _next_sig(toks, j)
+    if j is not None and toks[j].kind in ("IDENT", "QIDENT") \
+            and not toks[j].is_kw(*_CLAUSE_KW, "AS"):
+        return toks[j].text.strip('"`')
+    return None
+
+
+def _table_ref(toks: list[Tok], i: int, database) -> tuple[int, str] | None:
+    """(end, description) of the file, ``stdin.``, ``docs.``,
+    ``plugins.``, ``dual`` or configured-database reference at
+    ``toks[i]``; None for any other name. ``database(name)`` is the
+    configured database of that name, or None."""
+    t = toks[i]
+    if t.kind in ("STRING", "QIDENT"):
+        inner = t.text[1:-1]
+        ext = inner.split("?")[0].rsplit(".", 1)[-1].lower()
+        return ((i, inner) if ext in _FILE_EXTS or inner.startswith("stdin.")
+                else None)
+    if t.kind != "IDENT":
+        return None
+    # ident((.|/|-)ident)* chain — unquoted paths like
+    # ``mydir/my-file.csv`` work in the reference's parser (README
+    # examples); dotted chains cover stdin./docs./configured databases
+    end, text, chain = i, t.text, [t.text]
+    while (sep := _next_sig(toks, end)) is not None \
+            and toks[sep].text in (".", "/", "-") \
+            and (nxt := _next_sig(toks, sep)) is not None \
+            and toks[nxt].kind in ("IDENT", "NUMBER"):
+        text += toks[sep].text + toks[nxt].text
+        if toks[sep].text == ".":
+            chain.append(toks[nxt].text)
+        else:
+            chain[-1] += toks[sep].text + toks[nxt].text
+        end = nxt
+    if len(chain) >= 2 and chain[-1].lower() in _FILE_EXTS:
+        return end, text
+    if len(chain) == 2 and chain[-1].lower() == "stdin":
+        # `lines.stdin` == `stdin.lines` (the reference accepts either
+        # order for the stdin pseudo-file)
+        return end, f"stdin.{chain[0]}"
+    if chain == ["dual"]:
+        return end, "dual"
+    if len(chain) >= 2 and (chain[0] in ("stdin", "docs", "plugins")
+                            or database(chain[0]) is not None):
+        return end, text
+    return None
+
+
+def _read_table_ref(spark: SparkSession, desc: str, database) -> DataFrame:
     if desc == "dual":
         # one-row dummy table (logical/logical.go:101-122)
         return spark.createDataFrame([("X",)], "dummy string")
@@ -1421,10 +1383,9 @@ def _read_table_ref(spark: SparkSession, desc: str) -> DataFrame | None:
         # configured database? `mydb.tablename` resolves through the
         # octosql.yml-style config (the reference's plugin databases,
         # cmd/root.go:132-217 → spark JDBC here)
-        from octosql_spark.sources.jdbc import (
-            database_by_name, jdbc_table, load_config)
-        db = database_by_name(load_config(), desc.split(".", 1)[0])
+        db = database(desc.split(".", 1)[0])
         if db is not None:
+            from octosql_spark.sources.jdbc import jdbc_table
             return jdbc_table(spark, db, desc.split(".", 1)[1])
     from octosql_spark.sources import read_file
     path, opts = parse_table_ref(desc)
@@ -1442,101 +1403,16 @@ def parse_table_ref(desc: str) -> tuple[str, dict[str, object]]:
     return path, opts
 
 
-def _rewrite_file_tables(spark: SparkSession, toks: list[Tok],
-                         out: Transpiled) -> list[Tok]:
-    """``FROM people.csv`` / ``FROM 'dir/x.json?opt=v'`` /
-    ``FROM mydb.tbl`` (configured database) → temp view."""
-    from octosql_spark.sources.jdbc import load_config
-    db_names = {d.get("name") for d in load_config().get("databases", [])}
-    while True:
-        sig = _sig(toks)
-        positions = _table_positions(toks)
-        target = None
-        for si in positions:
-            i = sig[si]
-            t = toks[i]
-            if t.kind in ("STRING", "QIDENT"):
-                inner = t.text[1:-1]
-                ext = inner.split("?")[0].rsplit(".", 1)[-1].lower()
-                if ext in _FILE_EXTS or inner.startswith("stdin."):
-                    target = (si, si, inner)
-                    break
-            elif t.kind == "IDENT":
-                # ident((.|/|-)ident)* chain — unquoted paths like
-                # ``mydir/my-file.csv`` work in the reference's parser
-                # (README examples); dotted chains cover stdin./docs./
-                # configured databases
-                chain = [t.text]
-                text = t.text
-                sj = si
-                while sj + 2 < len(sig) \
-                        and toks[sig[sj + 1]].text in (".", "/", "-") \
-                        and toks[sig[sj + 2]].kind in ("IDENT", "NUMBER"):
-                    text += toks[sig[sj + 1]].text + toks[sig[sj + 2]].text
-                    if toks[sig[sj + 1]].text == ".":
-                        chain.append(toks[sig[sj + 2]].text)
-                    else:
-                        chain[-1] += toks[sig[sj + 1]].text + toks[sig[sj + 2]].text
-                    sj += 2
-                if len(chain) >= 2 and chain[-1].lower() in _FILE_EXTS:
-                    target = (si, sj, text)
-                    break
-                if len(chain) == 2 and chain[-1].lower() == "stdin":
-                    # `lines.stdin` == `stdin.lines` (the reference
-                    # accepts either order for the stdin pseudo-file)
-                    target = (si, sj, f"stdin.{chain[0]}")
-                    break
-                if chain[0] in ("stdin", "docs", "plugins") and len(chain) >= 2:
-                    target = (si, sj, text)
-                    break
-                if chain == ["dual"]:
-                    target = (si, si, "dual")
-                    break
-                if chain[0] in db_names and len(chain) >= 2:
-                    target = (si, sj, text)
-                    break
-        if target is None:
-            return toks
-        si, sj, desc = target
-        view = f"_octo_file_{next(_view_counter)}"
-        df = _read_table_ref(spark, desc)
-        df.createOrReplaceTempView(view)
-        out.views[view] = desc
-        toks = toks[:sig[si]] + [Tok("IDENT", view)] + toks[sig[sj] + 1:]
-
-
 def _parse_tvf_args(toks: list[Tok]) -> tuple[list[str], dict[str, list[Tok]]]:
     """Split a TVF arg list into positional / ``name => value`` parts."""
     args: list[str] = []
     kwargs: dict[str, list[Tok]] = {}
-    depth = 0
-    cur: list[Tok] = []
-    parts: list[list[Tok]] = []
-    for t in toks:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        if depth == 0 and t.text == ",":
-            parts.append(cur)
-            cur = []
+    for s, e in _split_top_commas(toks, 0, len(toks) - 1):
+        arrow = _next_sig(toks, s)
+        if arrow is not None and arrow <= e and toks[arrow].text == "=>":
+            kwargs[toks[s].text.lower()] = toks[arrow + 1:e + 1]
         else:
-            cur.append(t)
-    if cur:
-        parts.append(cur)
-    for part in parts:
-        sig = [t for t in part if t.kind not in ("WS", "COMMENT")]
-        if len(sig) >= 2 and sig[1].text == "=>":
-            val = []
-            seen = False
-            for t in part:
-                if seen:
-                    val.append(t)
-                elif t.text == "=>":
-                    seen = True
-            kwargs[sig[0].text.lower()] = val
-        else:
-            args.append("".join(t.text for t in part).strip())
+            args.append("".join(t.text for t in toks[s:e + 1]))
     return args, kwargs
 
 
@@ -1549,126 +1425,175 @@ def _interval_to_spark(text: str) -> str:
     return s.replace("'", "").lower()
 
 
-def _rewrite_tvfs(spark: SparkSession, toks: list[Tok], out: Transpiled) -> list[Tok]:
+def _tvf_frame(spark: SparkSession, name: str, arg_toks: list[Tok],
+               out: Transpiled) -> DataFrame:
+    """The DataFrame of the TVF call ``name(arg_toks)``."""
     from octosql_spark import tvf as tvfmod
-    while True:
-        sig = _sig(toks)
-        positions = _table_positions(toks)
-        target = None
-        for si in positions:
-            i = sig[si]
-            if toks[i].kind == "IDENT" and toks[i].text.lower() in _TVF_NAMES \
-                    and si + 1 < len(sig) and toks[sig[si + 1]].text == "(":
-                target = (si, i)
-                break
-        if target is None:
-            return toks
-        si, i = target
-        open_i = sig[si + 1]
-        close_i = _match_paren(toks, open_i)
-        name = toks[i].text.lower()
-        args, kwargs = _parse_tvf_args(toks[open_i + 1:close_i])
+    args, kwargs = _parse_tvf_args(arg_toks)
 
-        def _df_arg(key: str) -> DataFrame:
-            val = kwargs[key]
-            vsig = [t for t in val if t.kind not in ("WS", "COMMENT")]
-            if vsig and vsig[0].is_kw("TABLE"):
-                inner = val[[t.text for t in val].index("(") + 1:
-                            len(val) - 1 - [t.text for t in val[::-1]].index(")")]
-                inner_sql = "".join(t.text for t in inner).strip()
-                if inner_sql.upper().startswith("SELECT"):
-                    return run_query(spark, inner_sql).df
-                return spark.table(inner_sql)
-            raise ValueError(f"{name}: {key} must be TABLE(...)")
+    def _df_arg(key: str) -> DataFrame:
+        val = kwargs[key]
+        vsig = [t for t in val if t.kind not in ("WS", "COMMENT")]
+        if vsig and vsig[0].is_kw("TABLE"):
+            inner = val[[t.text for t in val].index("(") + 1:
+                        len(val) - 1 - [t.text for t in val[::-1]].index(")")]
+            inner_sql = "".join(t.text for t in inner).strip()
+            if inner_sql.upper().startswith("SELECT"):
+                return run_query(spark, inner_sql).df
+            return spark.table(inner_sql)
+        raise ValueError(f"{name}: {key} must be TABLE(...)")
 
-        def _str_arg(key: str, default: str | None = None) -> str | None:
-            if key not in kwargs:
-                return default
-            return "".join(t.text for t in kwargs[key]).strip()
+    def _str_arg(key: str, default: str | None = None) -> str | None:
+        if key not in kwargs:
+            return default
+        return "".join(t.text for t in kwargs[key]).strip()
 
-        if name == "range":
-            # range(start => 1, end => 10) / range(1, 10) → column `i`
-            # (table_valued_functions/range.go:14-109)
-            def _int_arg(key: str, idx: int) -> int:
-                if key in kwargs:
-                    return int("".join(t.text for t in kwargs[key]).strip())
-                if idx >= len(args):
-                    # both args are Required in the reference
-                    # (range.go:28-41) — a missing one is a typecheck
-                    # error there, so raise the matching ValueError
-                    # instead of an IndexError (r11 verdict #8)
-                    raise ValueError(
-                        f"range: missing required argument '{key}' — "
-                        "usage range(start, end)")
-                return int(args[idx])
-            res = tvfmod.range_tvf(spark, _int_arg("start", 0),
-                                   _int_arg("end", 1))
-        elif name == "tumble":
-            df = _df_arg("source")
-            length = _interval_to_spark(_str_arg("window_length"))
-            tf = _str_arg("time_field")
-            if tf and tf.upper().startswith("DESCRIPTOR"):
-                tf = tf[tf.index("(") + 1:tf.rindex(")")].strip()
-            offset = _str_arg("offset")
-            res = tvfmod.tumble(df, length, tf,
-                                _interval_to_spark(offset) if offset else "0 seconds")
-            # window_end becomes the event-time column (tumble.go:70-122)
-            out.event_time = "window_end"
-        elif name == "max_diff_watermark":
-            df = _df_arg("source")
-            tf = _str_arg("time_field")
-            if tf and tf.upper().startswith("DESCRIPTOR"):
-                tf = tf[tf.index("(") + 1:tf.rindex(")")].strip()
-            resolution = _str_arg("resolution")
-            if df.isStreaming:
-                # streaming source (?tail=true): this TVF IS
-                # Structured Streaming's event-time watermark — the
-                # batch emulation's windows would be rejected at
-                # stream start (r6 fix: it used to be applied
-                # unconditionally and failed there). Late rows drop
-                # at the downstream stateful operator, which is where
-                # the reference's drop is observable too (a
-                # pass-through select has no state to be late FOR).
-                #
-                # resolution: the reference advances its watermark
-                # from FLOOR(ts, resolution) (max_diff_watermark.go:
-                # 148-160), i.e. its watermark sits up to one
-                # resolution unit LOWER than max(ts) - max_diff.
-                # withWatermark can only track the raw column, so fold
-                # resolution into the delay (max_diff + resolution):
-                # the resulting watermark is ≤ the reference's —
-                # conservative, never drops a row the reference keeps
-                # (Spark's late-drop is per-micro-batch best-effort in
-                # that direction anyway). Default resolution is
-                # 1 second, like the reference (:108).
-                from octosql_spark.tvf import interval_micros
-                delay_us = (interval_micros(
-                    _interval_to_spark(_str_arg("max_diff")))
-                    + interval_micros(
-                        _interval_to_spark(resolution)
-                        if resolution else "1 second"))
-                res = df.withWatermark(tf, f"{delay_us} microseconds")
-            else:
-                res = tvfmod.max_diff_watermark(
-                    df, _interval_to_spark(_str_arg("max_diff")), tf,
-                    resolution=_interval_to_spark(resolution)
-                    if resolution else None)
-            # the time field becomes the record event time
-            # (max_diff_watermark.go:14-180)
-            out.event_time = tf
-        elif name == "poll":
-            df = _df_arg("source")
-            # one round materializes here; the CLI re-runs the whole
-            # query per round for the reference's continuous
-            # retract-then-emit loop (poll.go:104-149)
-            out.polls.append(_str_arg("poll_interval") or "1 second")
-            res = next(tvfmod.poll(spark, lambda s: df, rounds=1, sleep=False))
-        else:  # pragma: no cover
-            raise ValueError(name)
-        view = f"_octo_tvf_{next(_view_counter)}"
-        res.createOrReplaceTempView(view)
-        out.views[view] = name
-        toks = toks[:i] + [Tok("IDENT", view)] + toks[close_i + 1:]
+    if name == "range":
+        # range(start => 1, end => 10) / range(1, 10) → column `i`
+        # (table_valued_functions/range.go:14-109)
+        def _int_arg(key: str, idx: int) -> int:
+            if key in kwargs:
+                return int("".join(t.text for t in kwargs[key]).strip())
+            if idx >= len(args):
+                # both args are Required in the reference
+                # (range.go:28-41) — a missing one is a typecheck
+                # error there, so raise the matching ValueError
+                # instead of an IndexError (r11 verdict #8)
+                raise ValueError(
+                    f"range: missing required argument '{key}' — "
+                    "usage range(start, end)")
+            return int(args[idx])
+        return tvfmod.range_tvf(spark, _int_arg("start", 0),
+                                _int_arg("end", 1))
+    if name == "tumble":
+        df = _df_arg("source")
+        length = _interval_to_spark(_str_arg("window_length"))
+        tf = _str_arg("time_field")
+        if tf and tf.upper().startswith("DESCRIPTOR"):
+            tf = tf[tf.index("(") + 1:tf.rindex(")")].strip()
+        offset = _str_arg("offset")
+        # window_end becomes the event-time column (tumble.go:70-122)
+        out.event_time = "window_end"
+        return tvfmod.tumble(df, length, tf, _interval_to_spark(offset)
+                             if offset else "0 seconds")
+    if name == "max_diff_watermark":
+        df = _df_arg("source")
+        tf = _str_arg("time_field")
+        if tf and tf.upper().startswith("DESCRIPTOR"):
+            tf = tf[tf.index("(") + 1:tf.rindex(")")].strip()
+        resolution = _str_arg("resolution")
+        # the time field becomes the record event time
+        # (max_diff_watermark.go:14-180)
+        out.event_time = tf
+        if df.isStreaming:
+            # streaming source (?tail=true): this TVF IS
+            # Structured Streaming's event-time watermark — the
+            # batch emulation's windows would be rejected at
+            # stream start (r6 fix: it used to be applied
+            # unconditionally and failed there). Late rows drop
+            # at the downstream stateful operator, which is where
+            # the reference's drop is observable too (a
+            # pass-through select has no state to be late FOR).
+            #
+            # resolution: the reference advances its watermark
+            # from FLOOR(ts, resolution) (max_diff_watermark.go:
+            # 148-160), i.e. its watermark sits up to one
+            # resolution unit LOWER than max(ts) - max_diff.
+            # withWatermark can only track the raw column, so fold
+            # resolution into the delay (max_diff + resolution):
+            # the resulting watermark is ≤ the reference's —
+            # conservative, never drops a row the reference keeps
+            # (Spark's late-drop is per-micro-batch best-effort in
+            # that direction anyway). Default resolution is
+            # 1 second, like the reference (:108).
+            from octosql_spark.tvf import interval_micros
+            delay_us = (interval_micros(
+                _interval_to_spark(_str_arg("max_diff")))
+                + interval_micros(
+                    _interval_to_spark(resolution)
+                    if resolution else "1 second"))
+            return df.withWatermark(tf, f"{delay_us} microseconds")
+        return tvfmod.max_diff_watermark(
+            df, _interval_to_spark(_str_arg("max_diff")), tf,
+            resolution=_interval_to_spark(resolution)
+            if resolution else None)
+    if name == "poll":
+        df = _df_arg("source")
+        # one round materializes here; the CLI re-runs the whole
+        # query per round for the reference's continuous
+        # retract-then-emit loop (poll.go:104-149)
+        out.polls.append(_str_arg("poll_interval") or "1 second")
+        return next(tvfmod.poll(spark, lambda s: df, rounds=1, sleep=False))
+    raise ValueError(name)  # pragma: no cover
+
+
+def _lookup_dtypes(spark: SparkSession, name: str):
+    try:
+        return spark.table(name).dtypes
+    except Exception:
+        return None
+
+
+def _bind_tables(spark: SparkSession, toks: list[Tok],
+                 out: Transpiled) -> tuple[list[Tok], list[_Relation]]:
+    """One forward pass over the table positions, in text order: a TVF
+    call, and a file, ``stdin.``, ``docs.``, ``plugins.``, ``dual`` or
+    configured-database reference, each become a temp view. A position
+    inside a span just replaced is skipped, such as a TVF's
+    ``TABLE(SELECT …)`` argument, which its own ``run_query`` binds.
+    Returns the rewritten tokens and every FROM/JOIN relation.
+
+    A bound view's relation takes the dtypes of the DataFrame just
+    bound. Any other name is looked up once — each lookup is a py4j
+    round trip plus analysis — unless a CTE (``name AS (``) names it:
+    a CTE shadows any view of that name, and looking one up only
+    fails, after a JVM-side AnalysisException."""
+    from octosql_spark.sources.jdbc import database_by_name, load_config
+    config = functools.cache(load_config)  # read when a chain needs it
+
+    def database(name: str) -> dict | None:
+        return database_by_name(config(), name)
+
+    sig = _sig(toks)
+    ctes = {toks[sig[k]].text.strip('"`').lower() for k in range(len(sig) - 2)
+            if toks[sig[k]].kind in ("IDENT", "QIDENT")
+            and toks[sig[k + 1]].is_kw("AS") and toks[sig[k + 2]].text == "("}
+    looked_up: dict[str, list[tuple[str, str]] | None] = {}
+    bound: list[Tok] = []
+    relations: list[_Relation] = []
+    at = 0  # toks before ``at`` are in ``bound`` or replaced
+    for i, depth in _table_positions(toks):
+        if i < at:
+            continue
+        t, j = toks[i], _next_sig(toks, i)
+        if t.kind == "IDENT" and t.text.lower() in _TVF_NAMES \
+                and j is not None and toks[j].text == "(":
+            end = _match_paren(toks, j)
+            desc = t.text.lower()
+            df = _tvf_frame(spark, desc, toks[j + 1:end], out)
+            view = f"_octo_tvf_{next(_view_counter)}"
+        elif (ref := _table_ref(toks, i, database)) is not None:
+            end, desc = ref
+            view = f"_octo_file_{next(_view_counter)}"
+            df = _read_table_ref(spark, desc, database)
+        elif t.kind in ("IDENT", "QIDENT"):
+            name = t.text.strip('"`')
+            if (key := name.lower()) not in looked_up:
+                looked_up[key] = (None if key in ctes
+                                  else _lookup_dtypes(spark, name))
+            relations.append(_Relation(name, _alias(toks, i), depth,
+                                       looked_up[key]))
+            continue
+        else:  # a subquery or parenthesized join
+            relations.append(_Relation(None, None, depth, None))
+            continue
+        df.createOrReplaceTempView(view)
+        out.views[view] = desc
+        bound += toks[at:i] + [Tok("IDENT", view)]
+        at = end + 1
+        relations.append(_Relation(view, _alias(toks, end), depth,
+                                   df.dtypes))
+    return bound + toks[at:], relations
 
 
 # -------------------------------------------------------------- driver
@@ -1693,68 +1618,43 @@ def _rewrite_ordinal_keys(toks: list[Tok]) -> list[Tok]:
     the same session: the checker's thread pool flaked
     ``recursive_month_spine_gapfill`` (its ``GROUP BY 1`` resolved
     under the dialect's pin ~1 run in 3, MISSING_AGGREGATION)."""
-    sig = _sig(toks)
-    wrap: list[int] = []  # raw indices of NUMBER tokens to wrap
-
-    def flush(item: list[int]) -> None:
-        while item and toks[sig[item[-1]]].is_kw(*_ORD_ITEM_SUFFIX):
-            item.pop()
-        # Unwrap any depth of balanced parentheses around a lone
-        # literal: the dialect treats ``ORDER BY (1)`` exactly like
-        # ``ORDER BY 1`` (both parse through ParseExpression), while
-        # Spark's ordinal substitution also fires on the
-        # parenthesized form.
-        while (len(item) >= 3
-               and toks[sig[item[0]]].text == "("
-               and toks[sig[item[-1]]].text == ")"):
-            item = item[1:-1]
-        if len(item) == 1:
-            t = toks[sig[item[0]]]
-            if (t.kind == "NUMBER" and "." not in t.text
-                    and "e" not in t.text.lower()):
-                wrap.append(sig[item[0]])
-
-    k = 0
-    while k + 1 < len(sig):
-        if not (toks[sig[k]].is_kw("ORDER", "GROUP")
-                and toks[sig[k + 1]].is_kw("BY")):
-            k += 1
-            continue
-        j = k + 2
-        depth = 0
-        item: list[int] = []
-        while j < len(sig):
-            t = toks[sig[j]]
-            if t.text == "(":
-                depth += 1
-                item.append(j)
-            elif t.text == ")":
-                if depth == 0:
-                    break  # subquery / OVER(...) clause end
-                depth -= 1
-                item.append(j)
-            elif depth == 0 and t.text == ",":
-                flush(item)
-                item = []
-            elif depth == 0 and t.is_kw(*_ORD_CLAUSE_END):
-                break
-            else:
-                item.append(j)
-            j += 1
-        flush(item)
-        k = j if j > k else k + 1
+    wrap = set()  # indices of the NUMBER tokens to wrap
+    for _, level, hi in _levels(toks):
+        for k in range(len(level) - 1):
+            if not (toks[level[k]].is_kw("ORDER", "GROUP")
+                    and toks[level[k + 1]].is_kw("BY")):
+                continue
+            end = next((j - 1 for j in level[k + 2:]
+                        if toks[j].is_kw(*_ORD_CLAUSE_END)), hi)
+            for s, e in _split_top_commas(toks, level[k + 1] + 1, end):
+                if (n := _ordinal_literal(toks, s, e)) is not None:
+                    wrap.add(n)
     if not wrap:
         return toks
     out: list[Tok] = []
-    wrapset = set(wrap)
     for i, t in enumerate(toks):
-        if i in wrapset:
-            out.extend([Tok("PUNCT", "("), Tok("NUMBER", t.text),
-                        Tok("OP", "+"), Tok("NUMBER", "0"),
-                        Tok("PUNCT", ")")])
-        else:
-            out.append(t)
+        out += ([Tok("PUNCT", "("), t, Tok("OP", "+"), Tok("NUMBER", "0"),
+                 Tok("PUNCT", ")")] if i in wrap else [t])
     return out
+
+
+def _ordinal_literal(toks: list[Tok], s: int, e: int) -> int | None:
+    """Index of the integer literal that the ORDER BY / GROUP BY item
+    ``toks[s..e]`` is, under any parens and before its ASC/DESC/NULLS
+    suffix; None for any other item. The dialect treats ``ORDER BY
+    (1)`` exactly like ``ORDER BY 1`` (both parse through
+    ParseExpression), while Spark's ordinal substitution also fires on
+    the parenthesized form."""
+    item = [j for j in range(s, e + 1) if toks[j].kind not in ("WS", "COMMENT")]
+    while item and toks[item[-1]].is_kw(*_ORD_ITEM_SUFFIX):
+        item.pop()
+    while len(item) >= 3 and toks[item[0]].text == "(" \
+            and toks[item[-1]].text == ")":
+        item = item[1:-1]
+    if len(item) == 1 and toks[item[0]].kind == "NUMBER" \
+            and not any(c in toks[item[0]].text for c in ".eE"):
+        return item[0]
+    return None
 
 
 def transpile(spark: SparkSession, sql: str,
@@ -1765,9 +1665,7 @@ def transpile(spark: SparkSession, sql: str,
     toks = _strip_join_modifiers(toks)
     toks = _rewrite_outer_join(toks)
     toks = _rewrite_arrow(toks)
-    toks = _rewrite_tvfs(spark, toks, out)
-    toks = _rewrite_file_tables(spark, toks, out)
-    relations = _relations(spark, toks)
+    toks, relations = _bind_tables(spark, toks, out)
     toks = _expand_star(toks, relations)
     toks = _alias_select_items(toks)
     types = _collect_column_types(relations)
@@ -1781,14 +1679,7 @@ def transpile(spark: SparkSession, sql: str,
     toks = _rewrite_calls(toks, types)
     toks = _rewrite_float_literals(toks)
     toks = _rewrite_ordinal_keys(toks)
-    depth = 0
-    for t in toks:
-        if t.text == "(":
-            depth += 1
-        elif t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("ORDER"):
-            out.ordered = True
+    out.ordered = any(toks[i].is_kw("ORDER") for i in _top_level(toks))
     out.sql = "".join(t.text for t in toks).strip()
     return out
 

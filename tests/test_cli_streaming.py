@@ -372,15 +372,16 @@ def test_trigger_counting_expression_key(spark, tmp_path, capsys):
 def test_trigger_counting_where_uses_dialect_semantics(spark, tmp_path,
                                                        capsys):
     """The exact-counting fast path must run its WHERE through the
-    dialect rewrites, not raw Spark SQL: `v / 2 = 1` is integer
+    dialect rewrites, not raw Spark SQL: `int(v) / 2 = 1` is integer
     division (functions.go:320-355) selecting v∈{2,3}, while Spark's
-    float division would keep only v=2 (advisor-found r4)."""
+    float division would keep only v=2 (advisor-found r4). JSON
+    numbers are Float, so `int(v)` makes the Int operand."""
     d = tmp_path / "cntd"
     d.mkdir()
     (d / "a.json").write_text(
         '\n'.join('{"k": "x", "v": %d}' % i for i in range(1, 7)) + '\n')
     rc = main([f"SELECT k, COUNT(v) AS n FROM '{d}/*.json?tail=true' "
-               "WHERE v / 2 = 1 GROUP BY k TRIGGER COUNTING 2",
+               "WHERE int(v) / 2 = 1 GROUP BY k TRIGGER COUNTING 2",
                "--output", "stream_native"])
     out = capsys.readouterr().out
     assert rc == 0

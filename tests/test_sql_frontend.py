@@ -227,6 +227,56 @@ def test_one_schema_lookup_per_table(spark, monkeypatch):
     assert "x.k AS `x.k`" in t.sql
 
 
+def test_bound_file_view_is_not_looked_up(spark, tmp_path, monkeypatch):
+    """A file reference's view takes its dtypes from the DataFrame the
+    binding pass just read: only the catalog table is looked up."""
+    spark.createDataFrame([(1, "a")], "k long, v string") \
+        .createOrReplaceTempView("lookup_dim")
+    p = tmp_path / "fact.csv"
+    p.write_text("k,n\n1,10\n")
+    calls = []
+    table = spark.table
+    monkeypatch.setattr(spark, "table",
+                        lambda name: calls.append(name) or table(name))
+    t = transpile(spark, f"SELECT * FROM '{p}' f JOIN lookup_dim d "
+                         "ON f.k = d.k")
+    assert calls == ["lookup_dim"]
+    assert "f.k AS `f.k`" in t.sql and "d.v AS v" in t.sql
+
+
+def test_database_config_read_once_when_a_chain_needs_it(spark,
+                                                         monkeypatch):
+    from octosql_spark.sources import jdbc
+    calls = []
+    load = jdbc.load_config
+    monkeypatch.setattr(jdbc, "load_config",
+                        lambda: calls.append(1) or load())
+    transpile(spark, "SELECT 1 AS one")
+    assert calls == []
+    transpile(spark, "SELECT * FROM a.b x JOIN c.d y ON x.k = y.k")
+    assert calls == [1]
+
+
+def test_table_binding_follows_text_order(spark, tmp_path):
+    """One pass binds TVFs and files in text order; a table after a
+    subquery in a FROM list is bound too, and a TVF's ``TABLE(…)``
+    argument is bound by its own transpile, not by the outer pass."""
+    p = tmp_path / "nums.csv"
+    p.write_text("k\n1\n2\n")
+    t = transpile(spark, f"SELECT * FROM '{p}' a, range(0, 2) r, "
+                         f"(SELECT k FROM '{p}') s, '{p}' b")
+    files = [v for v in t.views if v.startswith("_octo_file_")]
+    tvfs = [v for v in t.views if v.startswith("_octo_tvf_")]
+    assert len(files) == 3 and len(tvfs) == 1
+    nums = [int(v.rsplit("_", 1)[1]) for v in t.views]
+    assert nums == sorted(nums) and list(t.views)[1] == tvfs[0]
+    assert f"'{p}'" not in t.sql
+    t = transpile(spark, "SELECT COUNT(*) AS n FROM poll(source => "
+                         f"TABLE(SELECT * FROM '{p}'))")
+    assert list(t.views.values()) == ["poll"]
+    assert spark.sql(t.sql).collect()[0].n == 2
+
+
 def test_file_table_json(spark, tmp_path):
     p = tmp_path / "objs.json"
     p.write_text("\n".join(json.dumps({"field1": "a", "field2": i})

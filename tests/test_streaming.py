@@ -162,9 +162,9 @@ def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
         f.write_text("\n".join(json.dumps(r) for r in rows))
         os.utime(f, (i, i))  # order micro-batches
     src = f"'{p}/*.json?tail=true&maxFilesPerTrigger=1'"
-    left = _watermarked(f"SELECT user, ts::Time AS lts, v FROM {src} "
+    left = _watermarked(f"SELECT user, ts AS lts, v FROM {src} "
                         "WHERE side = 'L'", "5 SECOND", "lts")
-    right = _watermarked(f"SELECT user AS user_r, ts::Time AS rts FROM {src} "
+    right = _watermarked(f"SELECT user AS user_r, ts AS rts FROM {src} "
                          "WHERE side = 'R'", "5 SECOND", "rts")
     got = {(r.user, r.user_r) for r in _sql_to_memory(
         spark,

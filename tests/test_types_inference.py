@@ -125,6 +125,18 @@ def test_read_json_with_union_carrier(spark, tmp_path):
     out = run_query(spark, "SELECT id, value::int AS as_int FROM u").df
     vals = {int(r.id): r.as_int for r in out.collect()}
     assert vals == {1: 42, 2: None, 3: None}
+    # a directory or glob holding the same rows, split over two files,
+    # is typed like the single file
+    d = tmp_path / "parts"
+    d.mkdir()
+    lines = p.read_text().splitlines(keepends=True)
+    (d / "a.json").write_text("".join(lines[:2]))
+    (d / "b.json").write_text(lines[2] + '{"id": 4, "ts": "2024-01-01T00:00:01Z"}\n')
+    p.write_text("".join(lines) + '{"id": 4, "ts": "2024-01-01T00:00:01Z"}\n')
+    want = read_json(spark, str(p)).dtypes
+    assert dict(want)["ts"] == "timestamp"
+    assert read_json(spark, str(d)).dtypes == want
+    assert read_json(spark, f"{d}/*.json").dtypes == want
 
 
 def test_csv_directory_strict_quote_parity(spark, tmp_path):
