@@ -142,13 +142,9 @@ def _run(args, spark) -> int:
         try:
             return _run_scoped(args, spark, stagers)
         finally:
-            # stop THIS query's stagers on every exit path, not just
-            # _run_streaming's finally: a build failure after a
-            # ?tail=true source already registered its stager (e.g.
-            # the second source of a multi-source query fails to
-            # parse) used to leak the polling thread and its growing
-            # staged copy (r9 advice). Idempotent — stop_tail_stagers
-            # skips events _run_streaming already set.
+            # stop THIS query's stagers on every exit path, a failed
+            # build included: their polling threads and growing
+            # staged copies outlive the query otherwise
             stop_tail_stagers(stagers)
 
 
@@ -560,7 +556,7 @@ def map_trigger(spec: str | None):
     raise ValueError(f"unsupported trigger: {spec!r}")
 
 
-def _run_streaming(args, res, df, stagers=None) -> int:
+def _run_streaming(args, res, df, stagers) -> int:
     """A ``?tail=true`` source (or TVF stream) reached the sink: map
     the TRIGGER spec to an output mode (``map_trigger``)
     and drive a foreachBatch printer. The reference runs streaming
@@ -584,6 +580,9 @@ def _run_streaming(args, res, df, stagers=None) -> int:
         return 1
     if args.duration is None and not trig:
         trig = {"availableNow": True}  # finite run: drain and exit
+    if trig.get("availableNow"):
+        for stager in stagers:
+            stager.drain()  # a last line without a newline, too
 
     def _start(frame, output_mode, writer):
         w = frame.writeStream.outputMode(output_mode).foreachBatch(writer)
@@ -656,14 +655,6 @@ def _run_streaming(args, res, df, stagers=None) -> int:
                or _one_line_error(ex))
         print(f"error: {msg}", file=sys.stderr)
         return 1
-    finally:
-        # the tail stagers' polling threads outlive the query
-        # otherwise (one leaked thread + a growing staged copy per
-        # tail query in a long-lived session — r8 review). Scoped to
-        # THIS query's stagers so a concurrent tail query's follower
-        # keeps running (r8 advice).
-        from octosql_spark.sources.files import stop_tail_stagers
-        stop_tail_stagers(stagers)
     if args.output == "stream_native":
         # final watermark metadata line, like the reference's
         # NativeFormat.WriteMeta ("{~<watermark>}",

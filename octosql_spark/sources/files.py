@@ -19,6 +19,7 @@ import contextlib
 import os
 import sys
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +33,7 @@ _STAGER_STOPS: list = []
 # (each CLI invocation builds its sources on its own thread), and a
 # process-global scope list would cross-register query A's stagers
 # into query B's open scope — re-creating the bug the scoping fixes
-import threading as _threading
-
-_STAGER_SCOPES = _threading.local()
+_STAGER_SCOPES = threading.local()
 
 
 @contextlib.contextmanager
@@ -55,10 +54,22 @@ def tail_stager_scope():
         stack.remove(mine)
 
 
-def _register_stager(stop) -> None:
+class _Stager(threading.Event):
+    """A tail stager's stop event. ``drain()`` stages what its files
+    hold now, a last line without its newline included: a run that
+    drains the current contents and exits sees every line."""
+
+    def __init__(self, drain):
+        super().__init__()
+        self.drain = drain
+
+
+def _register_stager(drain) -> _Stager:
+    stop = _Stager(drain)
     _STAGER_STOPS.append(stop)
     for scope in getattr(_STAGER_SCOPES, "stack", ()):
         scope.append(stop)
+    return stop
 
 
 def stop_tail_stagers(stops: list | None = None) -> int:
@@ -80,6 +91,16 @@ def stop_tail_stagers(stops: list | None = None) -> int:
     return n
 
 
+def _stageable(chunk: bytes, sep_b: bytes, final: bool) -> tuple[bytes, int]:
+    """(the lines of ``chunk`` to stage, the bytes of ``chunk`` they
+    take up): its complete lines; when ``final``, all of it, with a
+    last line that has no ``sep_b`` closed by one."""
+    if final and chunk and not chunk.endswith(sep_b):
+        return chunk + sep_b, len(chunk)
+    cut = chunk.rfind(sep_b) + len(sep_b) if sep_b in chunk else 0
+    return chunk[:cut], cut
+
+
 def _stage_growing_file(path: str, poll_s: float = 0.5,
                         line_prefix: bytes = b"",
                         number_lines: bool = False,
@@ -91,9 +112,10 @@ def _stage_growing_file(path: str, poll_s: float = 0.5,
     the reference's ``tail -f`` semantics expressed through Spark's
     new-file discovery. Only complete lines are staged (a trailing
     partial line waits for its newline, like the reference's
-    line-buffered reader). ``line_prefix`` (the CSV header) is
-    prepended to every staged chunk so per-file header parsing stays
-    consistent.
+    line-buffered reader) until the stager's ``drain()``: a run that
+    processes the current contents and exits stages it, closed by a
+    newline. ``line_prefix`` (the CSV header) is prepended to every
+    staged chunk so per-file header parsing stays consistent.
 
     ``number_lines=True`` (the single-file ``lines`` tail) re-encodes
     each staged chunk as JSON rows ``{"number": N, "text": ...}`` with
@@ -106,25 +128,25 @@ def _stage_growing_file(path: str, poll_s: float = 0.5,
     growth burst — no executor involvement until data actually
     arrives; at scale a log-tailing workload would use a real message
     bus, this exists for CLI parity."""
-    import threading
-    import time
-
     import json
+    import time
 
     d = tempfile.mkdtemp(prefix="octosql_tail_")
     state = {"off": 0, "n": 0, "line": 0, "fresh": False}
+    lock = threading.Lock()
 
-    def stage() -> None:
-        with open(path, "rb") as f:
-            f.seek(state["off"])
-            chunk = f.read()
-        cut = chunk.rfind(sep_b) + len(sep_b)
-        if cut >= len(sep_b):
+    def stage(final: bool = False) -> None:
+        with lock:
+            with open(path, "rb") as f:
+                f.seek(state["off"])
+                body, used = _stageable(f.read(), sep_b, final)
+            if not body:
+                return
             name = os.path.join(d, f"part-{state['n']:08d}")
             tmp = name + ".tmp"
             with open(tmp, "wb") as out:
                 if number_lines:
-                    for ln in chunk[:cut].split(sep_b)[:-1]:
+                    for ln in body.split(sep_b)[:-1]:
                         row = {"number": state["line"],
                                "text": ln.decode("utf-8", "replace")}
                         out.write(json.dumps(row).encode() + b"\n")
@@ -138,15 +160,14 @@ def _stage_growing_file(path: str, poll_s: float = 0.5,
                     if (state["n"] > 0 and line_prefix
                             and not state["fresh"]):
                         out.write(line_prefix)
-                    out.write(chunk[:cut])
+                    out.write(body)
             os.rename(tmp, name)  # atomic: the stream never sees partials
-            state["off"] += cut
+            state["off"] += used
             state["n"] += 1
             state["fresh"] = False
 
     stage()  # current contents = batch 0
-    stop = threading.Event()
-    _register_stager(stop)
+    stop = _register_stager(lambda: stage(final=True))
 
     def loop() -> None:
         while not stop.is_set():
@@ -187,7 +208,6 @@ def _stage_growing_dir(pattern: str, poll_s: float = 0.5,
     file per poll, sequential reads only on growth."""
     import glob as _glob
     import json
-    import threading
     import time
 
     d = tempfile.mkdtemp(prefix="octosql_tail_dir_")
@@ -200,7 +220,7 @@ def _stage_growing_dir(pattern: str, poll_s: float = 0.5,
             root = os.path.join(root, "*")
         return sorted(p for p in _glob.glob(root) if os.path.isfile(p))
 
-    def stage_one(p: str) -> None:
+    def stage_one(p: str, final: bool = False) -> None:
         st = state.setdefault(p, {"off": 0, "line": 0})
         try:
             size = os.path.getsize(p)
@@ -218,31 +238,35 @@ def _stage_growing_dir(pattern: str, poll_s: float = 0.5,
                 chunk = f.read()
         except OSError:
             return
-        cut = chunk.rfind(sep_b) + len(sep_b)
-        if cut < len(sep_b):
+        body, used = _stageable(chunk, sep_b, final)
+        if not body:
             return
         name = os.path.join(d, f"part-{seq[0]:08d}")
         tmp = name + ".tmp"
         with open(tmp, "wb") as out:
-            for ln in chunk[:cut].split(sep_b)[:-1]:
+            for ln in body.split(sep_b)[:-1]:
                 row = {"number": st["line"],
                        "text": ln.decode("utf-8", "replace")}
                 out.write(json.dumps(row).encode() + b"\n")
                 st["line"] += 1
         os.rename(tmp, name)  # atomic: the stream never sees partials
-        st["off"] += cut
+        st["off"] += used
         seq[0] += 1
 
-    for p0 in matches():
-        stage_one(p0)
-    stop = threading.Event()
-    _register_stager(stop)
+    lock = threading.Lock()
+
+    def stage_all(final: bool = False) -> None:
+        with lock:
+            for p in matches():
+                stage_one(p, final)
+
+    stage_all()
+    stop = _register_stager(lambda: stage_all(final=True))
 
     def loop() -> None:
         while not stop.is_set():
             time.sleep(poll_s)
-            for p in matches():
-                stage_one(p)
+            stage_all()
 
     threading.Thread(target=loop, daemon=True,
                      name="octosql-tail-dir").start()

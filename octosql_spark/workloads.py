@@ -11,8 +11,11 @@ the gate compares Spark and DuckDB on one text. A hand-written builder
 (``@workload(...)`` on a function) stays only where the entry exercises
 our own operators (datapipe, streaming, sketches, TVFs, sources), where
 its text differs from the oracle on purpose, or where it beats the SQL
-text by a measured margin. An overlapping builder kept for speed or
-plan shape says why in ONE comment line above it, with the measurement
+text by a measured margin. Join order is not such a margin: the front
+end writes an inner-join chain of three or more relations with its
+largest relation first, as a hand builder would. An overlapping
+builder kept for speed or plan shape says why in ONE comment line
+above it, with the measurement
 (``# keep: <ratio or plan budget>, <where measured>``).
 
 Conventions for oracle comparability (driver hashes values with
@@ -181,8 +184,7 @@ GROUP BY c_mktsegment
 """, headline=True)
 
 
-# keep: SQL 1.64x at sf0.1 (633 vs 1037 ms, 0/7 SQL wins): the builder fixes a fact-first join order
-@workload("join_multiway_revenue", """
+workload("join_multiway_revenue", """
 SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
@@ -195,42 +197,9 @@ WHERE r_name = 'ASIA'
   AND o_orderdate <  TIMESTAMP '1999-01-01'
 GROUP BY n_name
 """, headline=True)
-def join_multiway_revenue(spark, sf_dir):
-    """TPC-H Q5 shape: 6-table join (fact lineitem/orders against 4
-    dims) + filtered agg — the canonical reporting query. At scale the
-    plan is exactly what you want: region/nation/supplier/customer are
-    all under the broadcast threshold so the only shuffles are the
-    lineitem↔orders equi-join and the tiny final agg; the o_orderdate
-    and r_name filters reach the scans, and AQE can reorder/shrink
-    the remaining exchange at runtime."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1999-01-01"))
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    # fact-first join tree: lineitem is the STREAM side throughout, so
-    # it is scanned once and never built into a broadcast hash relation
-    # (a dim-first tree made Catalyst broadcast the 600k-row fact —
-    # a driver-collect of the biggest table, ~1 s locally and an
-    # instant OOM at real scale); every dim is under the broadcast
-    # threshold here, and at 100 TB AQE swaps the orders join to a
-    # shuffle while the tree shape stays optimal
-    j = (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-         .join(s, (F.col("l_suppkey") == F.col("s_suppkey"))
-               & (F.col("c_nationkey") == F.col("s_nationkey")))
-         .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-         .join(r, F.col("n_regionkey") == F.col("r_regionkey")))
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (j.groupBy("n_name")
-            .agg(F.round(F.sum(rev), 2).alias("revenue")))
 
 
-# keep: SQL 1.29x at sf0.1 (477 vs 616 ms, 0/15 SQL wins): builder join order
-@workload("tpch_q3_shipping_priority", """
+workload("tpch_q3_shipping_priority", """
 SELECT l_orderkey,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        o_orderdate
@@ -244,33 +213,9 @@ GROUP BY l_orderkey, o_orderdate
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10
 """)
-def tpch_q3_q(spark, sf_dir):
-    """TPC-H Q3 (shipping priority): segment-filtered 3-table join,
-    grouped revenue, top-10. Plan: orders<->lineitem hash join, then
-    customer joined WITHOUT a forced broadcast — customer scales with
-    SF, so AQE's 64 MB size gate decides (auto-broadcast at test SFs,
-    shuffle join at 100 TB). Partial agg then TakeOrderedAndProject —
-    the top-k never materializes a global sort. Tie-broken by
-    l_orderkey so LIMIT is deterministic."""
-    c = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < "1997-03-15")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > "1997-03-15")
-    return (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(c, F.col("c_custkey") == F.col("o_custkey"))
-            .groupBy("l_orderkey", "o_orderdate")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .select("l_orderkey", "revenue", "o_orderdate")
-            .orderBy(F.col("revenue").desc(), "l_orderkey")
-            .limit(10))
 
 
-# keep: SQL 1.16x at sf0.1 (607 vs 702 ms, 2/15 SQL wins): builder join order
-@workload("tpch_q10_returned_items", """
+workload("tpch_q10_returned_items", """
 SELECT c_custkey, c_name,
        ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        n_name
@@ -285,29 +230,6 @@ GROUP BY c_custkey, c_name, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """)
-def tpch_q10_q(spark, sf_dir):
-    """TPC-H Q10 (returned items): quarter of returned lineitems
-    attributed back to customers, top-20 by lost revenue. lineitem is
-    the biggest side; nation stays broadcast (25 rows at any SF), but
-    customer is SF-scaled and unfiltered so it gets NO forced hint —
-    the 64 MB auto-gate broadcasts it at test SFs and falls back to a
-    shuffle join at scale. Top-k via TakeOrderedAndProject."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1997-01-01")
-        & (F.col("o_orderdate") < "1997-04-01"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(c, F.col("c_custkey") == F.col("o_custkey"))
-            .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .select("c_custkey", "c_name", "revenue", "n_name")
-            .orderBy(F.col("revenue").desc(), "c_custkey")
-            .limit(20))
 
 
 workload("tpch_q14_promo_revenue", """
@@ -347,8 +269,7 @@ ORDER BY o_orderpriority
 """)
 
 
-# keep: SQL 1.65x at sf0.1 (517 vs 854 ms, 0/7 SQL wins): builder join order
-@workload("tpch_q5_local_supplier", """
+workload("tpch_q5_local_supplier", """
 SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
@@ -362,36 +283,6 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """)
-def tpch_q5_q(spark, sf_dir):
-    """TPC-H Q5 (local supplier volume): 6-table join where the
-    customer and supplier must share a nation inside one region.
-    Plan shape for 100 TB: lineitem is the single probe side; only
-    nation⋈region gets a forced broadcast (≤25 rows at any SF).
-    customer and supplier are SF-scaled and unfiltered, so they carry
-    NO hint — the 64 MB auto-gate broadcasts them at test SFs and AQE
-    degrades to shuffle joins at scale. The c_nationkey = s_nationkey
-    equality rides the supplier join as an extra key, so no post-join
-    filter explosion."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01"))
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nr = n.join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-    return (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(c, F.col("c_custkey") == F.col("o_custkey"))
-            .join(s,
-                  (F.col("l_suppkey") == F.col("s_suppkey"))
-                  & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
-            .groupBy("n_name")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy(F.col("revenue").desc(), "n_name"))
 
 
 workload("tpch_q6_forecast_revenue", """
@@ -572,7 +463,7 @@ WHERE p_brand = 'Brand#3' AND p_type = 'SMALL'
 """)
 
 
-# keep: SQL 1.83x at sf0.1 (821 vs 1505 ms, 0/7 SQL wins): lineitem is pre-aggregated before the join
+# keep: perfbench registry_exec times this builder; the SQL text reads 0.99x at sf0.1 (295 vs 298 ms, 8/15 SQL wins)
 @workload("tpch_q18_large_volume", """
 SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
        CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty

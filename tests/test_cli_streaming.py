@@ -12,6 +12,8 @@ from __future__ import annotations
 import threading
 import time
 
+import pytest
+
 from octosql_spark.cli import main
 
 
@@ -37,6 +39,43 @@ def test_cli_tail_drains_and_exits(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert rc == 0
     assert '"bob"' in out and '"alice"' not in out
+
+
+def test_cli_tail_drain_delivers_last_line_without_newline(spark, tmp_path,
+                                                          capsys):
+    """The drain-and-exit run processes the file's current contents,
+    so a last line with no trailing newline is one more row."""
+    p = tmp_path / "ev.json"
+    p.write_text("\n".join('{"k": %d}' % i for i in range(3)))
+    rc = main([f"SELECT k FROM '{p}?tail=true'", "--output", "stream_native"])
+    out = capsys.readouterr().out
+    assert rc == 0
+    assert all(f"| {i} |}}" in out for i in range(3)), out
+
+
+@pytest.mark.parametrize("key", ["window_end", "window_start"])
+def test_cli_tumble_on_watermark_groups_by_either_bound(spark, tmp_path,
+                                                        capsys, key):
+    """TRIGGER ON WATERMARK over tumble(max_diff_watermark(tail)) runs
+    in append mode grouped by either window bound, and a window fires
+    once the watermark passes its end: the last window, whose end the
+    watermark (00:02:20 - 10 s - 1 s resolution) has not reached, is
+    held back."""
+    p = tmp_path / "ev.json"
+    p.write_text("".join('{"ts": "2024-01-01T00:%s"}\n' % t for t in
+                         ("00:05", "00:30", "01:10", "02:20")))
+    rc = main([f"SELECT {key}, COUNT(*) AS n FROM tumble(source => TABLE("
+               "SELECT * FROM max_diff_watermark(source => TABLE("
+               f"SELECT * FROM '{p}?tail=true'), max_diff => INTERVAL 10 "
+               "SECOND, time_field => DESCRIPTOR(ts))), window_length => "
+               f"INTERVAL 1 MINUTE) GROUP BY {key} TRIGGER ON WATERMARK",
+               "--output", "stream_native"])
+    out = capsys.readouterr().out
+    assert rc == 0
+    shift = 1 if key == "window_end" else 0
+    assert f"2024-01-01T00:0{0 + shift}:00Z, 2 |}}" in out, out
+    assert f"2024-01-01T00:0{1 + shift}:00Z, 1 |}}" in out, out
+    assert f"2024-01-01T00:0{2 + shift}:00Z" not in out, out
 
 
 def test_cli_tail_trigger_eos(spark, tmp_path, capsys):

@@ -627,3 +627,63 @@ def test_scalar_subquery_category_safe_fallbacks(spark):
     r3 = run_query(spark, "SELECT (SELECT cnt FROM sqcat_t) / 3 AS v "
                           "FROM sqcat_t").df.collect()[0]
     assert r3.v == 1 and isinstance(r3.v, int)
+
+
+def test_inner_join_chain_builds_on_the_fact_table(spark, views):
+    """An inner-join chain written dimension-first plans with its
+    largest relation as the leftmost leaf: the fact table streams
+    through the joins and the dimensions are the build sides."""
+    from octosql_spark import workloads
+    df = run_query(spark, workloads.REGISTRY["tpch_q5_local_supplier"]
+                   .oracle).df
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.children().size():
+        node = node.children().apply(0)
+    out = node.output()
+    assert "l_orderkey" in [out.apply(i).name() for i in range(out.size())]
+
+
+@pytest.mark.parametrize("chain", [
+    # a LEFT JOIN in the chain
+    "FROM nation JOIN customer ON n_nationkey = c_nationkey "
+    "LEFT JOIN orders ON c_custkey = o_custkey "
+    "JOIN lineitem ON l_orderkey = o_orderkey",
+    # a CTE relation
+    "FROM nation JOIN customer ON n_nationkey = c_nationkey "
+    "JOIN o ON c_custkey = o_custkey JOIN lineitem ON l_orderkey = o_orderkey",
+    # n_regionkey is unqualified, and n2 has it too once it is in WHERE
+    "FROM region JOIN nation n1 ON n_regionkey = r_regionkey "
+    "JOIN supplier ON s_nationkey = n1.n_nationkey "
+    "JOIN lineitem ON l_suppkey = s_suppkey "
+    "JOIN nation n2 ON n2.n_nationkey = s_nationkey",
+])
+def test_inner_join_chain_left_as_written(spark, views, chain):
+    sql = ("WITH o AS (SELECT * FROM orders) "
+           f"SELECT COUNT(*) AS n {chain}")
+    assert chain in transpile(spark, sql).sql
+    # a bare * in the subquery level holding the chain
+    inner = ("SELECT * FROM customer JOIN orders ON c_custkey = o_custkey "
+             "JOIN lineitem ON l_orderkey = o_orderkey")
+    sql = f"SELECT COUNT(*) AS n FROM ({inner}) t"
+    assert inner in transpile(spark, sql).sql
+    assert "FROM lineitem, customer, orders" in transpile(
+        spark, sql.replace("SELECT *", "SELECT c_name")).sql
+
+
+def test_from_inside_a_call_looks_up_no_table(spark, monkeypatch):
+    """The FROM of ``EXTRACT(… FROM x)``, ``trim(… FROM x)`` and
+    ``IS [NOT] DISTINCT FROM`` starts no table reference, so only the
+    query's table is looked up in the catalog."""
+    spark.sql("SELECT TIMESTAMP '2020-01-01 00:00:00' AS ts, 1 AS a, "
+              "2 AS b, 'xsx' AS s").createOrReplaceTempView("t")
+    looked_up = []
+    table = spark.table
+    monkeypatch.setattr(spark, "table",
+                        lambda name: looked_up.append(name) or table(name))
+    for sql in ("SELECT EXTRACT(YEAR FROM ts) AS y FROM t",
+                "SELECT a IS DISTINCT FROM b AS d, "
+                "a IS NOT DISTINCT FROM b AS e FROM t",
+                "SELECT trim(BOTH 'x' FROM s) AS s FROM t"):
+        looked_up.clear()
+        transpile(spark, sql)
+        assert looked_up == ["t"], sql

@@ -2,9 +2,10 @@
 inputs, so a change to the token passes shows every rewrite it moves.
 
 ``fixtures/transpile_golden.jsonl`` holds one JSON object a line. The
-first line is ``{"dtypes": {table: [[column, dtype], ...]}}``, the
-Spark dtypes of the registry's ten tables; a stub catalog serves them
-in place of ``spark.table(name).dtypes``, so no Spark session starts.
+first line is ``{"dtypes": {table: [[column, dtype], ...]}, "sizes":
+{table: bytes}}``, the Spark dtypes and Catalyst size estimates of the
+registry's ten tables; a stub catalog serves them in place of
+``spark.table(name)``, so no Spark session starts.
 Every other line is an ``{"in", "out"}`` pair. The inputs are every
 registry oracle text that transpiles against the stub, then dialect
 queries over ``nation`` drawn once, derandomized, from
@@ -14,8 +15,8 @@ After an intended change of transpiled text, rewrite the outputs with
 
     python tests/test_transpile_golden.py --write
 
-and redraw the inputs and dtypes (starts Spark; ``sf_dir`` is a scale
-directory holding the ten tables) with
+and redraw the inputs, dtypes and sizes (starts Spark; ``sf_dir`` is a
+scale directory holding the ten tables) with
 
     python tests/test_transpile_golden.py --write --draw <sf_dir>
 """
@@ -25,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,27 +35,46 @@ FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        "fixtures", "transpile_golden.jsonl")
 
 
-class _Catalog:
-    """Stands in for a SparkSession: ``table(name).dtypes`` for the
-    fixture's tables; any other name fails, like an unknown table."""
+class _Frame:
+    """A batch table's dtypes and its size estimate, read through
+    ``_jdf.queryExecution().optimizedPlan().stats().sizeInBytes()``."""
 
-    def __init__(self, dtypes: dict[str, list[list[str]]]):
-        self._dtypes = {k.lower(): [tuple(p) for p in v]
+    isStreaming = False
+
+    def __init__(self, dtypes: list[tuple[str, str]], size: int):
+        self.dtypes, self._size, self._jdf = dtypes, size, self
+
+    def queryExecution(self):
+        return self
+
+    optimizedPlan = stats = queryExecution
+
+    def sizeInBytes(self) -> int:
+        return self._size
+
+
+class _Catalog:
+    """Stands in for a SparkSession: ``table(name)`` for the fixture's
+    tables; any other name fails, like an unknown table."""
+
+    def __init__(self, dtypes: dict[str, list[list[str]]],
+                 sizes: dict[str, int]):
+        self._frames = {k.lower(): _Frame([tuple(p) for p in v], sizes[k])
                         for k, v in dtypes.items()}
 
     def table(self, name: str):
-        return SimpleNamespace(dtypes=self._dtypes[name.lower()])
+        return self._frames[name.lower()]
 
 
-def _load() -> tuple[dict, list[dict]]:
+def _load() -> tuple[dict, dict, list[dict]]:
     with open(FIXTURE) as f:
         head, *cases = [json.loads(line) for line in f]
-    return head["dtypes"], cases
+    return head["dtypes"], head["sizes"], cases
 
 
 def test_transpiled_text_matches_golden():
-    dtypes, cases = _load()
-    catalog = _Catalog(dtypes)
+    dtypes, sizes, cases = _load()
+    catalog = _Catalog(dtypes, sizes)
     diff = [(c["in"], c["out"], got) for c in cases
             if (got := transpile(catalog, c["in"]).sql) != c["out"]]
     assert not diff, (f"{len(diff)} of {len(cases)} transpiled texts "
@@ -135,17 +154,20 @@ def _draw_fuzz(per_form: int) -> list[str]:
     return list(dict.fromkeys(drawn))
 
 
-def _draw(sf_dir: str) -> tuple[dict, list[str]]:
-    """Registry dtypes read through Spark, then the inputs that
-    transpile against them: the registry's oracle texts and fuzz
+def _draw(sf_dir: str) -> tuple[dict, dict, list[str]]:
+    """Registry dtypes and sizes read through Spark, then the inputs
+    that transpile against them: the registry's oracle texts and fuzz
     draws."""
     from octosql_spark import workloads
     from octosql_spark.catalog import TPCH_TABLES, load_table
     from octosql_spark.session import get_spark
+    from octosql_spark.sql.transpiler import _size_in_bytes
     spark = get_spark("transpile_golden")
-    dtypes = {t: load_table(spark, sf_dir, t).dtypes for t in TPCH_TABLES}
+    frames = {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
+    dtypes = {t: df.dtypes for t, df in frames.items()}
+    sizes = {t: _size_in_bytes(df) for t, df in frames.items()}
     spark.stop()
-    catalog = _Catalog(dtypes)
+    catalog = _Catalog(dtypes, sizes)
     inputs = []
     for text in (*workloads.oracle_sql().values(), *_draw_fuzz(120)):
         try:
@@ -153,18 +175,18 @@ def _draw(sf_dir: str) -> tuple[dict, list[str]]:
         except Exception:
             continue  # needs Spark itself, such as a bound TVF
         inputs.append(text)
-    return dtypes, inputs
+    return dtypes, sizes, inputs
 
 
 def _write(draw_from: str | None) -> None:
     if draw_from:
-        dtypes, inputs = _draw(draw_from)
+        dtypes, sizes, inputs = _draw(draw_from)
     else:
-        dtypes, cases = _load()
+        dtypes, sizes, cases = _load()
         inputs = [c["in"] for c in cases]
-    catalog = _Catalog(dtypes)
+    catalog = _Catalog(dtypes, sizes)
     with open(FIXTURE, "w") as f:
-        f.write(json.dumps({"dtypes": dtypes}) + "\n")
+        f.write(json.dumps({"dtypes": dtypes, "sizes": sizes}) + "\n")
         for text in inputs:
             out = transpile(catalog, text).sql
             f.write(json.dumps({"in": text, "out": out}) + "\n")
