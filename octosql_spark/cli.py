@@ -142,9 +142,13 @@ def _run(args, spark) -> int:
         try:
             return _run_scoped(args, spark, stagers)
         finally:
-            # stop THIS query's stagers on every exit path, a failed
-            # build included: their polling threads and growing
-            # staged copies outlive the query otherwise
+            # stop THIS query's stagers on every exit path, not just
+            # _run_streaming's finally: a build failure after a
+            # ?tail=true source already registered its stager (e.g.
+            # the second source of a multi-source query fails to
+            # parse) used to leak the polling thread and its growing
+            # staged copy (r9 advice). Idempotent — stop_tail_stagers
+            # skips events _run_streaming already set.
             stop_tail_stagers(stagers)
 
 
@@ -655,6 +659,14 @@ def _run_streaming(args, res, df, stagers) -> int:
                or _one_line_error(ex))
         print(f"error: {msg}", file=sys.stderr)
         return 1
+    finally:
+        # the tail stagers' polling threads outlive the query
+        # otherwise (one leaked thread + a growing staged copy per
+        # tail query in a long-lived session — r8 review). Scoped to
+        # THIS query's stagers so a concurrent tail query's follower
+        # keeps running (r8 advice).
+        from octosql_spark.sources.files import stop_tail_stagers
+        stop_tail_stagers(stagers)
     if args.output == "stream_native":
         # final watermark metadata line, like the reference's
         # NativeFormat.WriteMeta ("{~<watermark>}",

@@ -670,6 +670,25 @@ def test_inner_join_chain_left_as_written(spark, views, chain):
         spark, sql.replace("SELECT *", "SELECT c_name")).sql
 
 
+@pytest.mark.parametrize("tail", [
+    # a WHERE that ends in a group, before GROUP BY
+    "ON l_orderkey = o_orderkey WHERE l_returnflag IN ('R', 'A') "
+    "GROUP BY o_orderstatus",
+    # ON conditions that end in a call, a parenthesized group, a CASE
+    "ON l_orderkey = coalesce(o_orderkey, 0)",
+    "ON (l_orderkey = o_orderkey) WHERE l_quantity > 1",
+    "ON l_orderkey = CASE WHEN o_orderkey > 0 THEN o_orderkey END",
+])
+def test_inner_join_chain_keeps_groups_whole(spark, views, tail):
+    """A reordered chain carries every ON condition and WHERE whole,
+    a bracket group or CASE … END at its end included."""
+    sql = ("SELECT COUNT(*) AS n FROM customer JOIN orders "
+           f"ON c_custkey = o_custkey JOIN lineitem {tail}")
+    got = run_query(spark, sql)
+    assert "FROM lineitem, customer, orders WHERE" in got.sql
+    assert got.df.collect() == spark.sql(sql).collect()
+
+
 def test_from_inside_a_call_looks_up_no_table(spark, monkeypatch):
     """The FROM of ``EXTRACT(… FROM x)``, ``trim(… FROM x)`` and
     ``IS [NOT] DISTINCT FROM`` starts no table reference, so only the
